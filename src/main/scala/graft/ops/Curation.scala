@@ -160,9 +160,7 @@ object Curation {
     */
   def temperatureWeights(docs: DataFrame, alpha: Double = 0.7,
                          groupCol: String = "lang",
-                         textCol: String = "text",
-                         maxDriverGroups: Long =
-                           TemperatureDriverGroupLimit): DataFrame = {
+                         textCol: String = "text"): DataFrame = {
     val per = docs.groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_docs"),
            sum(size(split(col(textCol), " ")).cast("long")).as("n_tokens"))
@@ -178,25 +176,22 @@ object Curation {
     // Spark pow, HALF_UP at scale 0 then toLong ≡ round(_, 0).cast(long),
     // exact long sums. NULL n_tokens (all-NULL text group) or t ≤ 0 falls
     // back to the distributed form, whose NULL propagation is pinned.
-    val probe =
-      per.limit(math.min(maxDriverGroups, Int.MaxValue - 1L).toInt + 1)
-        .collect()
-    if (probe.length <= maxDriverGroups &&
-        probe.forall(r => !r.isNullAt(2)) &&
-        probe.map(_.getLong(2)).sum > 0L) {
-      def rnd0(x: Double): Long = java.math.BigDecimal.valueOf(x)
-        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+    val tail = DriverTail.collectWithin(per, TemperatureDriverGroupLimit)
+      .filter(rows => rows.forall(r => !r.isNullAt(2)) &&
+                      rows.map(_.getLong(2)).sum > 0L)
+    if (tail.isDefined) {
+      val probe = tail.get
       val t = probe.map(_.getLong(2)).sum
       val weights = probe.map { r =>
         val pRaw = r.getLong(2).toDouble / t.toDouble
-        (r, pRaw, rnd0(math.pow(pRaw, alpha) * 1e6))
+        (r, pRaw, DriverTail.round0(math.pow(pRaw, alpha) * 1e6))
       }
       val sw = weights.map(_._3).sum
       val out: Seq[org.apache.spark.sql.Row] = weights.toSeq.map {
         case (r, pRaw, wMicro) =>
           val sampleProb = wMicro.toDouble / sw.toDouble
           org.apache.spark.sql.Row(r.get(0), r.getLong(1), r.getLong(2),
-            pRaw, wMicro, sampleProb, rnd0(sampleProb * t.toDouble))
+            pRaw, wMicro, sampleProb, DriverTail.round0(sampleProb * t.toDouble))
       }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(groupCol,
@@ -590,9 +585,7 @@ object Curation {
     * a catalog with thousands of sources, cap gram df first (the
     * [[Dedup.ngramJaccardPairs]] `maxShingleDf` discipline).
     */
-  def crossSourceOverlap(docs: DataFrame, n: Int = 8,
-                         maxDriverCells: Long =
-                           CrossSourceDriverCellLimit): DataFrame = {
+  def crossSourceOverlap(docs: DataFrame, n: Int = 8): DataFrame = {
     // ONE corpus chain (round-13 surgery): explode → groupBy(gkey)
     // collect_set(source) → map-side pair/total explode → tiny aggregate.
     // collect_set dedups (source, gram) inside the aggregate, so the old
@@ -629,19 +622,16 @@ object Curation {
     // driver doubles mirroring the column chain (double/long division on
     // exact BIGINTs, HALF_UP at 6). Past the bound: checkpoint the tiny
     // counts once and run the equivalent relational tail.
-    val probe =
-      counts.limit(math.min(maxDriverCells, Int.MaxValue - 1L).toInt + 1)
-        .collect()
-    if (probe.length <= maxDriverCells) {
+    val tail = DriverTail.collectWithin(counts, CrossSourceDriverCellLimit)
+    if (tail.isDefined) {
+      val probe = tail.get
       val totals = probe.filter(_.isNullAt(1))
         .map(r => r.getString(0) -> r.getLong(2)).toMap
-      def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       val out: Seq[org.apache.spark.sql.Row] = probe.filter(!_.isNullAt(1))
         .toSeq.map { r =>
           val a = r.getString(0); val b = r.getString(1); val s = r.getLong(2)
           org.apache.spark.sql.Row(a, b, s,
-            rnd6(s.toDouble / (totals(a) + totals(b) - s).toDouble))
+            DriverTail.round6(s.toDouble / (totals(a) + totals(b) - s).toDouble))
         }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("source_a",
@@ -791,8 +781,7 @@ object Curation {
   val MixtureDriverCellLimit = 100000L
 
   def mixtureDrift(docs: DataFrame, groupColName: String, keyCol: Column,
-                   trainPct: Int = 80, valPct: Int = 10,
-                   maxDriverCells: Long = MixtureDriverCellLimit): DataFrame = {
+                   trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     val cells0 = docs
       .select(assignSplit(keyCol, trainPct, valPct).as("split"),
               col(groupColName).as("grp"))
@@ -807,12 +796,9 @@ object Curation {
            org.apache.spark.sql.types.BooleanType => true
       case _ => false
     }
-    if (maxDriverCells > 0 && grpOk) {
-      val probe = cells0
-        .limit(math.min(maxDriverCells, Int.MaxValue - 1L).toInt + 1)
-        .collect()
-      if (probe.length <= maxDriverCells)
-        return mixtureDriftDriver(docs.sparkSession, probe)
+    if (grpOk) DriverTail.collectWithin(cells0, MixtureDriverCellLimit) match {
+      case Some(probe) => return mixtureDriftDriver(docs.sparkSession, probe)
+      case None =>
     }
     val cells = cells0
       .localCheckpoint() // grid + totals + vocab all read it
@@ -877,10 +863,7 @@ object Curation {
       groups += g
     }
     val v = groups.size.toLong
-    def rnd0(x: Double): Long = java.math.BigDecimal.valueOf(x)
-      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-    def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    import DriverTail.{round0, round6}
     val out: Seq[Row] = totals.get("train") match {
       case None => Seq.empty
       case Some(nTrain) =>
@@ -893,12 +876,12 @@ object Curation {
             val q = (cellMap.getOrElse(("train", g), 0L) + 1L).toDouble /
               (nTrain + v).toDouble
             val m = (p + q) / 2.0
-            kl += rnd0(p * math.log(p / q) * 1e6)
-            js += rnd0((p * math.log(p / m) + q * math.log(q / m)) * 0.5 * 1e6)
-            tvd += rnd0(math.abs(p - q) * 0.5 * 1e6)
+            kl += round0(p * math.log(p / q) * 1e6)
+            js += round0((p * math.log(p / m) + q * math.log(q / m)) * 0.5 * 1e6)
+            tvd += round0(math.abs(p - q) * 0.5 * 1e6)
           }
           Row(s, nS, kl, js, tvd,
-              rnd6(kl / 1e6), rnd6(js / 1e6), rnd6(tvd / 1e6))
+              round6(kl / 1e6), round6(js / 1e6), round6(tvd / 1e6))
         }
     }
     val schema = StructType(Seq(

@@ -371,6 +371,9 @@ object Dedup {
       StructField("canonical_id", dt, nullable = false))))
   }
 
+  /** Pair ceiling for [[dupClusters]]' driver union-find. */
+  val ComponentsDriverPairLimit = 4000000L
+
   /** Near-dup *clusters* from a pair relation (doc_a < doc_b): connected
     * components, then canonical = the component's minimum doc id — the
     * final step of a dedup pipeline (keep one doc per cluster, drop the
@@ -381,12 +384,13 @@ object Dedup {
     * Two paths, chosen by measured graph size — the broadcast-join pattern
     * applied to components. The dup graph (docs that appear in some
     * ≥-threshold pair) is orders of magnitude smaller than the corpus at
-    * any scale, and usually DRIVER-small: below
-    * `spark.graft.components.localThreshold` pairs (default 4M ≈ a
-    * broadcast-sized relation) the pinned pair set is collected and solved
-    * with one union-find pass — exactly as Spark collects a sub-threshold
-    * join side rather than shuffling both sides; the result ships back as a
-    * LocalRelation (itself broadcast-joinable by the survivor anti-join).
+    * any scale, and usually DRIVER-small: at or below
+    * [[ComponentsDriverPairLimit]] pairs (≈ a broadcast-sized relation,
+    * capped by [[DriverTail.MaxRowsKey]]) the pinned pair set is collected
+    * and solved with one union-find pass — exactly as Spark collects a
+    * sub-threshold join side rather than shuffling both sides; the result
+    * ships back as a LocalRelation (itself broadcast-joinable by the
+    * survivor anti-join).
     * Measured at sf0.1 (256-pair graph): the distributed loop costs ~1.2 s
     * of pure per-iteration scheduling for a sub-millisecond union-find.
     * Above the threshold: iterative min-label propagation, converging in
@@ -407,15 +411,6 @@ object Dedup {
     val baseline = persistentIds
     val pinned = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
     val pinnedIds = persistentIds -- baseline
-    // The driver union-find indexes edges with Int arrays, so the local
-    // path cannot hold more than ~Int.MaxValue pairs regardless of the
-    // conf — clamp BEFORE the +1 so a Long.MaxValue-style "always local"
-    // setting cannot overflow into limit(0) and silently report an empty
-    // dup graph (round-7 review finding).
-    val localThreshold = math.min(
-      spark.conf.getOption("spark.graft.components.localThreshold")
-        .map(_.toLong).getOrElse(4000000L),
-      Int.MaxValue.toLong - 2)
     // Size gate and small-graph input in ONE job: a bounded
     // limit(threshold+1) collect over the checkpointed graph. At or below
     // the threshold the probe IS the edge list (the driver union-find's
@@ -427,9 +422,11 @@ object Dedup {
     // driver is sized for it by construction), and negligible against the
     // min-label loop that follows; the steady saving is one job on the
     // sub-threshold path every composed dedup query actually takes.
-    val probe = pinned.limit((localThreshold + 1).toInt).collect()
-    if (probe.length <= localThreshold) {
-      val out = localComponents(spark, probe, pinned.schema)
+    // (DriverTail clamps the budget below Int.MaxValue: the driver
+    // union-find indexes edges with Int arrays)
+    val probe = DriverTail.collectWithin(pinned, ComponentsDriverPairLimit)
+    if (probe.isDefined) {
+      val out = localComponents(spark, probe.get, pinned.schema)
       pinnedIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
       return out
     }

@@ -103,8 +103,7 @@ object Graph {
     *    huge n: drop the base a decade per 10× nodes (ranks are relative).
     */
   def pagerankFixed(edges: DataFrame, iters: Int,
-                    broadcastNodeLimit: Long = BroadcastNodeLimit,
-                    driverEdgeLimit: Long = DriverEdgeLimit): DataFrame = {
+                    broadcastNodeLimit: Long = BroadcastNodeLimit): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = edges.sparkSession
     // the edge-producing chain is scanned ONCE into an in-memory
@@ -118,8 +117,8 @@ object Graph {
     // driver arrays — the per-round broadcast rebuild + collect + plan
     // analysis was ~0.1-0.15 s/round of pure fixed cost at the bench
     // profile; identical Long arithmetic, so hashes are unchanged)
-    val nEdges = eRaw.count()
-    if (nEdges <= driverEdgeLimit) {
+    val driverEdges = DriverTail.budget(spark, DriverEdgeLimit)
+    if (driverEdges > 0 && eRaw.count() <= driverEdges) {
       val nodeType = eRaw.schema("src").dataType
       val edgeRows = eRaw.collect()
       // index nodes once; the rounds are then pure primitive-array loops
@@ -267,9 +266,7 @@ object Graph {
     * type — `<` supplies the canonical orientation tiebreak).
     */
   def triangleStats(baskets: DataFrame, basketCol: String, itemCol: String,
-                    minSupport: Long,
-                    maxDriverEdges: Long = DriverEdgeLimit,
-                    maxDriverWedges: Long = LinkPredDriverWedgeLimit): DataFrame = {
+                    minSupport: Long): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     // Edge build (round 13): per-basket sorted item arrays + map-side i<j
     // pair explode — the graft.BasketAB-measured winner [[linkPrediction]]
@@ -300,15 +297,9 @@ object Graph {
     // aggregates — FloorProbe: ~2.5 s of per-job floor at sf0.1). Same
     // probe, same bounds, same bit-exact integer counts; past either bound
     // the distributed path below runs exactly as before.
-    if (maxDriverEdges > 0 && linkPredDriverOrderable(edgesPre)) {
-      val probe = edgesPre.limit(
-        math.min(maxDriverEdges, Int.MaxValue - 1L).toInt + 1).collect()
-      if (probe.length <= maxDriverEdges) {
-        val local = triangleStatsDriver(baskets.sparkSession, edgesPre,
-                                        probe, maxDriverWedges)
-        if (local.isDefined) return local.get
-      }
-    }
+    val local = edgesOnDriver(edgesPre)
+      .flatMap(triangleStatsDriver(baskets.sparkSession, edgesPre, _))
+    if (local.isDefined) return local.get
     val edges = edgesPre.localCheckpoint()
     val deg = edges.select(col("u").as("x")).unionAll(edges.select(col("v").as("x")))
       .groupBy("x").agg(count(lit(1)).as("d"))
@@ -392,10 +383,7 @@ object Graph {
     */
   def linkPrediction(baskets: DataFrame, basketCol: String, itemCol: String,
                      minSupport: Long, k: Int,
-                     wedgeDegreeCap: Int = WedgeDegreeCap,
-                     maxDriverEdges: Long = DriverEdgeLimit,
-                     maxDriverWedges: Long = LinkPredDriverWedgeLimit)
-      : DataFrame = {
+                     wedgeDegreeCap: Int = WedgeDegreeCap): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     require(wedgeDegreeCap >= 2, s"wedgeDegreeCap must be >= 2, got $wedgeDegreeCap")
     // collect_set dedups IN the basket aggregate — a separate distinct()
@@ -425,15 +413,9 @@ object Graph {
     // bytes, mirrored below); anything else falls through. On fallback
     // the distributed path re-derives edgesPre — acceptable because the
     // fallback IS the giant-graph case where the probe cost is noise.
-    if (maxDriverEdges > 0 && linkPredDriverOrderable(edgesPre)) {
-      val probe = edgesPre.limit(
-        math.min(maxDriverEdges, Int.MaxValue - 1L).toInt + 1).collect()
-      if (probe.length <= maxDriverEdges) {
-        val local = linkPredictionDriver(baskets.sparkSession, edgesPre,
-                                         probe, k, maxDriverWedges)
-        if (local.isDefined) return local.get
-      }
-    }
+    val local = edgesOnDriver(edgesPre)
+      .flatMap(linkPredictionDriver(baskets.sparkSession, edgesPre, _, k))
+    if (local.isDefined) return local.get
     // edgesPre rows are unique (u, v) pairs, so collect_list needs no
     // dedup; sort_array makes the neighbor order deterministic and gives
     // the i<j pair explode its total order for free. Symmetrization is a
@@ -488,6 +470,14 @@ object Graph {
       case _ => false
     }
 
+  /** The pruned edge relation collected for a driver-complete tail: only
+    * for driver-orderable item types and within the [[DriverEdgeLimit]]
+    * budget, else None (the distributed tail runs).
+    */
+  private def edgesOnDriver(edgesPre: DataFrame): Option[Array[Row]] =
+    if (!linkPredDriverOrderable(edgesPre)) None
+    else DriverTail.collectWithin(edgesPre, DriverEdgeLimit)
+
   /** Map-side i<j pair explode over a SORTED array: every unordered element
     * pair once, with u < v under the array's sort order. Shared by
     * [[linkPrediction]] (basket pairs, wedge pairs) and [[triangleStats]]
@@ -510,8 +500,7 @@ object Graph {
     * wedge bound — the caller falls through to the distributed path.
     */
   private def triangleStatsDriver(spark: SparkSession, edgesPre: DataFrame,
-                                  edges: Array[Row],
-                                  maxWedges: Long): Option[DataFrame] = {
+                                  edges: Array[Row]): Option[DataFrame] = {
     val uType = edgesPre.schema.head.dataType
     val isString = uType == StringType
     def numL(a: Any): Long = a match {
@@ -542,7 +531,8 @@ object Graph {
     val nWedges: Option[Long] =
       if (deg.isEmpty) None // sum() over an empty relation is NULL
       else Some(deg.valuesIterator.map(d => d * (d - 1L) / 2L).sum)
-    if (nWedges.exists(_ > maxWedges)) return None
+    if (nWedges.exists(_ > DriverTail.budget(spark, LinkPredDriverWedgeLimit)))
+      return None
     // orient each edge from its (degree, id)-smaller endpoint; out-lists
     // and an oriented-edge set drive the wedge closure. A wedge (a, b) at
     // center s can only close through the oriented edge between a and b,
@@ -575,8 +565,7 @@ object Graph {
     }
     val clustering: Any = nWedges match {
       case Some(w) if w > 0L =>
-        java.math.BigDecimal.valueOf(3.0 * tri.toDouble / w.toDouble)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        DriverTail.round6(3.0 * tri.toDouble / w.toDouble)
       case _ => null // W NULL (no nodes) or nullif(W, 0)
     }
     val schema = StructType(Seq(
@@ -602,8 +591,7 @@ object Graph {
     * through to the distributed path.
     */
   private def linkPredictionDriver(spark: SparkSession, edgesPre: DataFrame,
-                                   edges: Array[Row], k: Int,
-                                   maxWedges: Long): Option[DataFrame] = {
+                                   edges: Array[Row], k: Int): Option[DataFrame] = {
     val uType = edgesPre.schema.head.dataType
     val isString = uType == StringType
     def numL(a: Any): Long = a match {
@@ -635,7 +623,7 @@ object Graph {
     }
     val nWedges = nbrs.valuesIterator
       .map(b => b.length.toLong * (b.length - 1L) / 2L).sum
-    if (nWedges > maxWedges) return None
+    if (nWedges > DriverTail.budget(spark, LinkPredDriverWedgeLimit)) return None
     val common = new scala.collection.mutable.HashMap[(Any, Any), Long]()
     nbrs.valuesIterator.foreach { ns =>
       val arr = ns.toArray.sortWith((a, b) => cmp(a, b) < 0)
@@ -655,9 +643,7 @@ object Graph {
       .map { case ((u, v), cm) =>
         val du = nbrs(u).length.toLong
         val dv = nbrs(v).length.toLong
-        val jac = java.math.BigDecimal
-          .valueOf(cm.toDouble / (du + dv - cm).toDouble)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+        val jac = DriverTail.round6(cm.toDouble / (du + dv - cm).toDouble)
         (u, v, cm, du, dv, jac)
       }.toArray
     val ord = new Ordering[(Any, Any, Long, Long, Long, Double)] {

@@ -400,29 +400,16 @@ object Similarity {
   /** Corpus-trained per-dimension [min, max] ladder over the micro-unit
     * components — dim-bounded driver collect (the centroid precedent).
     */
-  private def sq8Ladder(corpus: DataFrame): Array[(Long, Long)] = {
-    // memo by canonicalized corpus plan (the centroidMemo contract): the
-    // two sq8 rows share one trained ladder instead of re-scanning
-    val key = corpus.queryExecution.analyzed.canonicalized.toString
-    val hit = sq8LadderMemo.synchronized { Option(sq8LadderMemo.get(key)) }
-    hit.getOrElse {
+  private def sq8Ladder(corpus: DataFrame): Array[(Long, Long)] =
+    // the two sq8 rows share one trained ladder instead of re-scanning
+    TrainedArtifactCache.getOrTrain("sq8-ladder", corpus) {
       val stats = corpus
         .withColumn("__nrm", sq8Norm(col("embedding")))
         .select(posexplode(sq8MicroCol(col("embedding"), col("__nrm")))
           .as(Seq("d", "v")))
         .groupBy(col("d")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
         .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val ladder = (0 until stats.size).map(stats).toArray
-      sq8LadderMemo.synchronized { sq8LadderMemo.put(key, ladder) }
-      ladder
-    }
-  }
-
-  private val sq8LadderMemo =
-    new java.util.LinkedHashMap[String, Array[(Long, Long)]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Array[(Long, Long)]]): Boolean =
-        size() > 16
+      (0 until stats.size).map(stats).toArray
     }
 
   /** 8-bit code + decode (×255) per dimension, all BIGINT: clamp into the
@@ -698,100 +685,15 @@ object Similarity {
       .select(col("cluster_id"), col("centroid").cast("array<float>").as("centroid"))
   }
 
-  /** [[kmeansCentroids]]' engine, kept driver-side end to end: the centroid
-    * relation is driver-small BY CONSTRUCTION (it is what every consumer —
-    * [[argmaxAssign]]'s literal projection, the broadcast fallback — collects
-    * anyway), so representing it as a local array between rounds removes a
-    * job per round versus round-tripping it through a DataFrame: the old
-    * init path paid a TakeOrdered scan PLUS a single-partition window
-    * exchange just to attach row numbers, and the returned plan needed a
-    * localCheckpoint barrier for multi-consumer callers. Now: init is ONE
-    * TakeOrdered collect (k rows), each Lloyd round is ONE agg job, and the
-    * result is a LocalRelation — multi-consumer safe with zero jobs to
-    * re-read (measured: ivf_assign 1.10 → ~0.75 s at sf0.1). The corpus side
-    * of every job stays fully distributed (scan-shaped literal-projection
-    * assignment + partial-agg mean), so nothing here grows with corpus size.
+  /** Drop every trained artifact (centroids, PQ codebooks, SQ8 ladders).
+    * [[TrainedArtifactCache]] keys them on the corpus plan, the data
+    * identity of its leaves (file listings, local rows, checkpoint ids) and
+    * the config, so a different path, filter or rewritten-and-re-read file
+    * set is already a miss. Its one limitation: a relation held across a
+    * rewrite of its files (e.g. the one `graft.Tables` caches per
+    * (session, dir)) keeps its first listing, and so its key.
     */
-  /** Bounded driver-side memo of k-means centroid builds, keyed by the
-    * corpus' CANONICALIZED logical plan + (k, iters, dim). An ANN index
-    * build is amortized across queries in any serving system — the
-    * ivf_assign / ivf_ann_topk / ivf_recall surfaces share one corpus and
-    * one config, so retraining per call paid the seed-collect + Lloyd job
-    * chain three times for bit-identical output (the arithmetic is
-    * deterministic fixed-point: same input ⇒ same centroids, so
-    * memoization cannot change any result). Canonicalized-plan keys make
-    * a different path / filter / replica a guaranteed miss; callers that
-    * mutate files UNDER an unchanged path within one JVM must
-    * [[clearCentroidMemo]] (the same invalidation contract as Spark's own
-    * relation cache). ≤16 entries × ≤k·dim floats — driver-trivial.
-    */
-  private val centroidMemo =
-    new java.util.LinkedHashMap[(String, Int, Int, Int), Array[(Long, Array[Float])]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int, Int, Int), Array[(Long, Array[Float])]])
-          : Boolean = size() > 16
-    }
-
-  private def centroidMemoKey(corpus: DataFrame, k: Int, iters: Int,
-                              dim: Int): (String, Int, Int, Int) =
-    (corpus.queryExecution.analyzed.canonicalized.toString, k, iters, dim)
-
-  /** Bounded driver-side memo of trained PQ codebooks — the
-    * [[centroidMemo]] contract applied to the OTHER trained quantizer
-    * artifact (round-13 verdict item 3: the pq_codes / pq_ann_topk /
-    * pq_recall / ivfpq_* surfaces share one corpus and one (m, k, iters)
-    * config, and each retraining is a seed collect plus a full-corpus
-    * Lloyd job for bit-identical books — the fixed-point update is
-    * deterministic: same input ⇒ same books, so memoization cannot change
-    * any result). Same canonicalized-plan key discipline, same
-    * invalidation contract ([[clearSimilarityMemos]]), ≤16 entries ×
-    * m·k·subDim floats — driver-trivial.
-    */
-  private val pqBooksMemo =
-    new java.util.LinkedHashMap[(String, Int, Int, Int, Int),
-                                Array[Array[(Long, Array[Float])]]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Int, Int, Int, Int),
-                                 Array[Array[(Long, Array[Float])]]])
-          : Boolean = size() > 16
-    }
-
-  private def pqBooksMemoKey(corpus: DataFrame, m: Int, codesPerBook: Int,
-                             iters: Int, dim: Int)
-      : (String, Int, Int, Int, Int) =
-    (corpus.queryExecution.analyzed.canonicalized.toString, m, codesPerBook,
-     iters, dim)
-
-  private def pqBooksMemoGet(key: (String, Int, Int, Int, Int))
-      : Option[Array[Array[(Long, Array[Float])]]] =
-    pqBooksMemo.synchronized { Option(pqBooksMemo.get(key)) }
-
-  private def pqBooksMemoPut(key: (String, Int, Int, Int, Int),
-                             books: Array[Array[(Long, Array[Float])]]): Unit =
-    pqBooksMemo.synchronized { pqBooksMemo.put(key, books) }
-
-  /** Drop EVERY memoized trained artifact — centroid builds AND SQ8
-    * ladders. Both memos key on the canonicalized corpus plan, so files
-    * rewritten UNDER AN UNCHANGED PATH within one JVM would otherwise
-    * keep serving the stale artifact (the same invalidation contract as
-    * Spark's own relation cache, which `REFRESH TABLE` clears). Any
-    * harness or pipeline step that regenerates table files in-JVM must
-    * call this before the next ANN query.
-    */
-  def clearSimilarityMemos(): Unit = {
-    centroidMemo.synchronized { centroidMemo.clear() }
-    sq8LadderMemo.synchronized { sq8LadderMemo.clear() }
-    pqBooksMemo.synchronized { pqBooksMemo.clear() }
-  }
-
-  /** Drop every memoized trained artifact (alias of
-    * [[clearSimilarityMemos]] — historically centroid-only, but a data
-    * refresh that invalidates centroids invalidates SQ8 ladders too, so
-    * clearing one and not the other was a staleness trap).
-    */
-  def clearCentroidMemo(): Unit = clearSimilarityMemos()
+  def clearSimilarityMemos(): Unit = TrainedArtifactCache.clear()
 
   // ── ANN index lifecycle ────────────────────────────────────────────
   // A serving pipeline trains an index once and loads it per job; the
@@ -981,8 +883,7 @@ object Similarity {
       s"pqTopKWithIndex: ragged codebooks — every centroid must have the " +
       s"same lane count (first book's first centroid has $subDim lanes)")
     val dim = subDim * books.length
-    val qRows = queries.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    val qRows = collectQueries(queries)
     qRows.find(_._2.length != dim).foreach { case (id, v) =>
       throw new IllegalArgumentException(
         s"pqTopKWithIndex: query $id has dimension ${v.length}, the loaded " +
@@ -1010,26 +911,45 @@ object Similarity {
             v.iterator.map(f => java.lang.Float.floatToRawIntBits(f).toLong)
       }))
 
+  /** [[kmeansCentroids]]' engine, kept driver-side end to end: the centroid
+    * relation is driver-small BY CONSTRUCTION (it is what every consumer —
+    * [[argmaxAssign]]'s literal projection, the broadcast fallback — collects
+    * anyway), so representing it as a local array between rounds removes a
+    * job per round versus round-tripping it through a DataFrame: the old
+    * init path paid a TakeOrdered scan PLUS a single-partition window
+    * exchange just to attach row numbers, and the returned plan needed a
+    * localCheckpoint barrier for multi-consumer callers. Now: init is ONE
+    * TakeOrdered collect (k rows), each Lloyd round is ONE agg job, and the
+    * result is a LocalRelation — multi-consumer safe with zero jobs to
+    * re-read (measured: ivf_assign 1.10 → ~0.75 s at sf0.1). The corpus side
+    * of every job stays fully distributed (scan-shaped literal-projection
+    * assignment + partial-agg mean), so nothing here grows with corpus size.
+    */
   private def kmeansCentroidsLocal(corpus: DataFrame, k: Int, iters: Int,
-                                   dim: Int): Array[(Long, Array[Float])] = {
-    val key = centroidMemoKey(corpus, k, iters, dim)
-    val hit = centroidMemo.synchronized { Option(centroidMemo.get(key)) }
-    hit.getOrElse {
-      val cents = kmeansCentroidsUncached(corpus, k, iters, dim)
-      centroidMemo.synchronized { centroidMemo.put(key, cents) }
-      cents
-    }
-  }
-
-  private def kmeansCentroidsUncached(corpus: DataFrame, k: Int, iters: Int,
-                                      dim: Int): Array[(Long, Array[Float])] =
-    lloydRounds(corpus, seedFromRows(
+                                   dim: Int): Array[(Long, Array[Float])] =
+    trainedCentroids(corpus, k, iters, dim)(lloydRounds(corpus, seedFromRows(
       // k lowest vec_ids seed the clusters, cluster_id = rank in vec_id
       // order (same semantics as the former row_number window, without its
       // exchange)
       corpus.select(col("vec_id"), col("embedding"))
         .orderBy(col("vec_id")).limit(k).collect(), idOrd = 0, embOrd = 1),
-      iters, dim)
+      iters, dim))
+
+  private def trainedCentroids(corpus: DataFrame, k: Int, iters: Int, dim: Int)(
+      train: => Array[(Long, Array[Float])]): Array[(Long, Array[Float])] =
+    TrainedArtifactCache.getOrTrain("centroids", corpus, k, iters, dim)(train)
+
+  private def trainedPqBooks(corpus: DataFrame, m: Int, codesPerBook: Int,
+                             iters: Int, dim: Int)(
+      train: => Array[Array[(Long, Array[Float])]])
+      : Array[Array[(Long, Array[Float])]] =
+    TrainedArtifactCache.getOrTrain("pq-books", corpus, m, codesPerBook, iters,
+                                    dim)(train)
+
+  /** The query batch as (vec_id, embedding) pairs in vec_id order. */
+  private def collectQueries(queries: DataFrame): Array[(Long, Array[Float])] =
+    queries.select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
 
   /** Seed rows (vec_id, embedding) → (cluster_id = rank in vec_id order,
     * centroid) — the shared k-means init semantics for every collect shape.
@@ -1085,57 +1005,45 @@ object Similarity {
   private def queriesAndCentroids(queries: DataFrame, corpus: DataFrame,
                                   nCentroids: Int, iters: Int, dim: Int)
       : (Array[(Long, Array[Float])], Array[(Long, Array[Float])]) = {
-    // memo hit ⇒ the seed union is dead weight: collect the query batch
-    // alone and reuse the centroids (see [[centroidMemo]] — bit-identical
-    // by fixed-point determinism, so this cannot change any result)
-    val key = centroidMemoKey(corpus, nCentroids, iters, dim)
-    val hit = centroidMemo.synchronized { Option(centroidMemo.get(key)) }
-    hit match {
-      case Some(cents) =>
-        val qRows = queries.select(col("vec_id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-        (qRows, cents)
-      case None =>
-        val (qRows, seed) = collectQueriesAndSeed(queries, corpus, nCentroids)
-        val init = seed.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-        val cents = lloydRounds(corpus, init, iters, dim)
-        centroidMemo.synchronized { centroidMemo.put(key, cents) }
-        (qRows, cents)
+    // cache hit ⇒ the seed union is dead weight: collect the query batch
+    // alone and reuse the centroids (bit-identical by fixed-point
+    // determinism, so this cannot change any result)
+    var qRows: Array[(Long, Array[Float])] = null
+    val cents = trainedCentroids(corpus, nCentroids, iters, dim) {
+      val (q, seed) = collectQueriesAndSeed(queries, corpus, nCentroids)
+      qRows = q
+      lloydRounds(corpus, seed.zipWithIndex.map { case (v, i) => (i.toLong, v) },
+                  iters, dim)
     }
+    (Option(qRows).getOrElse(collectQueries(queries)), cents)
   }
 
   /** Fused query collect + PQ book training ([[queriesAndCentroids]]' shape
-    * for the PQ surface): on a [[pqBooksMemo]] hit the seed union is dead
-    * weight, so only the query batch collects and the memoized books are
-    * reused (bit-identical by fixed-point determinism); on a miss the one
-    * fused collect feeds both and the trained books are memoized.
+    * for the PQ surface): on a cache hit the seed union is dead weight, so
+    * only the query batch collects and the cached books are reused
+    * (bit-identical by fixed-point determinism); on a miss the one fused
+    * collect feeds both and the trained books are cached.
     */
   private def queriesAndPqBooks(queries: DataFrame, corpus: DataFrame,
                                 m: Int, codesPerBook: Int, iters: Int,
                                 subDim: Int, dim: Int)
       : (Array[(Long, Array[Float])], Array[Array[(Long, Array[Float])]]) = {
-    val key = pqBooksMemoKey(corpus, m, codesPerBook, iters, dim)
-    pqBooksMemoGet(key) match {
-      case Some(books) =>
-        val qRows = queries.select(col("vec_id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-        (qRows, books)
-      case None =>
-        val (qRows, seed) = collectQueriesAndSeed(queries, corpus, codesPerBook)
-        val books = pqLloydRounds(corpus, pqInit(seed, m, subDim), m, subDim, iters)
-        pqBooksMemoPut(key, books)
-        (qRows, books)
+    var qRows: Array[(Long, Array[Float])] = null
+    val books = trainedPqBooks(corpus, m, codesPerBook, iters, dim) {
+      val (q, seed) = collectQueriesAndSeed(queries, corpus, codesPerBook)
+      qRows = q
+      pqLloydRounds(corpus, pqInit(seed, m, subDim), m, subDim, iters)
     }
+    (Option(qRows).getOrElse(collectQueries(queries)), books)
   }
 
   /** Fused query collect + IVFPQ double training for [[ivfpqTopK]] /
-    * [[ivfpqRecall]]: when BOTH quantizers are memoized (coarse centroids
-    * in [[centroidMemo]], books in [[pqBooksMemo]]) only the query batch
-    * collects and training is skipped outright; on any miss the one fused
-    * collect seeds both quantizers, [[fusedCoarsePqRounds]] trains them in
-    * one job per round, and both artifacts are memoized. Sharing across
-    * the fused and sequential trainers is sound because the fused round's
-    * arithmetic is IDENTICAL per group to [[lloydRounds]] +
+    * [[ivfpqRecall]]: when BOTH quantizers are cached only the query batch
+    * collects and training is skipped outright; on a centroid miss the one
+    * fused collect seeds both quantizers and [[fusedCoarsePqRounds]] trains
+    * them in one job per round (a books-only miss trains the books alone).
+    * Sharing across the fused and sequential trainers is sound because the
+    * fused round's arithmetic is IDENTICAL per group to [[lloydRounds]] +
     * [[pqLloydRounds]] (same micro-rounded BIGINT lane sums over the same
     * groups — see [[fusedCoarsePqRounds]]; SimilaritySpec pins the
     * cross-path bit-identity end to end).
@@ -1145,25 +1053,26 @@ object Similarity {
                               iters: Int, subDim: Int, dim: Int)
       : (Array[(Long, Array[Float])], Array[(Long, Array[Float])],
          Array[Array[(Long, Array[Float])]]) = {
-    val cKey = centroidMemoKey(corpus, nCentroids, iters, dim)
-    val bKey = pqBooksMemoKey(corpus, m, codesPerBook, iters, dim)
-    val cHit = centroidMemo.synchronized { Option(centroidMemo.get(cKey)) }
-    val bHit = pqBooksMemoGet(bKey)
-    (cHit, bHit) match {
-      case (Some(cents), Some(books)) =>
-        val qRows = queries.select(col("vec_id"), col("embedding")).collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-        (qRows, cents, books)
-      case _ =>
-        val (qRows, seed) =
-          collectQueriesAndSeed(queries, corpus, math.max(nCentroids, codesPerBook))
-        val (cents, books) = fusedCoarsePqRounds(corpus,
-          seed.take(nCentroids).zipWithIndex.map { case (v, i) => (i.toLong, v) },
-          pqInit(seed.take(codesPerBook), m, subDim), m, subDim, dim, iters)
-        centroidMemo.synchronized { centroidMemo.put(cKey, cents) }
-        pqBooksMemoPut(bKey, books)
-        (qRows, cents, books)
+    var fused: Option[Array[Array[(Long, Array[Float])]]] = None
+    var qRows: Array[(Long, Array[Float])] = null
+    val cents = trainedCentroids(corpus, nCentroids, iters, dim) {
+      val (q, seed) =
+        collectQueriesAndSeed(queries, corpus, math.max(nCentroids, codesPerBook))
+      qRows = q
+      val (c, b) = fusedCoarsePqRounds(corpus,
+        seed.take(nCentroids).zipWithIndex.map { case (v, i) => (i.toLong, v) },
+        pqInit(seed.take(codesPerBook), m, subDim), m, subDim, dim, iters)
+      fused = Some(b)
+      c
     }
+    val books = trainedPqBooks(corpus, m, codesPerBook, iters, dim) {
+      fused.getOrElse {
+        val (q, seed) = collectQueriesAndSeed(queries, corpus, codesPerBook)
+        qRows = q
+        pqLloydRounds(corpus, pqInit(seed, m, subDim), m, subDim, iters)
+      }
+    }
+    (Option(qRows).getOrElse(collectQueries(queries)), cents, books)
   }
 
   /** Nearest-centroid assignment as a pure map-side PROJECTION: the
@@ -1330,8 +1239,7 @@ object Similarity {
   def ivfTopKWithIndex(queries: DataFrame, corpus: DataFrame, k: Int,
                        nProbe: Int,
                        cents: Array[(Long, Array[Float])]): DataFrame = {
-    val qRows = queries.select(col("vec_id"), col("embedding")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
+    val qRows = collectQueries(queries)
     // queries must match the loaded index's dimension — a shorter vector
     // would silently probe/score on truncated cosines, a longer one AIOOBE
     val dim = cents.head._2.length
@@ -1534,15 +1442,12 @@ object Similarity {
                   dim: Int = 64): Array[Array[(Long, Array[Float])]] = {
     val subDim = dim / m
     require(m * subDim == dim, s"dim $dim not divisible by m $m")
-    val key = pqBooksMemoKey(corpus, m, k, iters, dim)
-    pqBooksMemoGet(key).getOrElse {
+    trainedPqBooks(corpus, m, k, iters, dim) {
       val seed: Array[Array[Float]] =
         corpus.select(col("vec_id"), col("embedding"))
           .orderBy(col("vec_id")).limit(k).collect()
           .sortBy(_.getLong(0)).map(_.getSeq[Float](1).toArray)
-      val books = pqLloydRounds(corpus, pqInit(seed, m, subDim), m, subDim, iters)
-      pqBooksMemoPut(key, books)
-      books
+      pqLloydRounds(corpus, pqInit(seed, m, subDim), m, subDim, iters)
     }
   }
 
@@ -1908,6 +1813,9 @@ object Similarity {
     */
   val KnnAuditBudget: Int = 1000
 
+  /** Edge ceiling for [[knnGraphStats]]' driver-complete report tail. */
+  val KnnDriverEdgeLimit = 4000000L
+
   def knnGraphStats(embeddings: DataFrame, k: Int): DataFrame = {
     // materialize the node set once — it feeds both the broadcast build and
     // the probe scan (an un-checkpointed sample would re-run its upstream
@@ -1965,14 +1873,10 @@ object Similarity {
     // SimilaritySpec pins driver ≡ distributed bit-identity). Past it: the
     // distributed tail over the same checkpoint, the probe's bounded
     // collect being the usual guard cost.
-    val edgeLimit = math.min(
-      spark.conf.getOption("spark.graft.knn.driverEdgeLimit")
-        .map(_.toLong).getOrElse(4000000L), Int.MaxValue.toLong - 2)
-    if (edgeLimit <= 0) return distTail(edges)
-    val probe = edges.limit(edgeLimit.toInt + 1).collect()
-    if (probe.length > edgeLimit) return distTail(edges)
-    def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val probe = DriverTail.collectWithin(edges, KnnDriverEdgeLimit) match {
+      case Some(rows) => rows
+      case None => return distTail(edges)
+    }
     val nEdges = probe.length.toLong
     val nNodes = probe.iterator.filter(!_.isNullAt(0))
       .map(_.getLong(0)).toSet.size.toLong
@@ -2006,7 +1910,7 @@ object Similarity {
     val s1 = sumU(rank1.iterator)
     val n1 = rank1.length.toLong
     def meanOf(s: Option[Long], denom: Long): Any = s match {
-      case Some(v) => rnd6(v.toDouble / (denom.toDouble * 1e6)): java.lang.Double
+      case Some(v) => DriverTail.round6(v.toDouble / (denom.toDouble * 1e6)): java.lang.Double
       case None => null
     }
     spark.createDataFrame(

@@ -670,6 +670,9 @@ object Stats {
                 .as("fp_rate"))
   }
 
+  /** Cell ceiling for [[histogramQuantiles]]' driver-complete tail. */
+  val HistqDriverCellLimit = 100000L
+
   /** Mergeable fixed-bin histogram quantile estimates per group — the
     * quantile path that actually works at 100 TB. Exact quantiles need
     * either a full sort or per-group value buffers (Spark's `percentile`
@@ -753,26 +756,21 @@ object Stats {
     // bound: the distributed tail, which the probe's discarded pass is the
     // documented guard cost for. The driver path requires the documented
     // BIGINT cents contract; any other `centsCol` type falls back.
-    val cellLimit = math.min(
-      spark.conf.getOption("spark.graft.histq.driverCellLimit")
-        .map(_.toLong).getOrElse(100000L), Int.MaxValue.toLong - 2)
     val nG = groupCols.length
-    if (cellLimit <= 0 ||
-        bounds.schema(nG).dataType != org.apache.spark.sql.types.LongType)
-      return distTail(cntsOf(bounds), bounds)
-    val boundsProbe = bounds.limit(cellLimit.toInt + 1).collect()
-    if (boundsProbe.length > cellLimit)
-      return distTail(cntsOf(bounds), bounds)
+    val boundsProbe =
+      if (bounds.schema(nG).dataType != org.apache.spark.sql.types.LongType) None
+      else DriverTail.collectWithin(bounds, HistqDriverCellLimit)
+    if (boundsProbe.isEmpty) return distTail(cntsOf(bounds), bounds)
     import scala.jdk.CollectionConverters._
     val boundsLocal = spark.createDataFrame(
-      java.util.Arrays.asList(boundsProbe: _*), bounds.schema)
+      java.util.Arrays.asList(boundsProbe.get: _*), bounds.schema)
     val cnts = cntsOf(boundsLocal)
-    val gridProbe = cnts.limit(cellLimit.toInt + 1).collect()
-    if (gridProbe.length > cellLimit) return distTail(cnts, boundsLocal)
-    def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val gridProbe = DriverTail.collectWithin(cnts, HistqDriverCellLimit) match {
+      case Some(rows) => rows
+      case None => return distTail(cnts, boundsLocal)
+    }
     def keyOf(r: org.apache.spark.sql.Row): Seq[Any] = (0 until nG).map(r.get)
-    val boundsMap = boundsProbe.iterator
+    val boundsMap = boundsProbe.get.iterator
       .map(r => keyOf(r) -> ((r.getLong(nG), r.getLong(nG + 1), r.getLong(nG + 2))))
       .toMap
     val binsD = bins.toDouble
@@ -785,7 +783,7 @@ object Stats {
           .map { case (bin, cnt) => cum += cnt; (bin, cnt, cum) }
         val ests: Seq[Any] = qs.map { q =>
           cells.find { case (_, _, c) => c.toDouble >= q * n.toDouble } match {
-            case Some((bin, cnt, cumv)) => rnd6(
+            case Some((bin, cnt, cumv)) => DriverTail.round6(
               (lo.toDouble + (hi - lo + 1L).toDouble / binsD *
                 (bin.toDouble + (q * n.toDouble - (cumv - cnt).toDouble) /
                   cnt.toDouble)) / 100.0): java.lang.Double
@@ -1694,6 +1692,9 @@ object Stats {
       .orderBy(col("bin"))
   }
 
+  /** Duration-grid ceiling for [[kaplanMeierRetention]]'s driver-complete tail. */
+  val KmDriverCellLimit = 1000000L
+
   /** Kaplan–Meier product-limit survival over right-censored inter-order
     * durations at DAY grain (Kaplan & Meier 1958) — the step curve
     * "probability a customer has not yet reordered by day t" that
@@ -1787,19 +1788,14 @@ object Stats {
     // + hazard + survival prefix product fold in driver doubles with the
     // identical IEEE op order (the HOF's ascending left fold IS a running
     // product; one HALF_UP round at 6 per row) — StatsSpec pins
-    // driver ≡ distributed bit-identity through the conf kill-switch.
-    val cellLimit = math.min(
-      spark.conf.getOption("spark.graft.km.driverCellLimit")
-        .map(_.toLong).getOrElse(1000000L), Int.MaxValue.toLong - 2)
-    if (cellLimit <= 0) return distTail(durGrid)
-    val probe = durGrid.limit(cellLimit.toInt + 1).collect()
+    // driver ≡ distributed bit-identity through [[DriverTail.MaxRowsKey]].
     // a NULL duration (null order dates upstream) carries SQL three-valued
     // comparison semantics through the window/fold — leave that exact
     // shape to the relational tail rather than replicate it
-    if (probe.length > cellLimit || probe.exists(_.anyNull))
-      return distTail(durGrid)
-    def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val probe = DriverTail.collectWithin(durGrid, KmDriverCellLimit) match {
+      case Some(rows) if !rows.exists(_.anyNull) => rows
+      case _ => return distTail(durGrid)
+    }
     // at-risk counts accumulate in DESCENDING dur order; the curve then
     // emits in ascending order with a running survival product over the
     // d>0 rows only (exactly the rows the fold's dur<=e.dur filter kept)
@@ -1815,7 +1811,7 @@ object Stats {
       .map { case (dur, d, c, n) =>
         p *= (1.0 - d.toDouble / n.toDouble)
         org.apache.spark.sql.Row(dur, n, d, c,
-          rnd6(d.toDouble / n.toDouble), rnd6(p))
+          DriverTail.round6(d.toDouble / n.toDouble), DriverTail.round6(p))
       }
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(outRows.asJava, distTail(durGrid).schema)
@@ -1987,8 +1983,7 @@ object Stats {
     * bounds broadcast back), window totals over the grid, 1-row report.
     */
   def psiDrift(df: DataFrame, cents: Column, inA: Column, inB: Column,
-               bins: Int = 10,
-               maxDriverBins: Long = PsiDriverBinLimit): DataFrame = {
+               bins: Int = 10): DataFrame = {
     require(bins >= 2, s"bins must be >= 2: $bins")
     val base = df.filter(inA || inB)
       .select(cents.as("c"), when(inA, 1L).otherwise(0L).as("a"),
@@ -2009,13 +2004,9 @@ object Stats {
     // HALF_UP at 6 on psi). Empty grid (no rows in either slice) falls
     // back — the keyless aggregate's all-NULL single row is its own
     // contract, pinned by StatsSpec.
-    if (bins <= maxDriverBins) {
+    if (bins <= DriverTail.budget(df.sparkSession, PsiDriverBinLimit)) {
       val rows = grid.collect()
       if (rows.nonEmpty) {
-        def rnd0(x: Double): Long = java.math.BigDecimal.valueOf(x)
-          .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
-        def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
         val na = rows.map(_.getLong(1)).sum
         val nb = rows.map(_.getLong(2)).sum
         var used = 0L; var skipped = 0L; var psiMicro = 0L
@@ -2024,7 +2015,7 @@ object Stats {
           if (ca > 0L && cb > 0L) {
             val pa = ca.toDouble / na.toDouble
             val pb = cb.toDouble / nb.toDouble
-            psiMicro += rnd0((pa - pb) * math.log(pa / pb) * 1e6)
+            psiMicro += DriverTail.round0((pa - pb) * math.log(pa / pb) * 1e6)
             used += 1L
           } else skipped += 1L
         }
@@ -2044,7 +2035,7 @@ object Stats {
         import scala.jdk.CollectionConverters._
         return df.sparkSession.createDataFrame(
           List(org.apache.spark.sql.Row(na, nb, used, skipped, psiMicro,
-            rnd6(psiMicro / 1e6))).asJava, schema)
+            DriverTail.round6(psiMicro / 1e6))).asJava, schema)
       }
     }
     val wAll = Window.partitionBy()

@@ -667,15 +667,13 @@ object TextAnalysis {
         .select(col("doc_id"),
                 size(split(col("text"), " ")).cast("long").as("nt"))
         .agg(seenCols.head, seenCols.tail: _*).head()
-      def rnd6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       val out = th.zipWithIndex.collect {
         case ((d, t), i) if !seenRow.isNullAt(2 * i + 1) &&
             seenRow.getLong(2 * i + 1) > 0L =>
           val nTok = seenRow.getLong(2 * i)
           val v = vocRow.getLong(i)
           org.apache.spark.sql.Row(d, t, nTok, v,
-            rnd6(v.toDouble / nTok.toDouble))
+            DriverTail.round6(v.toDouble / nTok.toDouble))
       }
       return local(out)
     }

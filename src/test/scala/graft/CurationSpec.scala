@@ -409,8 +409,8 @@ class CurationSpec extends AnyFunSuite {
 
   test("crossSourceOverlap: driver report tail is bit-identical to the " +
        "relational tail") {
-    // maxDriverCells = 0 forces the checkpoint + broadcast-joins tail; the
-    // default takes the driver fast path — same rows, same doubles
+    // a zero driver-tail budget forces the checkpoint + broadcast-joins
+    // tail; the default takes the driver fast path — same rows, same doubles
     val docs = Seq(
       (1L, "a b c d e", "A"),
       (2L, "a b c x y", "B"),
@@ -421,14 +421,16 @@ class CurationSpec extends AnyFunSuite {
     def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getString(1))
     val driver = Curation.crossSourceOverlap(docs, 3)
       .collect().sortBy(key).toSeq
-    val dist = Curation.crossSourceOverlap(docs, 3, maxDriverCells = 0)
-      .collect().sortBy(key).toSeq
+    val dist = TestSpark.withDriverTail(0) {
+      Curation.crossSourceOverlap(docs, 3).collect().sortBy(key).toSeq
+    }
     assert(driver == dist, s"driver=$driver dist=$dist")
     // empty corpus: both tails emit the 0-row schema-correct report
     val empty = docs.filter(lit(false))
     assert(Curation.crossSourceOverlap(empty, 3).collect().isEmpty)
-    assert(Curation.crossSourceOverlap(empty, 3, maxDriverCells = 0)
-      .collect().isEmpty)
+    assert(TestSpark.withDriverTail(0) {
+      Curation.crossSourceOverlap(empty, 3).collect().isEmpty
+    })
   }
 
   test("temperatureWeights: driver tail is bit-identical to the relational " +
@@ -442,8 +444,9 @@ class CurationSpec extends AnyFunSuite {
     for (alpha <- Seq(0.5, 0.7, 1.0)) {
       val driver = Curation.temperatureWeights(docs, alpha)
         .collect().sortBy(key).toSeq
-      val dist = Curation.temperatureWeights(docs, alpha,
-          maxDriverGroups = 0).collect().sortBy(key).toSeq
+      val dist = TestSpark.withDriverTail(0) {
+        Curation.temperatureWeights(docs, alpha).collect().sortBy(key).toSeq
+      }
       assert(driver == dist, s"alpha=$alpha driver=$driver dist=$dist")
     }
     // a group whose every text is NULL gives a NULL n_tokens: the driver
@@ -453,8 +456,9 @@ class CurationSpec extends AnyFunSuite {
       Seq((4L, "ghost", null.asInstanceOf[String])).toDF("doc_id", "lang", "text"))
     val driverN = Curation.temperatureWeights(withNull, 0.7)
       .collect().sortBy(key).toSeq
-    val distN = Curation.temperatureWeights(withNull, 0.7,
-        maxDriverGroups = 0).collect().sortBy(key).toSeq
+    val distN = TestSpark.withDriverTail(0) {
+      Curation.temperatureWeights(withNull, 0.7).collect().sortBy(key).toSeq
+    }
     assert(driverN == distN, s"driver=$driverN dist=$distN")
     assert(driverN.exists(r => r.getString(0) == "ghost" && r.isNullAt(2)),
       s"NULL-text group must keep its NULL token count: $driverN")
@@ -602,20 +606,23 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("mixtureDrift: driver-complete tail is bit-identical to the distributed tail") {
-    // maxDriverCells = 0 forces the distributed path; the default takes the
-    // driver fast path — every micro-nat term, the exact long sums, and the
-    // rounded nats columns must agree bit-for-bit (same double chains)
+    // a zero driver-tail budget forces the distributed path; the default
+    // takes the driver fast path — every micro-nat term, the exact long
+    // sums, and the rounded nats columns must agree bit-for-bit
     val driver = Curation.mixtureDrift(docs, "source", col("doc_id"))
       .collect().toSeq
-    val dist = Curation.mixtureDrift(docs, "source", col("doc_id"),
-        maxDriverCells = 0).orderBy(col("split")).collect().toSeq
+    val dist = TestSpark.withDriverTail(0) {
+      Curation.mixtureDrift(docs, "source", col("doc_id"))
+        .orderBy(col("split")).collect().toSeq
+    }
     assert(driver == dist, s"driver=$driver dist=$dist")
     // empty input: both tails emit the 0-row schema-correct report
     val empty = docs.filter(lit(false))
     assert(Curation.mixtureDrift(empty, "source", col("doc_id"))
              .collect().isEmpty)
-    assert(Curation.mixtureDrift(empty, "source", col("doc_id"),
-             maxDriverCells = 0).collect().isEmpty)
+    assert(TestSpark.withDriverTail(0) {
+      Curation.mixtureDrift(empty, "source", col("doc_id")).collect().isEmpty
+    })
   }
 
   private def round6(x: Double): Double =

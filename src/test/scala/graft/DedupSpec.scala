@@ -82,14 +82,15 @@ class DedupSpec extends AnyFunSuite {
 
   test("dupClusters: refuses to return partial labels on non-convergence") {
     // a 5-hop chain cannot converge in 1 iteration of min-label propagation;
-    // threshold 0 forces the distributed loop (the local union-find path
-    // always converges)
+    // a zero driver-tail budget forces the distributed loop (the local
+    // union-find path always converges)
     val chain = (1L to 5L).sliding(2).map(w => (w.head, w.last)).toSeq
       .toDF("doc_a", "doc_b")
-    spark.conf.set("spark.graft.components.localThreshold", "0")
-    try intercept[IllegalStateException] {
-      Dedup.dupClusters(chain, maxIters = 1)
-    } finally spark.conf.unset("spark.graft.components.localThreshold")
+    TestSpark.withDriverTail(0) {
+      intercept[IllegalStateException] {
+        Dedup.dupClusters(chain, maxIters = 1)
+      }
+    }
   }
 
   test("dupClusters: local union-find and distributed loop agree") {
@@ -101,11 +102,10 @@ class DedupSpec extends AnyFunSuite {
       ("solo_b", "solo_a")).toDF("doc_a", "doc_b")
     val local = Dedup.dupClusters(pairs).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    spark.conf.set("spark.graft.components.localThreshold", "0")
-    val dist =
-      try Dedup.dupClusters(pairs).collect()
+    val dist = TestSpark.withDriverTail(0) {
+      Dedup.dupClusters(pairs).collect()
         .map(r => r.getString(0) -> r.getString(1)).toMap
-      finally spark.conf.unset("spark.graft.components.localThreshold")
+    }
     assert(local == dist)
     assert(local("d07") == "d01" && local("d01") == "d01")
     assert(local("x4") == "x1" && local("solo_a") == "solo_a" &&
@@ -113,16 +113,15 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("dupClusters: an always-local Long.MaxValue threshold cannot overflow the probe") {
-    // regression (round-7 review): localThreshold + 1 overflowing to
+    // regression: a threshold + 1 overflowing to
     // Long.MinValue made the probe limit(0) and silently reported an empty
-    // dup graph; the threshold is now clamped to the Int-indexed driver
-    // union-find's actual capacity before the +1
+    // dup graph; DriverTail clamps every budget below Int.MaxValue before
+    // the +1
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    spark.conf.set("spark.graft.components.localThreshold", Long.MaxValue.toString)
-    val out =
-      try Dedup.dupClusters(pairs).collect()
+    val out = TestSpark.withDriverTail(Long.MaxValue) {
+      Dedup.dupClusters(pairs).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally spark.conf.unset("spark.graft.components.localThreshold")
+    }
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 

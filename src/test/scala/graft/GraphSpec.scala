@@ -45,21 +45,22 @@ class GraphSpec extends AnyFunSuite {
     val df = edges.toDF("src", "dst")
     val viaDriver = Graph.pagerankFixed(df, 3)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val viaBroadcast = Graph.pagerankFixed(df, 3, driverEdgeLimit = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val viaBucketed = Graph.pagerankFixed(df, 3, broadcastNodeLimit = 0L,
-        driverEdgeLimit = 0L)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (viaBroadcast, viaBucketed) = TestSpark.withDriverTail(0) {
+      (Graph.pagerankFixed(df, 3)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
+       Graph.pagerankFixed(df, 3, broadcastNodeLimit = 0L)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    }
     assert(viaDriver == viaBroadcast, "driver-complete path shares the arithmetic")
     assert(viaBroadcast == viaBucketed)
   }
 
   test("pagerankFixed: path selection is visible in the returned plan") {
     val edges = Seq("a" -> "b", "b" -> "a").toDF("src", "dst")
-    def finalPlan(limit: Long): String =
-      Graph.pagerankFixed(edges, 1, broadcastNodeLimit = limit,
-          driverEdgeLimit = 0L)
+    def finalPlan(limit: Long): String = TestSpark.withDriverTail(0) {
+      Graph.pagerankFixed(edges, 1, broadcastNodeLimit = limit)
         .queryExecution.executedPlan.toString
+    }
     // tiny edge list: the driver-complete path returns a local relation
     val driver = Graph.pagerankFixed(edges, 1)
       .queryExecution.executedPlan.toString
@@ -129,18 +130,25 @@ class GraphSpec extends AnyFunSuite {
     val baskets = Seq(1L -> "a", 1L -> "b", 1L -> "c", 2L -> "b", 2L -> "c",
       2L -> "d", 3L -> "d", 3L -> "e", 4L -> "a", 4L -> "e").toDF("bk", "it")
     val driver = Graph.triangleStats(baskets, "bk", "it", 1).collect().toSeq
-    val dist = Graph.triangleStats(baskets, "bk", "it", 1,
-      maxDriverEdges = 0).collect().toSeq
+    val dist = TestSpark.withDriverTail(0) {
+      Graph.triangleStats(baskets, "bk", "it", 1).collect().toSeq
+    }
     assert(driver == dist, s"driver=$driver dist=$dist")
-    // wedge-bound overflow falls through to the distributed path
-    val fallback = Graph.triangleStats(baskets, "bk", "it", 1,
-      maxDriverWedges = 1).collect().toSeq
+    // wedge-bound overflow falls through to the distributed path: a budget
+    // of 7 holds the 7 pruned edges but not their Σ C(d,2) = 13 wedges
+    val fallback = TestSpark.withDriverTail(7) {
+      val df = Graph.triangleStats(baskets, "bk", "it", 1)
+      assert(df.queryExecution.executedPlan.toString.contains("Join"),
+        "wedge overflow must take the distributed tail")
+      df.collect().toSeq
+    }
     assert(fallback == dist)
     // empty edge set (support prunes everything): sum-over-empty NULLs
     // must agree between the LocalRelation and the distributed report
     val none = Graph.triangleStats(baskets, "bk", "it", 99).collect().toSeq
-    val noneDist = Graph.triangleStats(baskets, "bk", "it", 99,
-      maxDriverEdges = 0).collect().toSeq
+    val noneDist = TestSpark.withDriverTail(0) {
+      Graph.triangleStats(baskets, "bk", "it", 99).collect().toSeq
+    }
     assert(none == noneDist, s"driver=$none dist=$noneDist")
   }
 
@@ -183,12 +191,13 @@ class GraphSpec extends AnyFunSuite {
     val baskets = spokes.zipWithIndex.flatMap { case (s, i) =>
       Seq((i.toLong, "h"), (i.toLong, s), (i.toLong + 100L, "h"), (i.toLong + 100L, s))
     }.toDF("bk", "it")
-    // maxDriverEdges = 0 forces the DISTRIBUTED path on both variants
-    val arrayPath = graft.ops.Graph.linkPrediction(baskets, "bk", "it",
-      minSupport = 2, k = 1000, maxDriverEdges = 0).collect().toSeq
-    val joinPath = graft.ops.Graph.linkPrediction(baskets, "bk", "it",
-      minSupport = 2, k = 1000, wedgeDegreeCap = 2,
-      maxDriverEdges = 0).collect().toSeq
+    // a zero driver-tail budget forces the DISTRIBUTED path on both variants
+    val (arrayPath, joinPath) = TestSpark.withDriverTail(0) {
+      (graft.ops.Graph.linkPrediction(baskets, "bk", "it",
+         minSupport = 2, k = 1000).collect().toSeq,
+       graft.ops.Graph.linkPrediction(baskets, "bk", "it",
+         minSupport = 2, k = 1000, wedgeDegreeCap = 2).collect().toSeq)
+    }
     assert(arrayPath.nonEmpty)
     assert(arrayPath == joinPath,
       s"array=${arrayPath.mkString(";")} join=${joinPath.mkString(";")}")
@@ -202,9 +211,15 @@ class GraphSpec extends AnyFunSuite {
       minSupport = 2, k = 1000).collect().toSeq
     assert(driverPath == arrayPath,
       s"driver=${driverPath.take(3).mkString(";")} vs dist=${arrayPath.take(3).mkString(";")}")
-    // wedge-bound overflow falls through to the distributed path
-    val fallback = graft.ops.Graph.linkPrediction(baskets, "bk", "it",
-      minSupport = 2, k = 1000, maxDriverWedges = 1).collect().toSeq
+    // wedge-bound overflow falls through to the distributed path: a budget
+    // of 12 holds the 12 hub-spoke edges but not their C(12,2) = 66 wedges
+    val fallback = TestSpark.withDriverTail(12) {
+      val df = graft.ops.Graph.linkPrediction(baskets, "bk", "it",
+        minSupport = 2, k = 1000)
+      assert(df.queryExecution.executedPlan.toString.contains("Join"),
+        "wedge overflow must take the distributed tail")
+      df.collect().toSeq
+    }
     assert(fallback == arrayPath)
   }
 }

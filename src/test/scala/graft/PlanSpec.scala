@@ -220,13 +220,15 @@ class PlanSpec extends AnyFunSuite {
     // local scan — zero further jobs (round 13)
     val p = plan("copurchase_link_prediction")
     assert(p.contains("LocalTableScan"), p)
-    // fallback (wedge bound forced to 0): the distributed tail's contract
+    // fallback (driver tails forced off): the distributed tail's contract
     // is unchanged — equi anti-join, top-k as TakeOrdered, never a global
     // sort or a nested-loop join
-    val pd = graft.ops.Graph.linkPrediction(
-        Tables.lineitem(spark, TestSpark.sfDir), "l_orderkey", "l_partkey",
-        minSupport = 2, k = 50, maxDriverEdges = 0)
-      .queryExecution.executedPlan.toString
+    val pd = TestSpark.withDriverTail(0) {
+      graft.ops.Graph.linkPrediction(
+          Tables.lineitem(spark, TestSpark.sfDir), "l_orderkey", "l_partkey",
+          minSupport = 2, k = 50)
+        .queryExecution.executedPlan.toString
+    }
     assert(!pd.contains("BroadcastNestedLoopJoin"), pd)
     assert(pd.contains("TakeOrderedAndProject"), pd)
   }
@@ -300,12 +302,14 @@ class PlanSpec extends AnyFunSuite {
     // hash/SMJ equi-joins on src and close on (wa, wb) — an all-pairs or
     // nested-loop shape here is quadratic death on a skewed graph
     // (the 1-row count combines at the top are broadcast BNLJs — bounded)
-    val pd = graft.ops.Graph.triangleStats(
-        Tables.lineitem(spark, TestSpark.sfDir)
-          .select(org.apache.spark.sql.functions.col("l_orderkey"),
-                  org.apache.spark.sql.functions.col("l_partkey")),
-        "l_orderkey", "l_partkey", minSupport = 2, maxDriverEdges = 0)
-      .queryExecution.executedPlan.toString
+    val pd = TestSpark.withDriverTail(0) {
+      graft.ops.Graph.triangleStats(
+          Tables.lineitem(spark, TestSpark.sfDir)
+            .select(org.apache.spark.sql.functions.col("l_orderkey"),
+                    org.apache.spark.sql.functions.col("l_partkey")),
+          "l_orderkey", "l_partkey", minSupport = 2)
+        .queryExecution.executedPlan.toString
+    }
     assert(!pd.contains("CartesianProduct"), pd)
     assert(pd.contains("SortMergeJoin") || pd.contains("ShuffledHashJoin") ||
            pd.contains("BroadcastHashJoin"), pd)
@@ -330,11 +334,7 @@ class PlanSpec extends AnyFunSuite {
     // distributed fallback keeps the round-13 shape pin: the corpus-sized
     // pass is the (group, bin) counter aggregate — all-long buffers, so it
     // must plan as a HashAggregate; bounds ride in broadcast
-    val pd =
-      try {
-        spark.conf.set("spark.graft.histq.driverCellLimit", "0")
-        plan("price_histogram_quantiles")
-      } finally spark.conf.unset("spark.graft.histq.driverCellLimit")
+    val pd = TestSpark.withDriverTail(0)(plan("price_histogram_quantiles"))
     assert(pd.contains("BroadcastHashJoin"), pd)
     assert(pd.contains("HashAggregate") && pd.contains("partial_count"), pd)
     assert(!pd.contains("SortMergeJoin"), pd)

@@ -331,14 +331,12 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("knnGraphStats: driver tail ≡ distributed tail bit-identically") {
     // a non-trivial graph (ties, asymmetric ranks, k > 1) through both
-    // report tails — the conf kill-switch forces the distributed shape
+    // report tails — a zero driver-tail budget forces the distributed shape
     val sample = emb.limit(40)
     val fast = Similarity.knnGraphStats(sample, k = 3).collect()
-    val slow =
-      try {
-        spark.conf.set("spark.graft.knn.driverEdgeLimit", "0")
-        Similarity.knnGraphStats(sample, k = 3).collect()
-      } finally spark.conf.unset("spark.graft.knn.driverEdgeLimit")
+    val slow = TestSpark.withDriverTail(0) {
+      Similarity.knnGraphStats(sample, k = 3).collect()
+    }
     assert(fast.toSeq == slow.toSeq,
       s"driver/distributed mismatch:\n${fast.toSeq}\n${slow.toSeq}")
   }
@@ -689,23 +687,103 @@ class SimilaritySpec extends AnyFunSuite {
       nCentroids = 8, nProbe = 3, m = 8, codesPerBook = 8))
     // warm via the SEQUENTIAL trainers: pqCodebooks seeds the books memo,
     // kmeansCentroids the centroid memo — the subsequent ivfpqRecall must
-    // reuse both (skipping the fused trainer), so equality here pins
-    // fused-trained ≡ sequentially-trained artifacts bit-for-bit AND
-    // memo-hit ≡ cold execution.
+    // reuse both (skipping the fused trainer: as few jobs as a repeat
+    // call), so equality here pins fused-trained ≡ sequentially-trained
+    // artifacts bit-for-bit AND memo-hit ≡ cold execution.
+    def ivfpq = run(Similarity.ivfpqRecall(qs, corpus, 4,
+      nCentroids = 8, nProbe = 3, m = 8, codesPerBook = 8))
+    def pq = run(Similarity.pqTopK(qs, corpus, 4, m = 8, codesPerBook = 8))
     Similarity.clearSimilarityMemos()
     Similarity.pqCodebooks(corpus, m = 8, k = 8, iters = 1)
     Similarity.kmeansCentroids(corpus, 8, 1)
-    assert(run(Similarity.ivfpqRecall(qs, corpus, 4,
-      nCentroids = 8, nProbe = 3, m = 8, codesPerBook = 8)) == ivfpqCold)
-    assert(run(Similarity.pqTopK(qs, corpus, 4, m = 8, codesPerBook = 8))
-      == pqCold)
+    val (afterSeq, seqJobs) = TestSpark.countingJobs(ivfpq)
+    assert(afterSeq == ivfpqCold)
+    assert(seqJobs == TestSpark.countingJobs(ivfpq)._2,
+      "sequentially trained artifacts must serve the fused trainer")
+    assert(pq == pqCold)
     // and the reverse direction: the fused trainer's artifacts serve the
     // sequential-surface query identically
     Similarity.clearSimilarityMemos()
-    run(Similarity.ivfpqRecall(qs, corpus, 4,
-      nCentroids = 8, nProbe = 3, m = 8, codesPerBook = 8))
-    assert(run(Similarity.pqTopK(qs, corpus, 4, m = 8, codesPerBook = 8))
-      == pqCold)
+    ivfpq
+    val (afterFused, fusedJobs) = TestSpark.countingJobs(pq)
+    assert(afterFused == pqCold)
+    assert(fusedJobs == TestSpark.countingJobs(pq)._2,
+      "fused-trained books must serve the sequential surface")
+    Similarity.clearSimilarityMemos()
+  }
+
+  /** Two 48 × 8 corpora of one schema whose vectors differ. */
+  private def randomCorpus(seed: Int): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    (0 until 48).map(i => (i.toLong, Array.fill(8)(rnd.nextFloat() * 2f - 1f)))
+      .toDF("vec_id", "embedding")
+  }
+
+  /** Every cached artifact kind trained on `corpus`, as comparable text. */
+  private def trainedArtifacts(corpus: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    Seq(
+      Similarity.kmeansCentroids(corpus, 4, 1, dim = 8)
+        .collect().map(_.toString).sorted.toSeq,
+      Similarity.pqCodebooks(corpus, m = 2, k = 4, iters = 1, dim = 8).toSeq
+        .flatMap(_.map { case (c, v) => s"$c:${v.mkString(",")}" }),
+      Similarity.sq8TopK(corpus.filter($"vec_id" < 4), corpus, 3)
+        .collect().map(_.toString).sorted.toSeq)
+
+  /** After training on `first`, `second` must be served what a cold
+    * training on `second` produces.
+    */
+  private def assertNotStale(first: => org.apache.spark.sql.DataFrame,
+                             second: => org.apache.spark.sql.DataFrame): Unit = {
+    Similarity.clearSimilarityMemos()
+    val firstArtifacts = trainedArtifacts(first)
+    val served = trainedArtifacts(second)
+    Similarity.clearSimilarityMemos()
+    val cold = trainedArtifacts(second)
+    Similarity.clearSimilarityMemos()
+    assert(firstArtifacts != cold, "the two corpora must train differently")
+    assert(served == cold, s"stale artifacts served:\n$served\nvs cold\n$cold")
+  }
+
+  private def tempDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-stale").toString
+
+  test("artifact cache: two parquet dirs of one schema never share artifacts") {
+    val (a, b) = (tempDir() + "/c", tempDir() + "/c")
+    randomCorpus(1).write.parquet(a)
+    randomCorpus(2).write.parquet(b)
+    assertNotStale(spark.read.parquet(a), spark.read.parquet(b))
+  }
+
+  test("artifact cache: files rewritten under one path retrain") {
+    val dir = tempDir() + "/c"
+    randomCorpus(1).write.parquet(dir)
+    assertNotStale(spark.read.parquet(dir), {
+      randomCorpus(2).write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    })
+  }
+
+  test("artifact cache: two local corpora of one schema never share artifacts") {
+    assertNotStale(randomCorpus(1), randomCorpus(2))
+  }
+
+  test("artifact cache: a repeat call on unchanged input trains nothing") {
+    val dir = tempDir() + "/c"
+    randomCorpus(3).write.parquet(dir)
+    for (corpus <- Seq(spark.read.parquet(dir), randomCorpus(3))) {
+      Similarity.clearSimilarityMemos()
+      val first = trainedArtifacts(corpus)
+      val queries = corpus.filter($"vec_id" < 4)
+      val jobs = TestSpark.countingJobs {
+        Similarity.kmeansCentroids(corpus, 4, 1, dim = 8)
+        Similarity.pqCodebooks(corpus, m = 2, k = 4, iters = 1, dim = 8)
+      }._2
+      assert(jobs == 0, s"$jobs training jobs on a repeat call")
+      // sq8TopK's only eager work on a hit is the query-batch collect
+      val sq8Jobs = TestSpark.countingJobs(Similarity.sq8TopK(queries, corpus, 3))._2
+      assert(sq8Jobs == TestSpark.countingJobs(queries.collect())._2)
+      assert(trainedArtifacts(corpus) == first)
+    }
     Similarity.clearSimilarityMemos()
   }
 }

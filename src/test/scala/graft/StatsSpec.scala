@@ -270,17 +270,15 @@ class StatsSpec extends AnyFunSuite {
 
   test("histogramQuantiles: driver tail ≡ distributed tail bit-identically") {
     // mixed groups (multi-bin, point-mass, singleton) exercise every
-    // interpolation branch; the conf kill-switch forces the distributed
-    // tail so both paths run on identical input
+    // interpolation branch; a zero driver-tail budget forces the
+    // distributed tail so both paths run on identical input
     val df = ((1 to 1000).map(i => ("wide", i.toLong * 97)) ++
               (1 to 50).map(_ => ("point", 4200L)) ++
               Seq(("one", 123L))).toDF("g", "cents")
     val fast = Stats.histogramQuantiles(df, Seq("g"), col("cents")).collect()
-    val slow =
-      try {
-        spark.conf.set("spark.graft.histq.driverCellLimit", "0")
-        Stats.histogramQuantiles(df, Seq("g"), col("cents")).collect()
-      } finally spark.conf.unset("spark.graft.histq.driverCellLimit")
+    val slow = TestSpark.withDriverTail(0) {
+      Stats.histogramQuantiles(df, Seq("g"), col("cents")).collect()
+    }
     assert(fast.toSeq == slow.toSeq,
       s"driver/distributed mismatch:\n${fast.toSeq}\n${slow.toSeq}")
   }
@@ -288,7 +286,7 @@ class StatsSpec extends AnyFunSuite {
   test("kaplanMeierRetention: driver tail ≡ distributed tail bit-identically") {
     // gaps, censored tails, tied durations and a censored-only duration
     // (d=0 row contributes to at-risk but emits no curve row) through both
-    // curve tails; the conf kill-switch forces the distributed shape
+    // curve tails; a zero driver-tail budget forces the distributed shape
     def d(i: Int) = java.sql.Date.valueOf(f"2024-01-${i}%02d")
     val orders = Seq(
       (1L, 10L, d(1)), (1L, 11L, d(4)), (1L, 12L, d(10)),
@@ -297,11 +295,9 @@ class StatsSpec extends AnyFunSuite {
       (4L, 40L, d(1)), (4L, 41L, d(4))
     ).toDF("o_custkey", "o_orderkey", "o_orderdate")
     val fast = Stats.kaplanMeierRetention(orders).collect()
-    val slow =
-      try {
-        spark.conf.set("spark.graft.km.driverCellLimit", "0")
-        Stats.kaplanMeierRetention(orders).collect()
-      } finally spark.conf.unset("spark.graft.km.driverCellLimit")
+    val slow = TestSpark.withDriverTail(0) {
+      Stats.kaplanMeierRetention(orders).collect()
+    }
     assert(fast.nonEmpty && fast.toSeq == slow.toSeq,
       s"driver/distributed mismatch:\n${fast.toSeq}\n${slow.toSeq}")
   }
@@ -780,16 +776,20 @@ class StatsSpec extends AnyFunSuite {
       .toDF("c", "ia", "ib")
     val driver = Stats.psiDrift(shifted, col("c"), col("ia") === 1,
         col("ib") === 1).collect().toSeq
-    val dist = Stats.psiDrift(shifted, col("c"), col("ia") === 1,
-        col("ib") === 1, maxDriverBins = 0).collect().toSeq
+    val dist = TestSpark.withDriverTail(0) {
+      Stats.psiDrift(shifted, col("c"), col("ia") === 1,
+        col("ib") === 1).collect().toSeq
+    }
     assert(driver == dist, s"driver=$driver dist=$dist")
     // no rows in either slice: the keyless distributed aggregate emits its
     // single all-NULL-totals row; the driver tail must decline and match
     val empty = shifted.filter(lit(false))
     val dEmpty = Stats.psiDrift(empty, col("c"), col("ia") === 1,
         col("ib") === 1).collect().toSeq
-    val xEmpty = Stats.psiDrift(empty, col("c"), col("ia") === 1,
-        col("ib") === 1, maxDriverBins = 0).collect().toSeq
+    val xEmpty = TestSpark.withDriverTail(0) {
+      Stats.psiDrift(empty, col("c"), col("ia") === 1,
+        col("ib") === 1).collect().toSeq
+    }
     assert(dEmpty == xEmpty, s"driver=$dEmpty dist=$xEmpty")
     assert(dEmpty.size == 1 && dEmpty.head.isNullAt(0), dEmpty.toString)
   }

@@ -4,23 +4,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder()
+    val spark = GraftSession.arm(GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.adaptive.enabled",
-              sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // re-measurement probes (SCALE.md "Measured config defaults"):
-      // AQE coalesce floor + advisory target, overridable per run
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-              sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "1m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-              sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-              sys.env.getOrElse("SPARK_GRAFT_PFIRST", "true"))
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.arm(spark) // loud bounded-report truncation watcher
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (JIT, codegen compiler, parquet footer/codec paths)
     // so the first timed query isn't charged for JVM startup costs.
@@ -42,6 +29,8 @@ object Bench {
           n -> ((s: SparkSession, _: String) => s.range(1).toDF("id"))
         }
       else catalog
+    // each query's first failure, reported next to its timing
+    val failures = scala.collection.mutable.LinkedHashMap[String, QueryFailure]()
     // returns per-query (seconds, succeeded)
     def once(qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
              = selected): Map[String, (Double, Boolean)] = qs.map { case (name, fn) =>
@@ -50,10 +39,10 @@ object Bench {
       // Catalyst prune projection-only queries to a bare scan), no I/O cost.
       val ok =
         try {
-          Tuning.withTuned(spark, name) {
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          }; true
-        } catch { case _: Throwable => false }
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
+        } catch { case e: Throwable =>
+          failures.getOrElseUpdate(name, QueryFailure(name, e)); false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       // isolate queries from each other: drop caches / localCheckpoint
       // blocks a query may have left behind (iterative ops checkpoint), so
@@ -64,7 +53,8 @@ object Bench {
     }
     // three passes, per-query minimum over *successful* runs: suppresses
     // transient host noise without letting a fast failure masquerade as the
-    // best time; a query that fails every pass reports -1. Three, not two:
+    // best time; a query that fails every pass reports -1, and each query
+    // that failed in any pass has one record in "failures". Three, not two:
     // the suite takes minutes end to end, and the bench host shows
     // multi-minute degradation windows — a stall that covers the same query
     // in two consecutive passes sticks in a 2-pass min (observed:
@@ -285,10 +275,9 @@ object Bench {
     // the per-query floor measurement rather than the data work.
     val scaleJson =
       s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
-      s""""low_shuffle_partitions":${Tuning.lowShufflePartitions(spark)},""" +
+      s""""shuffle_partitions":${spark.conf.get(GraftSession.ShufflePartitions)},""" +
       s""""floor_mode":${sys.env.contains("SPARK_GRAFT_BENCH_FLOOR")}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,"queries":$qs,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"failures":${QueryFailure.jsonArray(failures.values.toSeq)},"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,"queries":$qs,"sf":"$sfDir"}"""
     // stdout goes through sbt's logger ("[info] "-prefixed), which breaks
     // line-oriented JSON parsing downstream — also write the result to a file
     // (override path via SPARK_GRAFT_BENCH_OUT; default = cwd/bench_out.json).

@@ -14,11 +14,10 @@ package graft
 object CalibProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.builder()
+    val spark = GraftSession.arm(GraftSession.builder()
       .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     def once(): Double = {
       val t0 = System.nanoTime()

@@ -1237,14 +1237,12 @@ object CatalogCore {
         // state-store partition count is fixed at query start (see
         // stream_retry_parity): 8 partitions for a ~30-key (day) state,
         // session default restored immediately after start
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
         val q =
-          try {
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
             graft.streaming.Streaming.dailyStats(spark, s"$staged/src", schema)
               .writeStream.outputMode("complete").format("memory").queryName(name)
               .option("checkpointLocation", s"$staged/ckpt_$run").start()
-          } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
         try q.processAllAvailable() finally q.stop()
         spark.table(name)
           .select(to_date(col("day.start")).as("event_date"),
@@ -1278,17 +1276,15 @@ object CatalogCore {
         val name = s"graft_dedup_parity_$run"
         val src = spark.readStream.schema(schema).parquet(s"$staged/src")
         // 8 state-store partitions (see stream_retry_parity) — the dedup
-        // key set is small and the 32-partition store is commit overhead
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+        // key set is small and a wider store is commit overhead
         val q =
-          try {
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
             graft.streaming.Streaming
               .dedupStream(src, Seq("user_id", "event_type"), "ts", "1 hour")
               .select(col("user_id"), col("event_type"))
               .writeStream.outputMode("append").format("memory").queryName(name)
               .option("checkpointLocation", s"$staged/ckpt_dd_$run").start()
-          } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
         try q.processAllAvailable() finally q.stop()
         spark.table(name).orderBy(col("user_id"), col("event_type"))
       },
@@ -1311,15 +1307,13 @@ object CatalogCore {
           .schema("user_id BIGINT, ts TIMESTAMP")
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$staged/src")
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
         val q =
-          try {
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
             graft.streaming.Streaming
               .sessionStats(src, "user_id", "ts", "30 minutes", "1 hour")
               .writeStream.outputMode("append").format("memory").queryName(name)
               .option("checkpointLocation", s"$staged/ckpt_$run").start()
-          } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
         try q.processAllAvailable() finally q.stop()
         spark.table(name)
           .filter(col("user_id") >= 0L) // the sentinel's own session is scaffolding
@@ -1367,18 +1361,16 @@ object CatalogCore {
           .as[graft.streaming.FetchAttempt]
         // The stateful stream's shuffle-partition count is fixed at query
         // start and becomes the state-store partition count for its whole
-        // life; 32 partitions × 3 triggers = 96 store commits for a small
-        // key set (measured 2.7 → 1.5 s at 8). A production deployment
+        // life; at 32 partitions × 3 triggers that was 96 store commits for
+        // a small key set (measured 2.7 → 1.5 s at 8). A production deployment
         // sizes this to keys/executor as usual; restore the session
         // default immediately after start.
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
         val q =
-          try {
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
+          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
             graft.streaming.Streaming.retryStateMachine(stream, maxAttempts = 3)
               .writeStream.outputMode("append").format("memory").queryName(name)
               .option("checkpointLocation", ckpt).start()
-          } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
         try q.processAllAvailable() finally q.stop()
         spark.table(name)
           .select(col("id").as("replay_id"), col("attempts"),
@@ -1419,22 +1411,20 @@ object CatalogCore {
         val name = s"graft_ctx_parity_$run"
         def src() = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$staged/src")
-        val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
         val q =
-          try {
+          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "4") {
             // 4 state-store partitions, not the parity family's usual 8:
             // the interval join keeps TWO stores per partition (one per
             // side) across the triggers, so commit count scales with
             // sides×triggers×parts — measured 4.38/4.41 → 4.01/3.68 s
             // (two quiet-window runs each side); per-user state is far
             // below any skew concern at this key cardinality
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
             graft.streaming.Streaming.priorWindowPairs(
                 src().filter(col("event_type") === "error"), src(),
                 86400L, "40 days")
               .writeStream.outputMode("append").format("memory").queryName(name)
               .option("checkpointLocation", s"$staged/ckpt_$run").start()
-          } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          }
         try q.processAllAvailable() finally q.stop()
         spark.table(name)
           .groupBy(col("user_id"))

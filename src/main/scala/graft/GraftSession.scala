@@ -7,22 +7,29 @@ import org.apache.spark.sql.SparkSession
   *
   *  - UTC session time zone — every epoch↔date conversion in the engine is
   *    tz-free; a local-zone session would silently shift day boundaries;
-  *  - AQE on — runtime partition coalescing, skew-join splitting;
-  *  - 32 shuffle partitions as the baseline (size to the cluster per
-  *    deployment; never the 200 default for local/small-cluster runs);
+  *  - AQE on for every query — runtime partition coalescing, skew-join
+  *    splitting;
+  *  - shuffle width derived from the cores: [[arm]] sets
+  *    `spark.sql.shuffle.partitions` to the session's `defaultParallelism`
+  *    unless the caller set it explicitly (builder `.config`, `--conf`, or a
+  *    `-Dspark.sql.shuffle.partitions` system property), which then wins.
+  *    Never the 200 default for local/small-cluster runs, and never a
+  *    constant tuned on one host's core count;
   *  - [[GraftExtensions]] wired so `cosine_similarity(a, b)` is callable
   *    from SQL.
   *
-  * `Bench`/`Verify` build through this too, so the driver-contract mains and
-  * a user session can never drift apart.
+  * Every session path goes through [[arm]]: [[local]], Bench, Verify,
+  * JobAudit, CalibProbe, the test session and the benchmark harness, so the
+  * harness mains and a user session can never drift apart.
   */
 object GraftSession {
+
+  val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** The engine's standard configuration, exposed for audit/tests. */
   val conf: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.shuffle.partitions" -> "32",
     "spark.sql.extensions" -> "graft.GraftExtensions")
 
   /** Builder with the standard configuration applied; call-site `.config`
@@ -34,6 +41,28 @@ object GraftSession {
   /** Local session (tests, single-node runs) — guard-armed. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     arm(builder().master(s"local[$cores]").getOrCreate())
+
+  /** `body` with `key` set to `value` on `spark`'s session conf. The previous
+    * setting, or its absence, is restored afterwards, also when `body`
+    * throws, so a scoped override never leaks into the next query.
+    */
+  def withConf[A](spark: SparkSession, key: String, value: String)(body: => A): A = {
+    val prev = if (spark.sessionState.conf.contains(key)) Some(spark.conf.get(key)) else None
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** `body` with adaptive execution off: for materializing a plan whose
+    * output partitioning must be captured (an adaptive plan reports
+    * UnknownPartitioning to a checkpoint). Not a per-query policy — the
+    * query around it keeps AQE on.
+    */
+  def withStaticPlan[A](spark: SparkSession)(body: => A): A =
+    withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
 
   // ── bounded-report truncation guard ──────────────────────────────────
   // CatalogCore.orderedReport caps structurally-bounded reports with
@@ -57,11 +86,15 @@ object GraftSession {
   private val armed =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
 
-  /** Register the truncation watcher on `spark` (idempotent). [[local]],
-    * Bench, and Verify all arm their sessions; arm any long-lived
-    * application session the same way.
+  /** Apply the session policy to `spark` and register the truncation
+    * watcher (idempotent): the shuffle width becomes the session's
+    * `defaultParallelism` unless already set explicitly. [[local]] and every
+    * harness main arm their sessions; arm any long-lived application
+    * session the same way.
     */
   def arm(spark: SparkSession): SparkSession = {
+    if (!spark.sessionState.conf.contains(ShufflePartitions))
+      spark.conf.set(ShufflePartitions, spark.sparkContext.defaultParallelism.toString)
     // Silence WindowExec's "No Partition Defined" warning (round-13 verdict
     // item 10): every unpartitioned window in the catalog runs over a
     // STRUCTURALLY bounded grid (≤6-row split-leakage cells, part-dimension

@@ -20,12 +20,10 @@ object JobAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder()
+    val spark = GraftSession.arm(GraftSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.arm(spark)
+      .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new AtomicInteger(0)
@@ -58,9 +56,7 @@ object JobAudit {
       val t0 = System.nanoTime()
       val ok =
         try {
-          Tuning.withTuned(spark, name) {
-            fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          }; true
+          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
         } catch { case _: Throwable => false }
       org.apache.spark.sql.graft.ListenerSync.drain(spark.sparkContext)
       val dt = (System.nanoTime() - t0) / 1e9

@@ -2,377 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-query session tuning applied by the harness mains (Bench / Verify /
-  * JobAudit) around catalog-query execution — the query-router policy a
-  * long-lived serving tier would keep next to its workload catalog.
-  *
-  * The one knob today: adaptive execution ON/OFF per query. AQE executes a
-  * plan stage-by-stage — every exchange becomes its own job plus a
-  * re-planning pause — which is the right trade wherever runtime statistics
-  * can change the plan (join-strategy switches, skew splitting, partition
-  * coalescing over data-dependent intermediates: the LSH band joins, the
-  * inverted-index joins, salted skew aggregates). For FIXED-SHAPE queries —
-  * map-only scans, a single rescue range-exchange, bounded reports whose
-  * cardinalities are structural — there is nothing to re-plan, and the
-  * stage-materialization latency is pure per-query floor. Measured A/B at
-  * sf0.1 (same host window, 3-pass min per side): the tagged set below runs
-  * 0.10–0.71 s faster per query with AQE off (additional_info_encode
-  * 1.03→0.32 s, compaction_roundtrip 2.08→1.65 s, repetition_scores
-  * 1.20→0.86 s), while the kept-on family would regress 0.19–0.75 s if
-  * forced off (lsh_recall 2.06→2.81 s, tfidf_terms 1.02→1.52 s,
-  * salted_user_counts 0.39→0.76 s).
-  *
-  * Scale note (SCALE.md "AQE policy"): this is a LATENCY knob for the
-  * sub-second interactive floor, not a throughput knob. At 100 TB the same
-  * fixed-shape plans should leave AQE on — a few hundred ms of driver-side
-  * re-planning amortizes to nothing over minutes-long stages, and runtime
-  * coalescing/skew handling starts to matter. The tag set encodes "plan
-  * shape is static", which is scale-invariant; WHETHER to act on it is the
-  * serving tier's latency-SLO decision, made here for the bench's
-  * single-node interactive profile.
+/** Pass-through kept for one caller: the benchmark harness
+  * (`sessionbench/src/graftbench/Catalog.scala`) wraps each query in it, and
+  * that harness only changes together with the benchmark definition. The
+  * session policy it once varied per query now lives in [[GraftSession]]
+  * (derived shuffle width, AQE on for every query). Delete this object with
+  * the next change to the benchmark harness.
   */
 object Tuning {
-  /** Catalog queries with static plan shape: no data-dependent join
-    * strategy, no skew risk, cardinality bounded by construction. Verified
-    * faster without AQE in the A/B above; membership is a measured fact,
-    * re-checked whenever a query's plan changes.
-    */
-  val fixedShape: Set[String] = Set(
-    "additional_info_encode", "compaction_roundtrip", "glob_directory_scan",
-    "repetition_scores",
-    "scalar_showcase", "stream_dedup_parity", "ivf_assign",
-    "boilerplate_line_stats", "stream_retry_parity", "packed_text",
-    "dedup_survivor_stats", "retry_queue", "user_sessions",
-    "mark_downloaded", "simhash_fingerprints", "incremental_dedup_check",
-    "last_purchase_asof", "value_percentiles", "ngram_jaccard_dups",
-    "ann_lsh_topk", "json_replay_roundtrip",
-    // round-7 additions (graft.TailAB, 2 interleaved-pass validations —
-    // 3-pass min per variant per run): download_status_check 0.77→0.53/0.48,
-    // compaction_plan 0.39→0.27/0.19, customers_with_orders 0.30→0.20/0.21
-    // (all with the lowShuffle tag below compounding), backfill_pages
-    // 0.32→0.24/0.20 (AQE off alone)
-    "download_status_check", "compaction_plan", "customers_with_orders",
-    "backfill_pages",
-    // round-7 session-5 additions (graft.TailAB, 2 interleaved runs):
-    // supplier_pagerank 2.98→1.77 / 2.73→2.13 (explicit broadcast hints —
-    // nothing for AQE to re-plan; stage pauses × 19 jobs were the cost),
-    // editdist_rescore 2.28→0.85 / 3.42→0.97 (same family as the tagged
-    // incremental_dedup_check), error_context_stats 0.51→0.38 / 0.49→0.36
-    // (all compounding with the lowShuffle tag below)
-    "supplier_pagerank", "editdist_rescore", "error_context_stats",
-    // funnel_stages 0.72→0.39 / 1.08→0.92, status_history 0.99→0.34 /
-    // 2.80→1.44 (second run window-contaminated but direction consistent);
-    // ivf_recall 1.29→1.19 / 1.29→1.18, winnowing_overlap_pairs
-    // 1.04→0.95 / 1.07→0.83. NOT tagged: ivf_ann_topk (0.23 win did not
-    // reproduce — 0.04 in the validation run).
-    "funnel_stages", "status_history", "ivf_recall", "winnowing_overlap_pairs",
-    // round-8 (graft.TailAB, 2 interleaved runs): hll_distinct_orders
-    // 0.51→0.27 / 0.60→0.33 with aqe0s8 — two fixed aggregates over the
-    // distinct-key projection, nothing for runtime stats to re-plan;
-    // ivfpq_recall 1.31→1.15 / 1.34→1.26 (the fused single-scan recall is
-    // one partial-agg pass over plan-literal scores — fixed shape). NOT
-    // tagged after the same sweep: ivf_ann_topk (0.10 win shrank to 0.01
-    // in validation — the round-7 non-reproduction repeats on the fused
-    // plan).
-    "hll_distinct_orders", "ivfpq_recall",
-    // kmv_order_overlap 1.12→0.60 / 1.30→0.61 with aqe0 alone (two fixed
-    // aggregates; the membership relation's size is structural)
-    "kmv_order_overlap",
-    // round-8 session-2 (graft.TailAB, 2 interleaved runs):
-    // price_histogram_quantiles 0.52→0.44 / 0.54→0.44 with aqe0s8 — two
-    // bounded aggregates + broadcast-combined bins, nothing data-dependent
-    "price_histogram_quantiles",
-    // bloom_prescreen_stats 0.90→0.52 / 0.86→0.65 with aqe0s8 — the bit
-    // and truth relations are cardinality-structural (≤m bits, distinct
-    // keys), probes are literal-bitmap projections. NOT tagged from the
-    // same sweep: rendezvous_shard_moves (s8 wins 0.0 and 0.01 — the
-    // cell-matrix plan is already one aggregate deep)
-    "bloom_prescreen_stats",
-    // ngram_novelty_scores 0.52→0.32 / 0.55→0.32 with aqe0s8 — a fixed
-    // explode → agg → postings-join → agg chain whose cardinalities are
-    // structural for fixed n; AQE's stage pauses are pure floor here.
-    // NOT tagged: vocab_growth_curve (s8 wins 0.01/0.05, under the bar)
-    "ngram_novelty_scores",
-    // round-8 session-3 (graft.TailAB, 2 interleaved runs): both rows are
-    // fixed window→aggregate chains over structurally bounded relations.
-    // user_burstiness 0.34→0.22 / 0.40→0.31 and zipf_rank_slope
-    // 0.32→0.23 / 0.34→0.24, both with aqe0s8. NOT tagged from the same
-    // sweep: benford_amount_audit (no variant moved it), knn_mutual_graph
-    // (aqe0s8 wins 0.01/0.04 — under the bar), key_skew_profile (aqe0
-    // REGRESSED 0.11/0.15 both runs — the counts-of-counts cardinality is
-    // data-dependent and AQE's coalescing pays for itself; s8 wins under
-    // the bar)
-    "user_burstiness", "zipf_rank_slope",
-    // minhash_calibration 1.52→0.98 / 1.39→1.05 with aqe0s8 BOTH runs,
-    // while aqe0 ALONE regressed (1.98/1.96): at 32 partitions the
-    // candidate-bounded joins want AQE's coalescing, at 8 there is
-    // nothing left to coalesce and the stage pauses are pure floor — the
-    // tag pair is only valid together (same pattern as supplier_pagerank)
-    "minhash_calibration",
-    // round-9 (graft.TailAB, 2 interleaved runs): customer_order_gaps
-    // 0.54→0.21 / 0.66→0.25 with aqe0 ALONE — a fixed
-    // window → keyless-aggregate chain (customer-partitioned lag + one
-    // report row); AQE's stage pauses are most of the query. NOT tagged
-    // from the same sweep: source_mix_entropy (base best both runs).
-    "customer_order_gaps",
-    // round-9 (graft.TailAB, 2 interleaved runs): ann_recall_curve
-    // 0.58→0.49 / 0.57→0.44 with aqe0s8 BOTH runs while aqe0 ALONE
-    // regressed (0.86/0.65) — the minhash_calibration only-valid-together
-    // pattern: the broadcast-queries ranking pipeline has nothing to
-    // re-plan at 8 partitions, but at 32 the bucket joins want AQE's
-    // coalescing. NOT tagged from the same sweep: embedding_norm_stats
-    // (wins ≤0.01 — already one map-side aggregate deep).
-    "ann_recall_curve",
-    // round-8 close (graft.TailAB, 2 interleaved runs): one broadcast
-    // join + one ~25-group moment aggregate — every cardinality is
-    // structural. brand_corr_stats 0.56→0.44 / 0.60→0.46 with aqe0s8.
-    // NOT tagged from the same sweep: orders_column_profile (base was
-    // best or within 0.01 both runs — its Expand multi-distinct WANTS
-    // AQE's coalescing) and hll_shard_merge (s8 wins 0.02, under the bar)
-    "brand_corr_stats",
-    // round-10 (graft.TailAB, 2 interleaved runs, after the native-top-k +
-    // fused-training plan changes): ivfpq_ann_topk 1.63→1.50 / 1.69→1.60
-    // and copurchase_lift 1.00→0.85 / 1.30→1.07, both with aqe0s8 — the
-    // fused plans are fixed-shape scans whose aggregates are bounded
-    // (brand² pairs / k·queries rows); at 8 partitions AQE has nothing to
-    // coalesce and its stage pauses are pure floor. NOT tagged from the
-    // same sweep: ivf_ann_topk (base best — third non-reproduction),
-    // pq_recall / pq_ann_topk / pq_codes (wins ≤ 0.05, under the bar).
-    "ivfpq_ann_topk", "copurchase_lift",
-    // round-10 session-2 (graft.TailAB, 2-3 interleaved runs): all three
-    // are fixed window/aggregate chains over bounded relations — aqe0s8
-    // reproduced every run. bootstrap_mean_ci 0.73→0.40 / 0.75→0.42 (the
-    // days×201 explode collapses to 201 groups — nothing to re-plan),
-    // event_type_islands 0.71→0.30 / 0.85→0.34 (one user-partitioned
-    // window + island aggregate), capped_running_balance 0.45→0.28 /
-    // 0.40→0.33 / 0.31→0.22 (two windows + per-user aggregate, the
-    // Lindley plan). NOT tagged from the same sweep: symdelete_fuzzy_match
-    // (aqe0s8 +0.30 did not reproduce: −0.05 in validation),
-    // largest_remainder_alloc (best variant flipped s8/aqe0s8 between
-    // runs, wins ~0.11), sq8_ann_topk / sq8_recall (no variant moved
-    // them), and the first-sweep rows revenue_cusum_changepoint /
-    // daily_revenue_acf / seasonal_naive_backtest / order_gap_hazard /
-    // mann_whitney_quantity / keyness_chi2_terms / rolling_active_users
-    // (wins under the 0.08 s bar).
-    "bootstrap_mean_ci", "event_type_islands", "capped_running_balance",
-    // symdelete_fuzzy_match AFTER its spread fix (3 interleaved runs):
-    // aqe0s8 1.26/1.08/1.44 vs base 2.74/1.61/1.88 — the
-    // minhash_calibration only-valid-together pattern again (aqe0 ALONE
-    // regressed 2.9/7.0/4.7: at 32 partitions the variant-key join wants
-    // AQE's coalescing; at 8 there is nothing to coalesce)
-    "symdelete_fuzzy_match",
-    // batch-5 rows (graft.TailAB, 2 interleaved runs each, aqe0s8):
-    // event_transition_matrix 0.49→0.35 / 0.52→0.32 (domain-bounded
-    // matrix aggregate), funnel_latency 0.42→0.30 / 0.39→0.29 (two
-    // per-user min-aggregates + one report row), linear_attribution
-    // 0.74→0.61 / 0.80→0.48 (prior-window pair join + purchase-key
-    // windows — cardinality bounded by user activity × window)
-    "event_transition_matrix", "funnel_latency", "linear_attribution",
-    // round-11 (graft.TailAB, 2 interleaved runs): largest_remainder_alloc
-    // 0.875→0.754 / 0.925→0.828 with aqe0s8 — a fixed join + two
-    // same-key windows + report sort; every cardinality is structural
-    // (r10's flip between s8/aqe0s8 resolved: aqe0s8 best both runs)
-    "largest_remainder_alloc",
-    // round-11 batch 2 (2 interleaved runs each): kaplan_meier_retention
-    // 0.915→0.698 / 0.728→0.555 aqe0s8 (one customer window → bounded
-    // day grid → 1-row folds); tf_cosine_dups 1.534→0.901 / 1.722→0.954
-    // aqe0s8 (the ngram_jaccard postings-join family — except here aqe0
-    // ALONE regressed, so the pair is only-valid-together, the
-    // symdelete pattern); kcenter_coreset 0.674→0.583 / 0.695→0.537 with
-    // aqe0 ALONE (8 literal-cosine scan jobs — AQE's per-job stage
-    // pauses are pure floor; s8 moved nothing, so no lowShuffle half).
-    // NOT tagged: brier_decomposition / embedding_class_scatter (wins
-    // ≤0.07, under the 0.08 bar).
-    "kaplan_meier_retention", "tf_cosine_dups", "kcenter_coreset",
-    // round-13 systematic sweep (graft.TailAB over ALL 146 untagged
-    // sub-1.2s rows, 2 interleaved-run reproduce bar): aqe0s8 both runs,
-    // s8 alone neutral — the only-valid-together pattern. duplicate_spans
-    // 0.66→0.45 / 0.63→0.41 (aqe0 ALONE also wins: the suffix-window span
-    // chain is fixed-shape), span_deduped_docs 0.63→0.53 / 0.68→0.55,
-    // theil_sen_trend 0.43→0.31 / 0.44→0.33
-    "duplicate_spans", "span_deduped_docs", "theil_sen_trend",
-    // round-13 optimization pass, AFTER the single-consumer restructure
-    // (one scan → (shard,idx) agg → idx merge → 1-row report; every
-    // cardinality structural at ≤ shards·m): aqe0s8 0.851/0.982 vs base
-    // 1.077/1.652 (2 interleaved TailAB runs). The round-8 sweep's
-    // under-the-bar reading was against the old two-branch+checkpoint
-    // shape. NOT tagged from the same sweep: quantile_sketch_merge after
-    // ITS restructure (s8 won 0.12 run 1, regressed 0.12 run 2 — the
-    // postings window wants the 32-way sort; left on base policy).
-    "hll_shard_merge")
-  // NOT tagged despite a small A/B win: dup_clusters — iterative
-  // data-dependent join loop (the classification rule says AQE on), and its
-  // −0.10 s reading did not reproduce (+0.53 s in the validation run).
-  // NOT tagged from the round-7 sweep (direction consistent but wins under
-  // the 0.08 s reproduce bar): nation_revenue, cosine_topk, batch_extract,
-  // daily_lifecycle_stats, quality_scores, latest_event_per_user,
-  // union_dedup_counts.
-
-  /** Catalog queries that run with `spark.sql.shuffle.partitions =`
-    * [[lowShufflePartitions]] (8 at the bench profiles; scales with the
-    * core budget) instead of the session's 32 (round-7 A/B,
-    * `graft.TailAB`): bounded
-    * reports and small-intermediate plans where 32-way exchanges cost more
-    * task-scheduling than they buy in parallelism at the bench profile.
-    * Composes with [[fixedShape]] (a query can carry both tags). Same
-    * serving-tier framing as the AQE policy: the tag encodes a measured
-    * LOCAL latency fact; at cluster scale the partition count comes from
-    * table statistics (or AQE coalescing), not this constant — see the
-    * scaladoc above and SCALE.md "AQE policy".
-    */
-  val lowShuffle: Set[String] = Set(
-    // measured (2 interleaved-pass validation runs each, graft.TailAB):
-    // download_status_check, compaction_plan, customers_with_orders compound
-    // with the AQE-off tag above; pii_scrub_stats 0.50→0.32/0.29 and
-    // reconcile_disk_state 0.70→0.61/0.47 win on partition count alone
-    // (AQE-off regressed pii_scrub_stats in one run — left on).
-    // Result-stability note: every catalog aggregate is integer-exact or
-    // order-insensitive by the determinism conventions (CatalogCore
-    // scaladoc), so partition count cannot move a hash — re-verified by the
-    // full selfcheck after tagging.
-    "download_status_check", "compaction_plan", "customers_with_orders",
-    "pii_scrub_stats", "reconcile_disk_state",
-    // second sweep over the JobAudit job-count outliers (both already
-    // AQE-off-tagged; the partition-count increment halves them):
-    // last_purchase_asof 0.49→0.25/0.33, boilerplate_line_stats
-    // 0.41→0.23 / 0.53→0.34 (2-of-3 runs ≥0.16, one stall-contaminated).
-    // NOT tagged from that sweep: tfidf_terms, unigram_perplexity,
-    // ann_recall, duplicate_order_audit — direction flips run to run; the
-    // 9-single-task-job shapes are AQE stage pauses that 8 partitions do
-    // not remove.
-    "last_purchase_asof", "boilerplate_line_stats",
-    // round-7 session-5 (same TailAB runs as the fixedShape notes above):
-    // the aqe0s8 variant beat aqe0 alone for all three new rows
-    "supplier_pagerank", "editdist_rescore", "error_context_stats",
-    "funnel_stages", "status_history", "ivf_recall",
-    "winnowing_overlap_pairs",
-    // round-8 (graft.TailAB, 2 interleaved runs): hll_distinct_orders
-    // compounds with its AQE-off tag above; curation_pipeline 1.62→1.05 /
-    // 1.72→1.23 on partition count ALONE (s8 ≈ aqe0s8 in both runs — AQE
-    // stays ON per the classification rule: the near-dup cluster loop is a
-    // data-dependent join chain)
-    "hll_distinct_orders", "curation_pipeline", "ivfpq_recall",
-    // round-8 session-2 (graft.TailAB, 2 interleaved runs):
-    // cosupply_triangles 1.90→1.62 / 2.33→1.88 on partition count alone
-    // (AQE stays ON per the classification rule — the support-pruned edge
-    // relation's size is data-dependent and its joins re-plan on it; the
-    // aqe0 variant measured 2× WORSE both runs); price_histogram_quantiles
-    // compounds with its AQE-off tag above.
-    // NOT tagged from that sweep: orders_column_profile (s8 win 0.09 did
-    // not reproduce — 0.02 in validation), orders_daily_gapfill and
-    // order_volume_outliers (wins under the 0.08 s bar in both runs).
-    "cosupply_triangles", "price_histogram_quantiles",
-    // bloom_prescreen_stats compounds with its AQE-off tag (A/B above)
-    "bloom_prescreen_stats",
-    // ngram_novelty_scores compounds with its AQE-off tag (A/B above)
-    "ngram_novelty_scores",
-    // round-8 session-3: compound with their AQE-off tags (A/B above —
-    // aqe0s8 beat aqe0 alone in all four runs)
-    "user_burstiness", "zipf_rank_slope",
-    // minhash_calibration: the s8 half of the only-valid-together pair
-    // (see the fixedShape note)
-    "minhash_calibration",
-    // brand_corr_stats: s8 half of its aqe0s8 tag (fixedShape note above)
-    "brand_corr_stats",
-    // round-8 close (graft.TailAB, 2 interleaved runs): s8 ALONE —
-    // split_leakage_check 0.74→0.53 / 0.89→0.68, while aqe0 REGRESSED
-    // ~2x both runs (the banding self-join's candidate cardinality is
-    // data-dependent; AQE's coalescing earns its keep, the 8-partition
-    // floor just trims the tiny split-cell exchanges). NOT tagged from
-    // the same sweep: quality_kappa (aqe0s8 won 0.05/0.09 — first run
-    // under the 0.08 bar), mixture_kl_drift (base best; aqe0 regressed)
-    "split_leakage_check",
-    // ann_recall_curve: the s8 half of its only-valid-together aqe0s8
-    // pair (see the fixedShape note)
-    "ann_recall_curve",
-    // round-9 (graft.TailAB, 2 interleaved runs): containment_dups
-    // 1.10→0.70 / 1.21→0.74 on partition count alone — same family as
-    // split_leakage_check and ngram_jaccard_dups' postings join: the pair
-    // cardinality is data-dependent (AQE stays ON; aqe0 regressed both
-    // runs), while the post-join report exchanges are tiny at 8.
-    "containment_dups",
-    // round-10: the s8 halves of the aqe0s8 pairs tagged in fixedShape
-    // above (ivfpq_ann_topk 2-run reproduced; copurchase_lift likewise)
-    "ivfpq_ann_topk", "copurchase_lift",
-    // round-10 session-2: s8 halves of the aqe0s8 trio above, plus
-    // copurchase_link_prediction on partition count ALONE (1.61/1.50 vs
-    // base 2.00/1.78; AQE stays ON per the classification rule — the
-    // common-neighbor pair cardinality is data-dependent and aqe0
-    // regressed ~2x both runs, the split_leakage_check pattern)
-    "bootstrap_mean_ci", "event_type_islands", "capped_running_balance",
-    "copurchase_link_prediction",
-    // round-13 systematic sweep (2 interleaved-run bar, notes in
-    // fixedShape above for the aqe0s8 trio): s8 halves duplicate_spans /
-    // span_deduped_docs / theil_sen_trend, plus partition count ALONE
-    // (AQE stays on — each has a data-dependent join or explode
-    // cardinality): simhash_neardup_pairs 0.63→0.45 / 0.81→0.54,
-    // bigram_perplexity 0.80→0.54 / 0.73→0.59, collocation_pmi
-    // 0.66→0.51 / 0.67→0.50, lsh_candidate_pairs 0.52→0.36 / 0.55→0.37,
-    // bpe_merge_candidates 0.29→0.13 / 0.36→0.23. Re-validated under the
-    // driver-fast-path plan: copurchase_link_prediction 0.78→0.69 /
-    // 0.66→0.55 (tag retained from round 10). NOT tagged from the sweep:
-    // cluster_aware_splits / decontamination_report / cross_source_overlap
-    // / knn_mutual_graph / nb_reliability_bins / rolling_active_users /
-    // order_gap_hazard / bm25_topk (one of the two runs under the 0.08 s
-    // bar); every row in the ≤0.45 s tail (batches 2–3 of the sweep)
-    // moved ≤0.05 s on any variant — per-plan constant, not shape.
-    "duplicate_spans", "span_deduped_docs", "theil_sen_trend",
-    "simhash_neardup_pairs", "bigram_perplexity", "collocation_pmi",
-    "lsh_candidate_pairs", "bpe_merge_candidates",
-    // symdelete_fuzzy_match: s8 half of its only-valid-together pair
-    "symdelete_fuzzy_match",
-    // batch-5 rows: s8 halves of the aqe0s8 tags above
-    "event_transition_matrix", "funnel_latency", "linear_attribution",
-    // round-11: s8 half of largest_remainder_alloc's aqe0s8 tag
-    "largest_remainder_alloc",
-    // round-11 batch 2: s8 halves of the aqe0s8 pair above (kcenter is
-    // aqe0-only by measurement)
-    "kaplan_meier_retention", "tf_cosine_dups",
-    // round-13 optimization pass: s8 half of hll_shard_merge's aqe0s8 tag
-    // (see the fixedShape note — measured on the restructured single chain)
-    "hll_shard_merge")
-
-  /** The [[lowShuffle]] partition count, derived from the session's core
-    * count instead of a constant (round-13 verdict item 2 — a pin tuned on
-    * local[32] must not silently follow the code to a cluster): the tag
-    * means "this plan's exchanges carry bounded intermediates, so trade
-    * exchange width for per-task scheduling", and the right width for that
-    * trade scales with the executor core budget, floor 8 (the measured
-    * local optimum at both the 8- and 32-core bench profiles —
-    * max(8, cores/4) resolves to 8 at both driver core counts, so the
-    * measured local pins are unchanged while a 512-core deployment gets
-    * 128-way exchanges instead of 8). Overridable for A/Bs via
-    * SPARK_GRAFT_LOW_SHUFFLE.
-    */
-  def lowShufflePartitions(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_LOW_SHUFFLE").map(_.toInt).getOrElse(
-      math.max(8, spark.sparkContext.defaultParallelism / 4))
-
-  /** Run `body` with the per-query conf overrides for `name`, restoring the
-    * previous session values afterwards (exception-safe, so one query's
-    * policy never leaks into the next).
-    */
-  def withTuned[A](spark: SparkSession, name: String)(body: => A): A = {
-    // Dev kill-switch (TailAB / scale-leg A/Bs): a tagged query can only be
-    // re-measured untagged if the router can be bypassed — TailAB's variant
-    // confs are otherwise overridden by the tag they're trying to evaluate.
-    if (sys.env.get("SPARK_GRAFT_NO_TUNING").contains("1")) return body
-    val overrides: Map[String, String] =
-      (if (fixedShape.contains(name))
-         Map("spark.sql.adaptive.enabled" -> "false")
-       else Map.empty[String, String]) ++
-      (if (lowShuffle.contains(name))
-         Map("spark.sql.shuffle.partitions" -> lowShufflePartitions(spark).toString)
-       else Map.empty[String, String])
-    if (overrides.isEmpty) body
-    else {
-      val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
-  }
+  def withTuned[A](spark: SparkSession, name: String)(body: => A): A = body
 }

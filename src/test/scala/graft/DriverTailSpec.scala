@@ -100,5 +100,10 @@ class DriverTailSpec extends AnyFunSuite {
       "spark.graft.* conf keys belong to DriverTail")
     assert(offenders("TrainedArtifactCache.scala", "removeEldestEntry").isEmpty,
       "trained-artifact memos belong to TrainedArtifactCache")
+    // the session policy (AQE on, derived shuffle width, scoped overrides)
+    // lives in GraftSession; no per-query AQE switch may grow back
+    for (key <- Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"))
+      assert(offenders("GraftSession.scala", key).isEmpty,
+        s"$key belongs to GraftSession")
   }
 }

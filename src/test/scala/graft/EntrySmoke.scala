@@ -5,9 +5,8 @@ package graft
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.arm(GraftSession.builder().master("local[8]")
+      .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")

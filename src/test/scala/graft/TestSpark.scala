@@ -5,14 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder()
+    val s = GraftSession.arm(GraftSession.builder()
       .master("local[4]")
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.warehouse.dir",
               java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .getOrCreate())
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -118,7 +118,6 @@ def run_bench(baseline_sec):
     # own window by its own calibs.
     out = os.path.join(out_dir, "bench_quiet.json")
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_SHUFFLE="32",
                SPARK_GRAFT_BASELINE_SEC=str(baseline_sec),
                SPARK_GRAFT_BENCH_OUT=out)
     try:

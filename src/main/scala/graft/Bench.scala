@@ -260,7 +260,12 @@ object Bench {
             .write.mode("overwrite").format("noop").save()
           val t2 = System.nanoTime()
           f""","ivf_index_search_split":{"train_save_load_sec":${(t1 - t0) / 1e9}%.3f,"serve_sec":${(t2 - t1) / 1e9}%.3f}"""
-        } catch { case _: Throwable => "" }
+        } catch { case scala.util.control.NonFatal(e) =>
+          // the split is diagnostic: its failure is a record, not a silence
+          failures.getOrElseUpdate("ivf_index_search_split",
+            QueryFailure("ivf_index_search_split", e))
+          ""
+        }
       } else ""
     val calibJson = calibs.map(c => f"$c%.3f").mkString("[", ",", "]")
     // symmetric diagnostic: like-for-like rows over the baseline minus the

@@ -93,21 +93,20 @@ object CatalogCore {
   private val ParityRun = new java.util.concurrent.atomic.AtomicLong(0)
   private val ObsRun = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** One staged stream-source copy of `events` per (session, dir): the
-    * operator under test is the streaming execution — in production the
-    * source files already sit on disk (the copy exists only because the
+  /** One staged stream-source copy of `events` per session and version of
+    * `events.parquet` (see [[GraftSession.memo]]): the operator under test
+    * is the streaming execution — in production the source files already
+    * sit on disk (the copy exists only because the
     * raw table's nanosecond timestamps need the one-time µs conversion),
     * so repeated invocations re-run the STREAM, not the staging write.
     */
-  private val parityStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private def stagedEvents(spark: SparkSession, dir: String): String =
-    parityStage.computeIfAbsent((spark, dir), _ => {
+    GraftSession.memo(spark, "parity stage", s"$dir/events.parquet") {
       val staged = scratchDir("graft_stream_parity_")
       Tables.events(spark, dir).select("ts", "event_type", "user_id")
         .write.mode("overwrite").parquet(s"$staged/src")
       staged
-    })
+    }
 
   /** Sentinel-closed staging for stream_session_parity: the events
     * (user_id, ts) written as file 1, then a single far-future sentinel
@@ -119,10 +118,8 @@ object CatalogCore {
     * the state store and the row would hash short). Append order controls
     * trigger order, exactly as in [[stagedEventsTimeline]].
     */
-  private val SessionStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private def stagedSessionEvents(spark: SparkSession, dir: String): String =
-    SessionStage.computeIfAbsent((spark, dir), _ => {
+    GraftSession.memo(spark, "session stage", s"$dir/events.parquet") {
       val staged = scratchDir("graft_session_parity_")
       val ev = Tables.events(spark, dir).select(col("user_id"), col("ts"))
       ev.coalesce(1).write.mode("append").parquet(s"$staged/src")
@@ -131,7 +128,7 @@ object CatalogCore {
                 (col("mx") + expr("INTERVAL 2 HOURS")).as("ts"))
         .coalesce(1).write.mode("append").parquet(s"$staged/src")
       staged
-    })
+    }
 
   /** Timeline-sliced staging for stream_context_parity: the events table
     * written as two SEQUENTIAL one-file slices (days ≤15 / ≥16) so
@@ -143,10 +140,8 @@ object CatalogCore {
     * profile) and the boundary-crossing property needs exactly one
     * boundary.
     */
-  private val TimelineStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private def stagedEventsTimeline(spark: SparkSession, dir: String): String =
-    TimelineStage.computeIfAbsent((spark, dir), _ => {
+    GraftSession.memo(spark, "timeline stage", s"$dir/events.parquet") {
       val staged = scratchDir("graft_ctx_parity_")
       val ev = Tables.events(spark, dir)
         .select("event_id", "ts", "event_type", "user_id")
@@ -155,21 +150,20 @@ object CatalogCore {
         ev.filter(day >= lo && day <= hi).coalesce(1)
           .write.mode("append").parquet(s"$staged/src")
       staged
-    })
+    }
 
   private val S = Lifecycle.statusSql // WITH replay_status AS (...)
 
-  /** One staged fetch-attempt log per (session, dir) for
-    * stream_retry_parity: three one-file "rounds" derived from orders
-    * (succ_round = order_key % 5: 1–3 ⇒ success on that round, 0/4 ⇒ never)
+  /** One staged fetch-attempt log per session and version of
+    * `orders.parquet` for stream_retry_parity: three one-file "rounds"
+    * derived from orders (succ_round = order_key % 5: 1–3 ⇒ success on that
+    * round, 0/4 ⇒ never)
     * — a key appears in a round only while unresolved, exactly one attempt
     * per round. The staging write is scaffolding; repeated invocations
     * re-run the stateful STREAM.
     */
-  private val RetryStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private def stagedRetryAttempts(spark: SparkSession, dir: String): String =
-    RetryStage.computeIfAbsent((spark, dir), _ => {
+    GraftSession.memo(spark, "retry stage", s"$dir/orders.parquet") {
       val src = scratchDir("graft_retry_parity_") + "/src"
       // a 1-in-7 key subset: the state machine's update/remove path is
       // exercised identically per key, and the full-corpus form pays ~7×
@@ -187,20 +181,19 @@ object CatalogCore {
           .coalesce(1)
           .write.mode("append").parquet(src)
       src
-    })
+    }
 
-  /** One pair of bucketed tables per (session, dir) for bucketed_join_counts
-    * (S9): the DDL write is one-time layout preparation (in production the
-    * state table is bucketed once at creation, db.py:73-76's CREATE INDEX
-    * analog) — repeated invocations measure the bucketed-scan join, not the
-    * write. Table names are unique per staging so concurrent sessions and
-    * re-created sessions never collide in a shared metastore namespace.
+  /** One pair of bucketed tables per session and version of
+    * `orders.parquet` for bucketed_join_counts (S9): the DDL write is
+    * one-time layout preparation (in production the state table is bucketed
+    * once at creation, db.py:73-76's CREATE INDEX analog) — repeated
+    * invocations measure the bucketed-scan join, not the write. Table names
+    * are unique per staging so concurrent sessions and re-created sessions
+    * never collide in a shared metastore namespace.
     */
-  private val BucketStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
   private val BucketRun = new java.util.concurrent.atomic.AtomicLong(0)
   private def stagedBucketedTables(spark: SparkSession, dir: String): (String, String) =
-    BucketStage.computeIfAbsent((spark, dir), _ => {
+    GraftSession.memo(spark, "bucketed stage", s"$dir/orders.parquet") {
       val run = BucketRun.incrementAndGet()
       val (ta, tb) = (s"graft_status_b_$run", s"graft_results_b_$run")
       val base = scratchDir("graft_bucketed_")
@@ -214,7 +207,7 @@ object CatalogCore {
         .write.mode("overwrite").option("path", s"$base/$tb")
         .bucketBy(8, "replay_id").sortBy("replay_id").saveAsTable(tb)
       (ta, tb)
-    })
+    }
 
   /** §3.3 composed disk→state reconciliation, pre-sort form (the catalog
     * entry checkpoints + totally orders it; exposed so PlanSpec can assert

@@ -535,7 +535,7 @@ private[graft] object CatalogDedupSim {
     //    tie-break anywhere in the PQ machinery shifts the hash. Global
     //    range sort, not orderedReport — one row per corpus vector (the
     //    ivf_assign convention). Config = pqTopK's measured defaults
-    //    (PqProbe sweep in the scaladoc).
+    //    (recall sweep in the scaladoc).
     ("pq_codes",
       (spark, dir) => {
         val corpus = Tables.embeddings(spark, dir).filter(col("vec_id") >= 8)

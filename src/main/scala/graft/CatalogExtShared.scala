@@ -216,7 +216,7 @@ private[graft] object CatalogExtShared {
   }
 
   /** PQ subspace count shared by the Spark side and the DuckDB twins of the
-    * pq_* rows — pqTopK's measured default (PqProbe sweep).
+    * pq_* rows — pqTopK's measured default (recall sweep in its scaladoc).
     */
   private[graft] val pqM = 16
 

@@ -21,6 +21,9 @@ import org.apache.spark.sql.SparkSession
   * Every session path goes through [[arm]]: [[local]], Bench, Verify,
   * JobAudit, CalibProbe, the test session and the benchmark harness, so the
   * harness mains and a user session can never drift apart.
+  *
+  * It also holds all per-session engine state, in one registry: see
+  * [[memo]] and [[lastBoundTruncation]].
   */
 object GraftSession {
 
@@ -64,6 +67,78 @@ object GraftSession {
   def withStaticPlan[A](spark: SparkSession)(body: => A): A =
     withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
 
+  // ── session state ────────────────────────────────────────────────────
+  // Everything the engine remembers about a session sits in one State
+  // behind one registry: whether it is armed, its truncation flag, and its
+  // memos of per-file work. The registry holds a session only while its
+  // SparkContext runs.
+
+  private final class Memo {
+    var identity: Option[Seq[(String, Long, Long)]] = None
+    var value: Any = null
+  }
+
+  private final class State {
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val truncation = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), Memo]()
+  }
+
+  private val states = new java.util.concurrent.ConcurrentHashMap[SparkSession, State]()
+
+  /** `spark`'s state. Creating one first drops the states of sessions
+    * whose SparkContext has stopped, so the registry never outlives them.
+    */
+  private def stateOf(spark: SparkSession): State = {
+    val known = states.get(spark)
+    if (known != null) known
+    else {
+      states.keySet.removeIf(_.sparkContext.isStopped)
+      states.computeIfAbsent(spark, _ => new State)
+    }
+  }
+
+  /** The sessions the registry currently holds (for specs). */
+  private[graft] def registered: Set[SparkSession] = {
+    import scala.jdk.CollectionConverters._
+    states.keySet.asScala.toSet
+  }
+
+  /** The value `build` made for (`kind`, `path`) in `spark`, rebuilt when
+    * the data at `path` changed since: a file is identified by its length
+    * and mtime, a directory by its one-level listing (one stat, or one
+    * listing, per call). A rebuild replaces the entry, so at most one value
+    * is held per (`kind`, `path`); a `build` that throws caches nothing.
+    * Builds of one entry run one at a time; different entries may nest.
+    */
+  def memo[A](spark: SparkSession, kind: String, path: String)(build: => A): A = {
+    val id = Some(identityOf(spark, path))
+    val m = stateOf(spark).memos.computeIfAbsent((kind, path), _ => new Memo)
+    m.synchronized {
+      if (m.identity != id) {
+        m.identity = None // a build that throws leaves the entry empty
+        m.value = null
+        m.value = build
+        m.identity = id
+      }
+      m.value.asInstanceOf[A]
+    }
+  }
+
+  /** (path, length, mtime) of `path` if it is a file, of its children if
+    * it is a directory; empty when it does not exist.
+    */
+  private def identityOf(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+      files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .sortBy(_._1)
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
+  }
+
   // ── bounded-report truncation guard ──────────────────────────────────
   // CatalogCore.orderedReport caps structurally-bounded reports with
   // limit(ReportBound); if a group structure ever outgrew the bound, rows
@@ -74,23 +149,20 @@ object GraftSession {
   // is a pass-through accumulator node).
 
   private[graft] val BoundMetric = "graft_report_bound"
-  private val lastTruncation =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
-  /** The most recent query whose bounded report hit ReportBound exactly
-    * (truncation suspect), if any since the last [[clearBoundTruncation]].
+  /** The most recent query of `spark` whose bounded report hit ReportBound
+    * exactly (truncation suspect), if any since the last
+    * [[clearBoundTruncation]] on `spark`.
     */
-  def lastBoundTruncation: Option[String] = Option(lastTruncation.get)
-  def clearBoundTruncation(): Unit = lastTruncation.set(null)
-
-  private val armed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
+  def lastBoundTruncation(spark: SparkSession): Option[String] =
+    Option(stateOf(spark).truncation.get)
+  def clearBoundTruncation(spark: SparkSession): Unit = stateOf(spark).truncation.set(null)
 
   /** Apply the session policy to `spark` and register the truncation
     * watcher (idempotent): the shuffle width becomes the session's
     * `defaultParallelism` unless already set explicitly. [[local]] and every
     * harness main arm their sessions; arm any long-lived application
-    * session the same way.
+    * session the same way. No I/O and no job.
     */
   def arm(spark: SparkSession): SparkSession = {
     if (!spark.sessionState.conf.contains(ShufflePartitions))
@@ -106,7 +178,8 @@ object GraftSession {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    if (armed.add(spark))
+    val state = stateOf(spark)
+    if (state.armed.compareAndSet(false, true))
       spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(funcName: String,
                                qe: org.apache.spark.sql.execution.QueryExecution,
@@ -117,7 +190,7 @@ object GraftSession {
                 "rows — output is almost certainly TRUNCATED (group structure " +
                 "outgrew the bound); raise ReportBound or drop orderedReport " +
                 "for this query"
-              lastTruncation.set(msg)
+              state.truncation.set(msg)
               System.err.println(s"[graft] ERROR: $msg")
             }
           }

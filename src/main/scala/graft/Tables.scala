@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * physical encodings across driver rounds — parquet TIMESTAMP(NANOS)
   * (which Spark's vectorized reader rejects at inference,
   * [PARQUET_TYPE_ILLEGAL]) and native timestamp[us]. The loader inspects the
-  * footer once per (session, dir) and normalizes both to microsecond
+  * footer once per version of the file and normalizes both to microsecond
   * TimestampType — the same value DuckDB sees, so oracle comparisons agree
   * to the microsecond either way.
   */
@@ -18,26 +18,24 @@ object Tables {
   val relational: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
 
-  // One resolved relation per (session, dir, table), like any metastore or
-  // long-lived application would hold: re-building the DataFrame per query
-  // re-lists the path and re-decodes parquet footers every time — pure
-  // fixed cost × queries × tables. The cached object is the *analyzed
-  // logical relation only*; every query still plans, prunes, and pushes
-  // filters against it independently (nothing is materialized).
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
+  // One resolved relation per session and table file, like any metastore
+  // or long-lived application would hold: re-building the DataFrame per
+  // query re-lists the path and re-decodes parquet footers every time —
+  // pure fixed cost × queries × tables. The memo checks the file's identity
+  // on every call, so a rewritten table is re-read. The cached object is
+  // the *analyzed logical relation only*; every query still plans, prunes,
+  // and pushes filters against it independently (nothing is materialized).
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    cache.computeIfAbsent((spark, dir, name),
-      _ => loadNormalized(spark, dir, name))
+    GraftSession.memo(spark, "table", s"$dir/$name.parquet")(
+      loadNormalized(spark, dir, name))
 
   /** Generic TIMESTAMP(NANOS) armor for EVERY table (the events-only round-5
     * lesson, generalized): driver testdata has shipped with nanosecond
     * timestamp columns before, and schema inference rejects them outright
     * ([PARQUET_TYPE_ILLEGAL]) — which would take down every query on the
     * affected table, not just the timestamp ones. The footer is decoded
-    * once per (session, dir, table) anyway for the relation cache; when it
-    * declares top-level TIMESTAMP(NANOS) columns, the scan schema is built
+    * once per version of the table file anyway for the relation memo; when
+    * it declares top-level TIMESTAMP(NANOS) columns, the scan schema is built
     * with Spark's own converter in nanosAsLong mode (raw 8-byte longs —
     * no session-global legacy conf) and each such column is normalized to
     * microsecond TimestampType with exact integer division. Tables without
@@ -180,27 +178,22 @@ object Tables {
   /** The three physical encodings `events.ts` has shipped in across driver
     * rounds, classified from the parquet footer's logical-type annotation
     * directly (no inference-exception games: a transient FS error here
-    * PROPAGATES — computeIfAbsent caches nothing on throw — instead of
-    * silently routing to the wrong decode path):
+    * PROPAGATES — the memo caches nothing on throw — instead of silently
+    * routing to the wrong decode path):
     *
     *  - TIMESTAMP(MICROS/MILLIS, adjustedToUTC=true)  → Spark TimestampType
     *  - TIMESTAMP(MICROS, adjustedToUTC=false)        → Spark TimestampNTZType
     *  - TIMESTAMP(NANOS) / bare INT64                 → raw nanosecond longs
     *
-    * Cached per (session, dir): dirs are immutable within a round (the
-    * driver writes testdata before the JVM starts), which is the same
-    * lifetime assumption the relation cache above already makes.
+    * Memoized per version of `events.parquet`, like the relation itself.
     */
   private sealed trait TsEnc
   private case object TsNative    extends TsEnc
   private case object TsNativeNtz extends TsEnc
   private case object TsNanos     extends TsEnc
 
-  private val tsKind =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), TsEnc]()
-
   private def tsEncoding(spark: SparkSession, dir: String): TsEnc =
-    tsKind.computeIfAbsent((spark, dir), _ => {
+    GraftSession.memo(spark, "tsEncoding", s"$dir/events.parquet") {
       import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
       val meta = footerMeta(spark, s"$dir/events.parquet")
       val schema = meta.getFileMetaData.getSchema
@@ -220,7 +213,7 @@ object Tables {
           requirePlausibleNanos(meta)
           TsNanos
       }
-    })
+    }
 
   /** Fails loudly when row-group stats say an un-annotated INT64 `ts` cannot
     * be epoch-nanos. Stats-less files pass through on the pre-existing
@@ -255,8 +248,8 @@ object Tables {
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
 
   private def eventsNanos(spark: SparkSession, dir: String): DataFrame =
-    cache.computeIfAbsent((spark, dir, "events#nanos"),
-      _ => spark.read.schema(eventsNanosSchema).parquet(s"$dir/events.parquet"))
+    GraftSession.memo(spark, "events#nanos", s"$dir/events.parquet")(
+      spark.read.schema(eventsNanosSchema).parquet(s"$dir/events.parquet"))
 
   private def nanosToTs(df: DataFrame): DataFrame =
     df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

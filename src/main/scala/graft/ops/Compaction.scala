@@ -70,9 +70,11 @@ object Compaction {
       tiebreak: Seq[org.apache.spark.sql.Column]): (DataFrame, Boolean) = {
     val partitioned = incoming
       .withColumn("day", Scalars.epochToDate(col("uploadtime")))
-    // Only "dataset does not exist yet" maps to None — any other read
-    // failure must abort: treating it as empty would dynamic-overwrite the
-    // touched partitions with incoming-only data and drop compacted history.
+    // Only "dataset does not exist yet" maps to None — checked before the
+    // read, which would otherwise log a FileNotFoundException trace from
+    // Spark's sink-metadata probe. Any other read failure must abort:
+    // treating it as empty would dynamic-overwrite the touched partitions
+    // with incoming-only data and drop compacted history.
     //
     // The touched-partition restriction is a STATIC partition predicate,
     // not a semi-join: the touched set is bounded by the batch's
@@ -85,7 +87,8 @@ object Compaction {
     // falls back to the semi-join (an OR-chain that wide plans worse than
     // one shuffle).
     val existing =
-      try {
+      if (!fsOf(spark, path).exists(new HPath(path))) None
+      else try {
         val ds = spark.read.parquet(path)
         val touched = partitioned.select("format_id", "day").distinct().collect()
         if (touched.nonEmpty && touched.length <= 1000)
@@ -97,11 +100,9 @@ object Compaction {
                        Seq("format_id", "day"), "left_semi"))
       }
       catch {
-        // PATH_NOT_FOUND: no directory; UNABLE_TO_INFER_SCHEMA: dir exists
-        // but holds no parquet yet — both mean "first compaction here"
+        // the dir exists but holds no parquet yet: also a first compaction
         case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("PATH_NOT_FOUND") ||
-             e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => None
+          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => None
       }
     val all = existing match {
       case Some(ex) => ex.selectExpr(partitioned.columns.toIndexedSeq.map(c => s"`$c`"): _*)

@@ -685,16 +685,6 @@ object Similarity {
       .select(col("cluster_id"), col("centroid").cast("array<float>").as("centroid"))
   }
 
-  /** Drop every trained artifact (centroids, PQ codebooks, SQ8 ladders).
-    * [[TrainedArtifactCache]] keys them on the corpus plan, the data
-    * identity of its leaves (file listings, local rows, checkpoint ids) and
-    * the config, so a different path, filter or rewritten-and-re-read file
-    * set is already a miss. Its one limitation: a relation held across a
-    * rewrite of its files (e.g. the one `graft.Tables` caches per
-    * (session, dir)) keeps its first listing, and so its key.
-    */
-  def clearSimilarityMemos(): Unit = TrainedArtifactCache.clear()
-
   // ── ANN index lifecycle ────────────────────────────────────────────
   // A serving pipeline trains an index once and loads it per job; the
   // in-session memos amortize within a JVM, these persist across them.
@@ -1608,7 +1598,7 @@ object Similarity {
     * codeword norm for free — same table machinery.)
     *
     * Defaults from a (m, k, iters) recall sweep vs exact top-5 at
-    * sf0.001/sf0.01 (graft.PqProbe; near-uniform synthetic embeddings —
+    * sf0.001/sf0.01 (near-uniform synthetic embeddings —
     * PQ's worst case, no cluster structure): recall tracks code bits
     * m·log₂k almost regardless of how they're split — 4×16/16 bits 0.10 /
     * 0.13, 8×16/32 bits 0.18 / 0.18, 16×16/64 bits 0.28 / 0.35, with

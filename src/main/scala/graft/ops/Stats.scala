@@ -1191,7 +1191,7 @@ object Stats {
     * construction), then ONE corpus shuffle — groupBy(order) with a
     * map-side-partial collect_set whose per-order set is bounded by the
     * brand universe, never the catalog. collect_set itself dedups, so no
-    * upstream distinct exists (graft.BasketAB measured the self-join
+    * upstream distinct exists (a four-shape A/B measured the self-join
     * shape 1.60 s vs 1.14 s for this one at sf0.1 — and the self-join
     * form re-shuffles the postings twice more at any scale). Pairs
     * explode MAP-SIDE from the sorted basket array (i<j slices — the

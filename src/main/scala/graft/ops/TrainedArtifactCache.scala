@@ -18,9 +18,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *  - a `LocalRelation`: a digest of its rows;
   *  - a `LogicalRDD` (a checkpoint): its RDD id.
   *
-  * A plan with any other kind of leaf trains without caching. A relation
-  * held across a rewrite of its files (such as the one `graft.Tables`
-  * caches per (session, dir)) keeps its first listing, and so its key.
+  * A plan with any other kind of leaf trains without caching. A
+  * `graft.Tables` relation is rebuilt when its file changes, so a rewritten
+  * table is a new listing and a miss.
   */
 object TrainedArtifactCache {
 

@@ -50,6 +50,34 @@ class CompactionSpec extends AnyFunSuite {
     assert(ids == Set("r-1", "r-2"))
   }
 
+  test("first compaction into a path that does not exist yet: rows land, no sink WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val path = tmp() + "/not/yet/there"
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("compaction-spec", null, null, true,
+                                        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName.endsWith("FileStreamSink"))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    try Compaction.compact(spark,
+      batch(Seq(("r1", "f", day1, "v1"), ("r2", "f", day2, "v1"))),
+      path, "replay_id", "uploadtime")
+    finally { root.removeAppender(appender.getName); ctx.updateLoggers(); appender.stop() }
+    val rows = spark.read.parquet(path).select("replay_id", "payload").as[(String, String)]
+      .collect().toSet
+    assert(rows == Set(("r1", "v1"), ("r2", "v1")))
+    assert(warned.isEmpty, s"FileStreamSink logged: ${warned.peek()}")
+  }
+
   test("untouched partitions survive dynamic overwrite") {
     val path = tmp()
     Compaction.compact(spark, batch(Seq(("a", "f", day1, "x"))), path, "replay_id", "uploadtime")

@@ -105,5 +105,10 @@ class DriverTailSpec extends AnyFunSuite {
     for (key <- Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions"))
       assert(offenders("GraftSession.scala", key).isEmpty,
         s"$key belongs to GraftSession")
+    // session-held state lives in GraftSession's one registry: no other
+    // collection may be keyed on a SparkSession
+    for (token <- Seq("[(SparkSession", "[SparkSession]", "[SparkSession,"))
+      assert(offenders("GraftSession.scala", token).isEmpty,
+        s"a collection keyed on SparkSession ($token) belongs to GraftSession")
   }
 }

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The one session policy (derived shuffle width, scoped conf overrides)
-  * and Verify's structured failure records.
+/** The one session policy (derived shuffle width, scoped conf overrides),
+  * the session-state registry and its memos, and Verify's structured
+  * failure records.
   */
 class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -40,6 +41,61 @@ class GraftSessionSpec extends AnyFunSuite {
       GraftSession.withConf(s, key, "1")(throw new IllegalStateException("boom"))
     }
     assert(s.conf.get(key) == "5")
+  }
+
+  test("memo: one build per data version, per session; a throwing build caches nothing") {
+    val path = Files.createTempDirectory("graft-memo").resolve("t.bin")
+    Files.writeString(path, "a")
+    var builds = 0
+    def get(s: SparkSession) =
+      GraftSession.memo(s, "spec", path.toString) { builds += 1; builds }
+    assert(get(spark) == 1 && get(spark) == 1)
+    Files.writeString(path, "bbb")
+    assert(get(spark) == 2 && get(spark) == 2, "a changed file must rebuild, once")
+    assert(get(spark.newSession()) == 3, "sessions do not share memos")
+    intercept[IllegalStateException] {
+      GraftSession.memo(spark, "spec-throw", path.toString)(
+        throw new IllegalStateException("boom"))
+    }
+    assert(GraftSession.memo(spark, "spec-throw", path.toString)(42) == 42)
+    // a directory is identified by its listing
+    val dir = Files.createTempDirectory("graft-memo-dir")
+    def inDir() = GraftSession.memo(spark, "spec-dir", dir.toString) { builds += 1; builds }
+    val first = inDir()
+    assert(inDir() == first)
+    Files.writeString(dir.resolve("part-1"), "x")
+    assert(inDir() == first + 1)
+  }
+
+  test("a table rewritten under one path is re-read through Tables with no clear call") {
+    val src = s"${TestSpark.sfDir}/orders.parquet"
+    val dir = Files.createTempDirectory("graft-rewrite")
+    Files.copy(Paths.get(src), dir.resolve("orders.parquet"))
+    val n = spark.read.parquet(src).count()
+    assert(Tables.orders(spark, dir.toString).count() == n)
+    // rewrite in place as Spark writes it (the file becomes a directory)
+    spark.read.parquet(src).union(spark.read.parquet(src))
+      .write.mode("overwrite").parquet(dir.resolve("orders.parquet").toString)
+    assert(Tables.orders(spark, dir.toString).count() == 2 * n)
+    spark.read.parquet(src).limit(7)
+      .write.mode("overwrite").parquet(dir.resolve("orders.parquet").toString)
+    assert(Tables.orders(spark, dir.toString).count() == 7)
+  }
+
+  test("the registry drops the state of a session whose SparkContext stopped") {
+    // a second SparkContext cannot start in this JVM, so a child JVM stops
+    // one session, builds another and reports what the registry holds
+    import scala.sys.process._
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
+      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
+      Seq("-Xmx1g", "-cp", sys.props("java.class.path"),
+          "graft.SessionRegistryMain", TestSpark.sfDir)
+    val out = new StringBuilder
+    val exit = Process(cmd).!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    assert(exit == 0, out.toString)
+    assert(out.toString.linesIterator.contains(
+      "REGISTRY held_first=false held_second=true size=1"), out.toString)
   }
 
   test("Verify writes one failures.json record per throwing query, none on a green run") {

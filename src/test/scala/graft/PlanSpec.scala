@@ -383,7 +383,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("copurchase_lift shuffles the corpus exactly once (basket aggregate)") {
-    // the adopted BasketAB shape: one groupBy(okey) exchange; pairs
+    // the adopted four-shape A/B winner: one groupBy(okey) exchange; pairs
     // explode map-side from the basket array, counts/totals broadcast —
     // a second corpus-sized exchange would mean the self-join form crept
     // back (the measured-worse 1.60 s shape)

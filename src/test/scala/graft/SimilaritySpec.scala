@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Similarity
+import graft.ops.{Similarity, TrainedArtifactCache}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions.cosineSim
 import org.scalatest.funsuite.AnyFunSuite
@@ -183,9 +183,9 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("semanticDedup recall bound: near-dup band complete, weak band pinned") {
-    // The SemDeDup trade quantified (SCALE.md "Semantic-dedup recall",
-    // graft.SemRecallProbe): cross-cluster pairs are invisible by design,
-    // and that loss is confined to the weakly-similar band. Measured at
+    // The SemDeDup trade quantified (SCALE.md "Semantic-dedup recall"):
+    // cross-cluster pairs are invisible by design, and that loss is
+    // confined to the weakly-similar band. Measured at
     // 1×/3×/9× of the sf0.1 corpus: cos≥0.8 pair recall = 1.0 at every
     // scale and config, cos≥0.4 recall ≈ 0.15–0.31. Deterministic
     // fixed-point pipeline ⇒ the test-corpus numbers are exact pins, not
@@ -681,7 +681,7 @@ class SimilaritySpec extends AnyFunSuite {
     def run[A](f: => org.apache.spark.sql.DataFrame): Seq[String] =
       f.collect().map(_.toString).sorted.toSeq
     // cold: every trained artifact rebuilt from the corpus
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
     val pqCold = run(Similarity.pqTopK(qs, corpus, 4, m = 8, codesPerBook = 8))
     val ivfpqCold = run(Similarity.ivfpqRecall(qs, corpus, 4,
       nCentroids = 8, nProbe = 3, m = 8, codesPerBook = 8))
@@ -693,7 +693,7 @@ class SimilaritySpec extends AnyFunSuite {
     def ivfpq = run(Similarity.ivfpqRecall(qs, corpus, 4,
       nCentroids = 8, nProbe = 3, m = 8, codesPerBook = 8))
     def pq = run(Similarity.pqTopK(qs, corpus, 4, m = 8, codesPerBook = 8))
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
     Similarity.pqCodebooks(corpus, m = 8, k = 8, iters = 1)
     Similarity.kmeansCentroids(corpus, 8, 1)
     val (afterSeq, seqJobs) = TestSpark.countingJobs(ivfpq)
@@ -703,13 +703,13 @@ class SimilaritySpec extends AnyFunSuite {
     assert(pq == pqCold)
     // and the reverse direction: the fused trainer's artifacts serve the
     // sequential-surface query identically
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
     ivfpq
     val (afterFused, fusedJobs) = TestSpark.countingJobs(pq)
     assert(afterFused == pqCold)
     assert(fusedJobs == TestSpark.countingJobs(pq)._2,
       "fused-trained books must serve the sequential surface")
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
   }
 
   /** Two 48 × 8 corpora of one schema whose vectors differ. */
@@ -734,12 +734,12 @@ class SimilaritySpec extends AnyFunSuite {
     */
   private def assertNotStale(first: => org.apache.spark.sql.DataFrame,
                              second: => org.apache.spark.sql.DataFrame): Unit = {
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
     val firstArtifacts = trainedArtifacts(first)
     val served = trainedArtifacts(second)
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
     val cold = trainedArtifacts(second)
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
     assert(firstArtifacts != cold, "the two corpora must train differently")
     assert(served == cold, s"stale artifacts served:\n$served\nvs cold\n$cold")
   }
@@ -771,7 +771,7 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = tempDir() + "/c"
     randomCorpus(3).write.parquet(dir)
     for (corpus <- Seq(spark.read.parquet(dir), randomCorpus(3))) {
-      Similarity.clearSimilarityMemos()
+      TrainedArtifactCache.clear()
       val first = trainedArtifacts(corpus)
       val queries = corpus.filter($"vec_id" < 4)
       val jobs = TestSpark.countingJobs {
@@ -784,6 +784,6 @@ class SimilaritySpec extends AnyFunSuite {
       assert(sq8Jobs == TestSpark.countingJobs(queries.collect())._2)
       assert(trainedArtifacts(corpus) == first)
     }
-    Similarity.clearSimilarityMemos()
+    TrainedArtifactCache.clear()
   }
 }

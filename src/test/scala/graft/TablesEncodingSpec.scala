@@ -76,6 +76,24 @@ class TablesEncodingSpec extends AnyFunSuite {
     }
   }
 
+  test("an events file rewritten to another encoding is re-classified in the same session") {
+    val expected = microsVals.zipWithIndex.map { case (us, i) => i.toLong -> us }.toMap
+    val dir = withOutputTsType("TIMESTAMP_MICROS") {
+      writeDir("rewrite")(_.withColumn("ts", timestamp_micros(col("us"))).drop("us"))
+    }
+    assert(readMicros(dir) == expected, "native micros before the rewrite")
+    // same path, now un-annotated INT64 nanos: a memo of the first footer
+    // would keep the micros decode (or the stale file listing)
+    rows.withColumn("ts", col("us") * 1000L).drop("us")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    assert(Tables.events(spark, dir).schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    assert(readMicros(dir) == expected, "INT64 nanos after the rewrite")
+    val got = Tables.eventsSinceMicros(spark, dir, microsVals(2))
+      .select(unix_micros(col("ts"))).as[Long].collect().sorted.toSeq
+    assert(got == microsVals.drop(3))
+  }
+
   private def fixtureDir(resource: String, as: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-tsenc-real").toString
     val in = getClass.getResourceAsStream(s"/graft/$resource")

@@ -31,9 +31,13 @@ object Bench {
       else catalog
     // each query's first failure, reported next to its timing
     val failures = scala.collection.mutable.LinkedHashMap[String, QueryFailure]()
+    // generated-code compiles of each run of each query, in pass order: a
+    // query runs alone, so the JVM-wide counter brackets it
+    val queryCompiles = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
     // returns per-query (seconds, succeeded)
     def once(qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
              = selected): Map[String, (Double, Boolean)] = qs.map { case (name, fn) =>
+      val c0 = ops.Metrics.compiles()
       val t0 = System.nanoTime()
       // noop sink: every output column is fully computed (count() would let
       // Catalyst prune projection-only queries to a bare scan), no I/O cost.
@@ -49,6 +53,7 @@ object Bench {
       // later timings don't pay earlier queries' storage + GC pressure
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      queryCompiles(name) = queryCompiles.getOrElse(name, Seq()) :+ (ops.Metrics.compiles() - c0).count
       name -> ((dt, ok))
     }
     // three passes, per-query minimum over *successful* runs: suppresses
@@ -76,7 +81,14 @@ object Bench {
     }
     calibOnce() // JIT warm, untimed
     val calibs = scala.collection.mutable.ArrayBuffer[Double]()
-    val passes = Seq.fill(3) { calibs += calibOnce(); once() }
+    val passCompiles = scala.collection.mutable.ArrayBuffer[ops.Metrics.Compiles]()
+    val passes = Seq.fill(3) {
+      calibs += calibOnce()
+      val c0 = ops.Metrics.compiles()
+      val pass = once()
+      passCompiles += ops.Metrics.compiles() - c0
+      pass
+    }
     calibs += calibOnce()
     val multiPass = selected.keys.map { k =>
       val ok = passes.map(_(k)).filter(_._2).map(_._1)
@@ -282,7 +294,19 @@ object Bench {
       s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
       s""""shuffle_partitions":${spark.conf.get(GraftSession.ShufflePartitions)},""" +
       s""""floor_mode":${sys.env.contains("SPARK_GRAFT_BENCH_FLOOR")}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"failures":${QueryFailure.jsonArray(failures.values.toSeq)},"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,"queries":$qs,"sf":"$sfDir"}"""
+    // Compile once per session (GraftSession.CodegenCacheEntries): the
+    // warm passes should compile next to nothing. Totals count the whole
+    // JVM, warm-up and calibration included.
+    val runCompiles = ops.Metrics.compiles()
+    val queryCompilesJson = queryCompiles
+      .map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
+    val codegenJson =
+      s""""codegen":{"cache_entries":${GraftSession.codegenCacheBound().getOrElse(-1L)},""" +
+      f""""compiles":${runCompiles.count},"compile_ms":${runCompiles.ms}%.1f,""" +
+      s""""pass_compiles":${passCompiles.map(_.count).mkString("[", ",", "]")},""" +
+      s""""pass_compile_ms":${passCompiles.map(c => f"${c.ms}%.1f").mkString("[", ",", "]")},""" +
+      s""""query_compiles":$queryCompilesJson}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"failures":${QueryFailure.jsonArray(failures.values.toSeq)},"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,$codegenJson,"queries":$qs,"sf":"$sfDir"}"""
     // stdout goes through sbt's logger ("[info] "-prefixed), which breaks
     // line-oriented JSON parsing downstream — also write the result to a file
     // (override path via SPARK_GRAFT_BENCH_OUT; default = cwd/bench_out.json).

@@ -16,7 +16,22 @@ import org.apache.spark.sql.SparkSession
   *    Never the 200 default for local/small-cluster runs, and never a
   *    constant tuned on one host's core count;
   *  - [[GraftExtensions]] wired so `cosine_similarity(a, b)` is callable
-  *    from SQL.
+  *    from SQL;
+  *  - compile once per session: Spark's generated-class cache holds
+  *    [[CodegenCacheEntries]] classes, not the 100 default, so a repeated
+  *    plan reuses its compiled class instead of evicting it and running
+  *    Janino again. The cache is static and JVM-wide, built once from the
+  *    session active when Spark first generates code; [[arm]] warns (see
+  *    [[codegenCacheWarning]]) when the live cache is smaller. Artifact
+  *    isolation is off for the same reason: the cache is keyed by class
+  *    loader, and an isolated session, like the clone each streaming query
+  *    runs in, gets its own executor class loader, so every streaming query
+  *    compiled its classes again. The engine adds no session artifacts
+  *    (`addArtifact`); with isolation off, any a caller adds are shared
+  *    by the JVM's sessions. Whole-stage classes are named without their
+  *    stage id: adaptive execution numbers stages in the order they are
+  *    planned, which can change between runs of one query, and the id in
+  *    the class name made the same code a different class.
   *
   * Every session path goes through [[arm]]: [[local]], Bench, Verify,
   * JobAudit, CalibProbe, the test session and the benchmark harness, so the
@@ -28,12 +43,25 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   val ShufflePartitions = "spark.sql.shuffle.partitions"
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Generated classes the codegen cache holds. A full 219-query Verify at
+    * sf0.1, the largest session the repo runs, compiles 2317 distinct
+    * classes (2526 with stage ids in class names); this is the larger count
+    * plus a ~58 % margin for catalog growth. A cached class costs about
+    * 32 KB of heap and 10 KB of metaspace (SCALE.md "Compile once per
+    * session").
+    */
+  val CodegenCacheEntries = 4000
 
   /** The engine's standard configuration, exposed for audit/tests. */
   val conf: Map[String, String] = Map(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.extensions" -> "graft.GraftExtensions")
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    CodegenCacheKey -> CodegenCacheEntries.toString,
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** Builder with the standard configuration applied; call-site `.config`
     * calls layered after this override individual keys.
@@ -81,6 +109,7 @@ object GraftSession {
   private final class State {
     val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val truncation = new java.util.concurrent.atomic.AtomicReference[String](null)
+    val codegenWarning = new java.util.concurrent.atomic.AtomicReference[String](null)
     val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), Memo]()
   }
 
@@ -158,11 +187,42 @@ object GraftSession {
     Option(stateOf(spark).truncation.get)
   def clearBoundTruncation(spark: SparkSession): Unit = stateOf(spark).truncation.set(null)
 
+  // ── codegen cache ────────────────────────────────────────────────────
+  // Spark keeps compiled classes in one LRU per JVM, sized once from
+  // `spark.sql.codegen.cache.maxEntries` when CodeGenerator first loads.
+  // No later conf changes it, so arm can only detect an undersized cache.
+
+  /** The entry bound of this JVM's generated-class cache. Reading it first
+    * builds the cache, from the active session's conf, if no code was
+    * generated yet. None if Spark's cache internals cannot be read.
+    */
+  private[graft] def codegenCacheBound(): Option[Long] = scala.util.Try {
+    def field(o: AnyRef, name: String): AnyRef = {
+      val f = Iterator.iterate[Class[_]](o.getClass)(_.getSuperclass)
+        .takeWhile(_ != null).flatMap(_.getDeclaredFields).find(_.getName == name).get
+      f.setAccessible(true)
+      f.get(o)
+    }
+    // CodeGenerator.cache → its Guava cache → the LocalCache → maxWeight
+    Seq("cache", "cache", "localCache", "maxWeight")
+      .foldLeft[AnyRef](org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator)(field)
+      .asInstanceOf[Long]
+  }.toOption
+
+  /** Why `spark` may compile the same plan more than once: the live codegen
+    * cache holds fewer than [[CodegenCacheEntries]] classes (the session
+    * was built without [[builder]], or an earlier session in the JVM sized
+    * the cache first), or its bound could not be read. Set by [[arm]].
+    */
+  def codegenCacheWarning(spark: SparkSession): Option[String] =
+    Option(stateOf(spark).codegenWarning.get)
+
   /** Apply the session policy to `spark` and register the truncation
     * watcher (idempotent): the shuffle width becomes the session's
-    * `defaultParallelism` unless already set explicitly. [[local]] and every
-    * harness main arm their sessions; arm any long-lived application
-    * session the same way. No I/O and no job.
+    * `defaultParallelism` unless already set explicitly, and an undersized
+    * codegen cache is recorded and logged once ([[codegenCacheWarning]]).
+    * [[local]] and every harness main arm their sessions; arm any
+    * long-lived application session the same way. No I/O and no job.
     */
   def arm(spark: SparkSession): SparkSession = {
     if (!spark.sessionState.conf.contains(ShufflePartitions))
@@ -179,7 +239,17 @@ object GraftSession {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     val state = stateOf(spark)
-    if (state.armed.compareAndSet(false, true))
+    if (state.armed.compareAndSet(false, true)) {
+      val bound = codegenCacheBound()
+      if (!bound.exists(_ >= CodegenCacheEntries)) {
+        val msg = bound.fold("the codegen cache's bound could not be read")(b =>
+          s"the codegen cache holds $b classes, below the policy's " +
+          s"$CodegenCacheEntries") + s"; $CodegenCacheKey is static and JVM-wide, " +
+          "so plans may be compiled again on every run — build the first " +
+          "session of the JVM with GraftSession.builder()"
+        state.codegenWarning.set(msg)
+        System.err.println(s"[graft] WARN: $msg")
+      }
       spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(funcName: String,
                                qe: org.apache.spark.sql.execution.QueryExecution,
@@ -198,6 +268,7 @@ object GraftSession {
                                qe: org.apache.spark.sql.execution.QueryExecution,
                                exception: Exception): Unit = ()
       })
+    }
     spark
   }
 }

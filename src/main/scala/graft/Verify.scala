@@ -35,6 +35,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val c = ops.Metrics.compiles()
+    System.err.println(f"[verify] codegen compiles=${c.count} compile_ms=${c.ms}%.0f " +
+      s"cache_entries=${GraftSession.codegenCacheBound().getOrElse(-1L)}")
     spark.stop()
   }
 

@@ -64,4 +64,17 @@ object Metrics {
     spark.listenerManager.register(t)
     t
   }
+
+  /** Generated-code compiles in this JVM so far: Janino compiles (the count
+    * of `CodegenMetrics`' compilation-time histogram) and their total
+    * milliseconds (CodeGenerator's nanosecond accumulator: the histogram
+    * keeps whole ms per compile in a sampled reservoir, so its sum is not
+    * exact). JVM-wide: subtract two readings around a span that runs alone.
+    */
+  final case class Compiles(count: Long, ms: Double) {
+    def -(o: Compiles): Compiles = Compiles(count - o.count, ms - o.ms)
+  }
+  def compiles(): Compiles = Compiles(
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
 }

@@ -7,13 +7,29 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The one session policy (derived shuffle width, scoped conf overrides),
-  * the session-state registry and its memos, and Verify's structured
-  * failure records.
+/** The one session policy (derived shuffle width, compile once, scoped conf
+  * overrides), the session-state registry and its memos, and Verify's
+  * structured failure records.
   */
 class GraftSessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import GraftSession.ShufflePartitions
+
+  /** stdout of `main` run in a child JVM on the test classpath, for what
+    * one JVM can do only once (a second SparkContext, sizing the codegen
+    * cache); fails the test on a non-zero exit.
+    */
+  private def childJvm(main: String, args: String*): String = {
+    import scala.sys.process._
+    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
+      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
+      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), main) ++ args
+    val out = new StringBuilder
+    val exit = Process(cmd).!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+    assert(exit == 0, out.toString)
+    out.toString
+  }
 
   test("an armed session's shuffle width is its defaultParallelism") {
     val parallelism = spark.sparkContext.defaultParallelism.toString
@@ -28,6 +44,39 @@ class GraftSessionSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.set(ShufflePartitions, "7")
     assert(GraftSession.arm(s).conf.get(ShufflePartitions) == "7")
+  }
+
+  test("the session policy sizes the codegen cache and keeps generated code reusable") {
+    assert(GraftSession.CodegenCacheEntries == 4000)
+    assert(GraftSession.conf(GraftSession.CodegenCacheKey) == "4000")
+    assert(GraftSession.conf("spark.sql.artifact.isolation.enabled") == "false")
+    assert(GraftSession.conf("spark.sql.codegen.useIdInClassName") == "false")
+    // the test session was the JVM's first, so it sized the cache
+    assert(GraftSession.codegenCacheBound().contains(4000L))
+    assert(GraftSession.codegenCacheWarning(spark).isEmpty)
+  }
+
+  test("a repeated catalog query compiles no generated class the second time") {
+    val queries = SparkEntry.queries.toMap
+    // a batch query with many stages; a multi-distinct profile, whose
+    // Expand must read attribute ids that do not change per call; and a
+    // streaming query, whose cloned session must share the class loader
+    for (name <- Seq("curation_pipeline", "orders_column_profile", "stream_dedup_parity")) {
+      def run(): Unit =
+        queries(name)(spark, TestSpark.sfDir).write.mode("overwrite").format("noop").save()
+      run()
+      val before = ops.Metrics.compiles()
+      run()
+      assert((ops.Metrics.compiles() - before).count == 0, s"$name compiled again")
+    }
+  }
+
+  test("arm records a warning when the JVM's codegen cache is below the policy") {
+    // the cache is sized once per JVM, so a child JVM arms a session built
+    // without the policy, then a policy session that comes too late
+    val lines = childJvm("graft.CodegenCacheMain").linesIterator.toSet
+    assert(lines.contains("CODEGEN user bound=100 warned=true"), lines)
+    assert(lines.contains("CODEGEN policy bound=100 warned=true"), lines)
   }
 
   test("withConf restores the previous value, or its absence, also when the body throws") {
@@ -85,17 +134,9 @@ class GraftSessionSpec extends AnyFunSuite {
   test("the registry drops the state of a session whose SparkContext stopped") {
     // a second SparkContext cannot start in this JVM, so a child JVM stops
     // one session, builds another and reports what the registry holds
-    import scala.sys.process._
-    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java") ++
-      jvm.getInputArguments.asScala.filterNot(_.startsWith("-Xmx")) ++
-      Seq("-Xmx1g", "-cp", sys.props("java.class.path"),
-          "graft.SessionRegistryMain", TestSpark.sfDir)
-    val out = new StringBuilder
-    val exit = Process(cmd).!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
-    assert(exit == 0, out.toString)
-    assert(out.toString.linesIterator.contains(
-      "REGISTRY held_first=false held_second=true size=1"), out.toString)
+    val out = childJvm("graft.SessionRegistryMain", TestSpark.sfDir)
+    assert(out.linesIterator.contains(
+      "REGISTRY held_first=false held_second=true size=1"), out)
   }
 
   test("Verify writes one failures.json record per throwing query, none on a green run") {

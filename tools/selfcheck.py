@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Self-check harness mimicking the driver's DuckDB-oracle compare.
 
-Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir> [--exact]
+Usage: python3 tools/selfcheck.py [--exact] <sfDir> <verifyOutDir>
+(--exact may stand in any position)
 
 --exact drops the 1e-9 float tolerance: the driver's oracle compare hashes
 typed values bit-for-bit, so a 16th-significant-digit divergence (e.g. a
@@ -30,7 +31,8 @@ def norm_cell(v):
         return v.isoformat()
     return v
 
-EXACT = "--exact" in sys.argv  # driver parity: its hash compare has NO tolerance
+USAGE = "usage: python3 tools/selfcheck.py [--exact] <sfDir> <verifyOutDir>"
+EXACT = False  # --exact: driver parity, its hash compare has NO tolerance
 
 def cmp_cell(a, b):
     a, b = norm_cell(a), norm_cell(b)
@@ -119,5 +121,18 @@ def main(sf_dir, out_dir):
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
     return 1 if n_fail else 0
 
+def parse_args(argv):
+    """(exact, [sfDir, verifyOutDir]) from argv, --exact in any position;
+    None for an unknown flag or a wrong count of positional arguments."""
+    flags = [a for a in argv if a.startswith("-")]
+    positional = [a for a in argv if not a.startswith("-")]
+    if any(f != "--exact" for f in flags) or len(positional) != 2:
+        return None
+    return "--exact" in flags, positional
+
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    parsed = parse_args(sys.argv[1:])
+    if parsed is None:
+        sys.exit(USAGE)
+    EXACT, (sf_dir, out_dir) = parsed
+    sys.exit(main(sf_dir, out_dir))

@@ -1,6 +1,33 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+/** The catalog benchmark: every selected query ([[RunRecord.selected]]) run
+  * in three passes, one [[RunRecord]] per query per pass, timed against the
+  * pinned DuckDB comparator (BASELINE.md). Prints one JSON contract line
+  * and writes it to `SPARK_GRAFT_BENCH_OUT` (default `bench_out.json`);
+  * the records go to `bench_records.json` next to it.
+  */
 object Bench {
+  /** Cores of the host the calibration pin was measured on: the probe's
+    * fixed 32-partition range job times the core count as much as the
+    * window, so the pin corrects only a run of the same width.
+    */
+  val CalibPinCores = 32
+
+  /** Host-speed probe: a fixed deterministic job, an ALU loop plus a
+    * full-width parquet scan-and-hash, because the host's slowdown windows
+    * have hit memory and decompression bandwidth without showing in a
+    * pure-ALU probe. Returns seconds.
+    */
+  def calibOnce(spark: SparkSession, sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 2000000000L, 1L, 32).selectExpr("bit_xor(xxhash64(id))").collect()
+    Tables.lineitem(spark, sfDir).selectExpr("bit_xor(hash(*))").collect()
+    Tables.eventsRaw(spark, sfDir).selectExpr("bit_xor(hash(*))").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -14,107 +41,68 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     Tables.lineitem(spark, sfDir).limit(1000).groupBy("l_returnflag").count().collect()
     Tables.events(spark, sfDir).limit(1000).count()
-    // optional comma-separated subset for local iteration (full suite when unset)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val catalog = SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    // Floor mode (SPARK_GRAFT_BENCH_FLOOR=1): run the SAME harness loop over
-    // one trivial single-task plan per catalog query. The resulting total is
-    // the per-query session floor — scheduler + codegen + noop-commit cost
-    // that every query pays regardless of its data work. BASELINE.md cites
-    // this measurement when interpreting the vs_baseline ratio at tiny SF.
-    val selected =
-      if (sys.env.contains("SPARK_GRAFT_BENCH_FLOOR"))
-        catalog.map { case (n, _) =>
-          n -> ((s: SparkSession, _: String) => s.range(1).toDF("id"))
-        }
-      else catalog
-    // each query's first failure, reported next to its timing
-    val failures = scala.collection.mutable.LinkedHashMap[String, QueryFailure]()
-    // generated-code compiles of each run of each query, in pass order: a
-    // query runs alone, so the JVM-wide counter brackets it
-    val queryCompiles = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
-    // returns per-query (seconds, succeeded)
-    def once(qs: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-             = selected): Map[String, (Double, Boolean)] = qs.map { case (name, fn) =>
-      val c0 = ops.Metrics.compiles()
-      val t0 = System.nanoTime()
-      // noop sink: every output column is fully computed (count() would let
-      // Catalyst prune projection-only queries to a bare scan), no I/O cost.
-      val ok =
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-        } catch { case e: Throwable =>
-          failures.getOrElseUpdate(name, QueryFailure(name, e)); false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // isolate queries from each other: drop caches / localCheckpoint
-      // blocks a query may have left behind (iterative ops checkpoint), so
-      // later timings don't pay earlier queries' storage + GC pressure
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      queryCompiles(name) = queryCompiles.getOrElse(name, Seq()) :+ (ops.Metrics.compiles() - c0).count
-      name -> ((dt, ok))
-    }
-    // three passes, per-query minimum over *successful* runs: suppresses
-    // transient host noise without letting a fast failure masquerade as the
-    // best time; a query that fails every pass reports -1, and each query
-    // that failed in any pass has one record in "failures". Three, not two:
-    // the suite takes minutes end to end, and the bench host shows
-    // multi-minute degradation windows — a stall that covers the same query
-    // in two consecutive passes sticks in a 2-pass min (observed:
-    // retry_queue 0.56 s in a clean run, 3.1 s in both passes of a degraded
-    // one). The DuckDB comparator is measured with the same 3-pass-min
-    // protocol (tools/pin_baseline.py).
-    // Host-speed probe (see "Host-speed calibration" below): a fixed
-    // deterministic job timed around each pass, so the factor reflects the
-    // same wall-clock window the suite actually ran in. Blended profile —
-    // an ALU loop plus a full-width parquet scan-and-hash — because the
-    // host's slowdown windows have hit memory/decompression bandwidth
-    // without showing in a pure-ALU probe.
-    def calibOnce(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 2000000000L, 1L, 32).selectExpr("bit_xor(xxhash64(id))").collect()
-      Tables.lineitem(spark, sfDir).selectExpr("bit_xor(hash(*))").collect()
-      Tables.eventsRaw(spark, sfDir).selectExpr("bit_xor(hash(*))").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibOnce() // JIT warm, untimed
+    // Floor mode (SPARK_GRAFT_BENCH_FLOOR=1): the same loop over one trivial
+    // single-task plan per catalog query, so the total is the per-query
+    // session floor (scheduler, codegen, noop commit) that every query pays.
+    val floorMode = sys.env.contains("SPARK_GRAFT_BENCH_FLOOR")
+    val selected: Map[String, RunRecord.Query] =
+      if (floorMode) RunRecord.selected().map { case (n, _) =>
+        n -> ((s: SparkSession, _: String) => s.range(1).toDF("id"))
+      }
+      else RunRecord.selected()
+    def once(qs: Map[String, RunRecord.Query] = selected): Seq[RunRecord] =
+      qs.toSeq.map { case (name, fn) =>
+        // noop sink: every output column is fully computed (count() would let
+        // Catalyst prune projection-only queries to a bare scan), no I/O cost
+        val r = RunRecord.run(spark, name, fn(spark, sfDir),
+          _.write.mode("overwrite").format("noop").save())
+        // isolate queries from each other: drop the caches and checkpoint
+        // blocks a query left behind, so later timings don't pay earlier
+        // queries' storage and GC pressure
+        spark.catalog.clearCache()
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        r
+      }
+    // Three passes, per-query minimum over successful runs: a fast failure
+    // never masquerades as the best time, and a query that fails every pass
+    // reports -1. Three, not two: the host has multi-minute slow windows,
+    // and one that covers a query in two consecutive passes sticks in a
+    // 2-pass min. The DuckDB comparator is measured with the same protocol
+    // (tools/pin_baseline.py). A probe brackets each pass, so the host
+    // factor describes the window the suite ran in.
+    calibOnce(spark, sfDir) // JIT warm, untimed
     val calibs = scala.collection.mutable.ArrayBuffer[Double]()
     val passCompiles = scala.collection.mutable.ArrayBuffer[ops.Metrics.Compiles]()
     val passes = Seq.fill(3) {
-      calibs += calibOnce()
+      calibs += calibOnce(spark, sfDir)
       val c0 = ops.Metrics.compiles()
       val pass = once()
       passCompiles += ops.Metrics.compiles() - c0
       pass
     }
-    calibs += calibOnce()
-    val multiPass = selected.keys.map { k =>
-      val ok = passes.map(_(k)).filter(_._2).map(_._1)
-      k -> (if (ok.isEmpty) -1.0 else ok.min)
-    }.toMap
+    calibs += calibOnce(spark, sfDir)
+    def okTimes(k: String, rs: Seq[RunRecord]): Seq[Double] =
+      rs.filter(r => r.query == k && r.failure.isEmpty).map(_.seconds)
     // Selective extra pass: when a query's best and worst still disagree
-    // badly, a stall may cover all three — one targeted retry pins it.
+    // badly, a stall may cover all three, and one targeted retry pins it.
     val noisy = selected.keySet.filter { k =>
-      val ts = passes.map(_(k)).filter(_._2).map(_._1)
+      val ts = okTimes(k, passes.flatten)
       ts.nonEmpty && ts.max > 1.5 * ts.min && ts.max > 1.0
     }
-    val p4 = if (noisy.nonEmpty) once(selected.view.filterKeys(noisy).toMap) else Map.empty[String, (Double, Boolean)]
-    val results = multiPass.map { case (k, best) =>
-      k -> (p4.get(k) match {
-        case Some((t4, true)) if best >= 0 => math.min(best, t4)
-        case _ => best
-      })
-    }
+    val retry = if (noisy.nonEmpty) once(selected.view.filterKeys(noisy).toMap) else Nil
+    val records = passes.flatten ++ retry
+    val results = selected.keys.map { k =>
+      val ts = okTimes(k, passes.flatten)
+      k -> (if (ts.isEmpty) -1.0 else (ts ++ okTimes(k, retry)).min)
+    }.toMap
+    // each query's first failure, in run order
+    val failures = scala.collection.mutable.LinkedHashMap[String, QueryFailure]()
+    records.flatMap(_.failure).foreach(f => failures.getOrElseUpdate(f.query, f))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    // The DuckDB comparator covers exactly the oracle'd queries; catalog
-    // entries without an oracle would have no denominator, so the headline
-    // ratio is computed over the comparable subset and the rest is itemized.
-    // (As of round 5 every catalog entry carries an oracle — the partition
-    // is kept so a future non-SQL-expressible op degrades gracefully.)
+    // The DuckDB comparator covers the oracle'd queries; the headline ratio
+    // is over that subset and the rest is itemized under "noncomparable".
     val (comparable, noncomparable) = results.partition {
       case (k, _) => SparkEntry.oracleSql.contains(k)
     }
@@ -122,142 +110,50 @@ object Bench {
     val noncompJson = noncomparable.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // Work-asymmetric rows (BASELINE.md "Work asymmetry"): their oracles
-    // verify the RESULT relationally while the Spark side does categorically
-    // more work by design — compaction_roundtrip writes+rewrites+rereads a
-    // partitioned dataset where the twin runs one aggregate;
-    // stream_daily_parity boots a real micro-batch streaming execution
-    // where the twin is the batch aggregate. They stay in the primary
-    // ratio (they ARE catalog queries); vs_baseline_symmetric is the
-    // like-for-like diagnostic over the rows where both engines execute
-    // comparable plans.
+    // check the result relationally while the Spark side does categorically
+    // more work by design (real streaming executions, write-and-reread
+    // roundtrips, one-time bucketed staging). They stay in the primary
+    // ratio; vs_baseline_symmetric_quiet is the like-for-like diagnostic.
     val asymmetric = Set("compaction_roundtrip", "glob_directory_scan", "stream_daily_parity",
-      "json_replay_roundtrip",
-      // real throttled micro-batch execution (3 triggers + checkpoint dir)
-      // vs a pure range() arithmetic twin
-      "throttled_stream_stats",
-      // real watermarked-dedup micro-batch execution vs a batch DISTINCT
-      "stream_dedup_parity",
-      // real flatMapGroupsWithState three-trigger execution vs closed-form
-      // CASE arithmetic
-      "stream_retry_parity",
-      // real two-data-trigger stream-stream interval-join execution (join
-      // state retained across micro-batches, plus the closing
-      // watermark-advance batch) vs a batch range-join twin
-      "stream_context_parity",
-      // real two-trigger session-window execution (sentinel watermark
-      // closure) vs a batch gaps-and-islands twin
-      "stream_session_parity",
-      // bucketed-table staging writes on first invocation; the twin never
-      // writes (steady-state reads are symmetric, the 3-pass min usually
-      // lands there, but the stage can be charged to pass 1 in a cold run)
+      "json_replay_roundtrip", "throttled_stream_stats", "stream_dedup_parity",
+      "stream_retry_parity", "stream_context_parity", "stream_session_parity",
       "bucketed_join_counts")
     val symmetricSec = comparable.collect {
       case (k, v) if !asymmetric.contains(k) => v
     }.sum
     val asymSec = comparableSec - symmetricSec
-    // Pinned comparator (BASELINE.md "Measured comparator"): the DuckDB
-    // oracle-suite total on the identical sf0.1 parquet, 32 threads,
-    // 3-pass per-query min. Override via env when re-measuring. The pin and
-    // calib_quiet below are measured in the SAME probe-bracketed window
-    // (BASELINE.md round-4 re-pin) so the host-factor correction is
-    // coherent: a bench run in a slower window scales the bar to what
-    // DuckDB would have measured there.
-    // 75.67 = the round-12 measured 218-query pin (BASELINE.md "Round-12
-    // quiet-window re-pin": median of 5 process runs 75.7/76.8/78.2/
-    // 74.4/75.1 — range ≤1.05×, no degraded pass — in one probe-bracketed
-    // window, opens 0.823/0.873 and CLOSE 0.788 on the CalibProbe scale,
-    // i.e. the window held quiet through the pin; landed unattended by
-    // tools/quiet_pin_loop.py). ZERO increment layers: every one of the
-    // 218 twins was measured in this single window. Composition
-    // cross-check: the round-10 205-query bar 76.8 (whose window closed
-    // ~7% warm, flagged "may read ~5% high") corrected to quiet ≈73 plus
-    // the 13 twins added since (solo ≈+2.9 s) composes to ≈75.9 — the
-    // adopted median sits right on it. `baseline_per_query.json` carries
-    // the same window. Lower bar than the 205-query 76.8 despite 13 more
-    // rows because THIS window was genuinely quiet end to end — the
-    // conservative direction (a lower bar only ever raises vs_baseline).
-    // 58.13 = the round-14 MEASURED 219-query quiet re-pin (BASELINE.md
-    // "Round-14 quiet re-pin"): median of 5 process runs 58.3/58.5/58.1/
-    // 57.9/57.5 — range 1.017×, no degraded pass — in one probe-bracketed
-    // window, opens 0.635/0.651 and close 0.626 on the CalibProbe scale
-    // (the quietest bracketed window in the repo's history; landed
-    // unattended by tools/quiet_pin_loop.py, attempt 3 after two
-    // bracket-rejected attempts at 67.1-aborted and 60.1/range-1.125).
-    // ZERO composed increments: every one of the 219 twins was measured
-    // in this single window, replacing the round-13 composed 75.8 bar
-    // (75.67 r12 pin + one solo-timed twin). The big drop from 75.67 is
-    // the WINDOW, not DuckDB: the r12 pin's brackets were 0.79–0.87 —
-    // today's 0.63 window is ~25% faster, and calib_quiet below is
-    // re-pinned from the SAME window so the host-factor correction stays
-    // coherent.
+    // Pinned comparator: the DuckDB oracle-suite total on the same sf0.1
+    // parquet, 3-pass per-query min, measured in the same probe-bracketed
+    // window as calib_quiet (BASELINE.md "Round-14 quiet re-pin").
     val baselineQuiet = sys.env.getOrElse("SPARK_GRAFT_BASELINE_SEC", "58.13").toDouble
-    // Host-speed calibration (BASELINE.md "Host-speed calibration"): the
-    // shared build host has multi-minute windows where EVERYTHING runs
-    // 20-85% slower (hypervisor-level; guest vmstat shows idle CPU while
-    // the DuckDB comparator suite itself swings 17.3-32.0 s). The probes
-    // above bracket each timed pass; the median factor vs the quiet-host
-    // probe pin rescales the comparator to the window this run actually
-    // got. Floor 1.0 (a fast window never shrinks the bar), cap 2.0
-    // (bounds the mechanism; beyond that the run is junk — rerun it).
-    // Every sample is emitted so the correction is fully auditable, and
-    // vs_baseline_quiet carries the uncorrected ratio alongside.
-    // Pin-choice sensitivity (audit note): calib_quiet is pinned from the
-    // same probe-bracketed window as the baseline, and WHERE in that
-    // window's probe range it lands scales the correction directly —
-    // pinning at the window minimum maximizes host_factor in any slower
-    // window, pinning at the median is conservative. The UNCORRECTED
-    // vs_baseline_quiet in the JSON is therefore the primary gate number;
-    // vs_baseline is the window-corrected diagnostic, ±(probe spread) in
-    // sensitivity. 0.706 = the round-14 re-pin's same-window Bench-scale
-    // calib: the full-suite quiet Bench that landed with the 58.13 pin
-    // read calibs 0.799/0.717/0.708/0.706, and per the min convention
-    // below the factor describes that run's best window. (History: 0.80
-    // was the round-7/8 pin at the then-believed quiet floor; the
-    // round-14 window was ~12% faster, so both the bar and the calib pin
-    // move together and ratios stay comparable.)
     val calibQuiet = sys.env.getOrElse("SPARK_GRAFT_CALIB_QUIET_SEC", "0.706").toDouble
-    // min, not median: the per-query time is the MIN over the three
-    // passes, which structurally gravitates to the fastest window the run
-    // saw — so the factor must describe that same best window. Min is also
-    // the conservative choice (smallest correction).
-    val hostFactor = math.min(2.0, math.max(1.0, calibs.min / calibQuiet))
+    // Host-speed correction (BASELINE.md "Host-speed calibration"): the
+    // shared host has multi-minute windows where everything runs slower, so
+    // the bar is scaled by the probe's slowdown against the pin. Min, not
+    // median: the per-query min gravitates to the fastest window the run
+    // saw. Floor 1.0 (a fast window never shrinks the bar), cap 2.0 (beyond
+    // that the run is junk). Only a run as wide as the pin's host is
+    // corrected; vs_baseline_quiet is the uncorrected ratio.
+    val corrected = spark.sparkContext.defaultParallelism == CalibPinCores
+    val hostFactor =
+      if (corrected) math.min(2.0, math.max(1.0, calibs.min / calibQuiet)) else 1.0
     val baselineSec = baselineQuiet * hostFactor
     val ratio = comparableSec / baselineSec
-    // k-means job-chain floor itemization (SCALE.md "k-means job-chain
-    // floor"; BASELINE.md): the hash-pinned quantizer algorithms are
-    // SEQUENTIAL driver-blocking job chains — fused seed+query collect →
-    // Lloyd round(s) → scored scan. JobAudit at sf0.1 after the round-14
-    // trained-artifact memos (round-12 counts in parens): ivf_recall 2 (3),
-    // ivf_assign 2 (4), pq_ann_topk / pq_recall / pq_codes 3 (5-6),
-    // ivfpq_recall 2 / ivfpq_ann_topk 3 (both 7) — with SINGLE-DIGIT task
-    // counts, so the wall time is the per-job scheduler + per-plan
-    // analysis/codegen constant, not data work. DuckDB's single-process
-    // CTE stack pays no such constant; at cluster scale the same chains
-    // amortize over minutes-long stages.
-    // Itemized so the gate reader can subtract the documented single-node
-    // artifact; the PRIMARY ratio keeps carrying it.
+    // k-means job-chain floor (SCALE.md "k-means job-chain floor"): the
+    // quantizer rows are sequential driver-blocking job chains with
+    // single-digit task counts, so their wall time is the per-job scheduler
+    // and per-plan constant, not data work. Itemized so the reader can
+    // subtract it; the primary ratio keeps carrying it.
     val jobChain = Set("ivf_assign", "ivf_ann_topk", "ivf_recall",
       "pq_codes", "pq_ann_topk", "pq_recall", "ivfpq_ann_topk", "ivfpq_recall",
-      "kcenter_coreset",
-      // same Lloyd chain plus the save→load parquet roundtrip by design
-      "ivf_index_search", "ivf_incremental_assign",
-      // round-12 formal floor acceptance (BASELINE.md "copurchase floor
-      // decomposition"): driver-blocking collect chains by design —
-      // copurchase_lift's brand-universe collect + one-job mask/tag chain
-      // + LocalRelation projection, link_prediction's eager adjacency
-      // checkpoint; measured decomposition puts their structural floor
-      // (collect jobs + plan build) above 2x their sub-0.3 s DuckDB twins
-      // at ANY further shape change tried (r10-r12 surgeries)
+      "kcenter_coreset", "ivf_index_search", "ivf_incremental_assign",
       "copurchase_lift", "copurchase_link_prediction")
     val jobChainSec = comparable.collect { case (k, v) if jobChain(k) => v }.sum
-    // ivf_index_search decomposition (the jobchain itemization convention,
-    // round-13 verdict item): the row's wall time is mostly the
-    // train+save+load index file ops, not serving — time the two halves
-    // once, diagnostically (NOT part of any ratio), so the gate reader can
-    // see the file-ops tax explicitly. Same config as the catalog row.
+    // ivf_index_search's wall time is mostly its train+save+load file ops,
+    // not serving: time the two halves once, diagnostically (in no ratio),
+    // with the catalog row's config.
     val ivfSplitJson =
-      if (selected.contains("ivf_index_search") &&
-          !sys.env.contains("SPARK_GRAFT_BENCH_FLOOR")) {
+      if (selected.contains("ivf_index_search") && !floorMode) {
         try {
           import org.apache.spark.sql.functions.col
           val emb = Tables.embeddings(spark, sfDir)
@@ -280,51 +176,44 @@ object Bench {
         }
       } else ""
     val calibJson = calibs.map(c => f"$c%.3f").mkString("[", ",", "]")
-    // symmetric diagnostic: like-for-like rows over the baseline minus the
-    // asymmetric rows' (trivial) DuckDB cost — conservatively approximated
-    // as 0 there, which UNDERSTATES the symmetric denominator and so
-    // overstates (never flatters) the symmetric ratio.
+    // the asymmetric rows' DuckDB cost is taken as 0, which understates the
+    // symmetric denominator and so never flatters the symmetric ratio
     val symRatioQuiet = symmetricSec / baselineQuiet
-    // Effective parallelism in the artifact (round-13 verdict item 2 — the
-    // scaling probe's reader must see what the run actually executed with):
-    // cpus = the env contract, default_parallelism / shuffle_partitions =
-    // what the session resolved them to, floor_mode = whether this run is
-    // the per-query floor measurement rather than the data work.
     val scaleJson =
       s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
       s""""shuffle_partitions":${spark.conf.get(GraftSession.ShufflePartitions)},""" +
-      s""""floor_mode":${sys.env.contains("SPARK_GRAFT_BENCH_FLOOR")}"""
-    // Compile once per session (GraftSession.CodegenCacheEntries): the
-    // warm passes should compile next to nothing. Totals count the whole
-    // JVM, warm-up and calibration included.
+      s""""floor_mode":$floorMode"""
+    // Compile once per session (GraftSession.CodegenCacheEntries): warm
+    // passes should compile next to nothing. Totals count the whole JVM,
+    // warm-up and calibration included.
     val runCompiles = ops.Metrics.compiles()
-    val queryCompilesJson = queryCompiles
-      .map { case (k, v) => "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
+    val queryCompilesJson = records.groupBy(_.query).toSeq
+      .sortBy { case (k, _) => records.indexWhere(_.query == k) }
+      .map { case (k, rs) => "\"" + k + "\":" + rs.map(_.compiles.count).mkString("[", ",", "]") }
+      .mkString("{", ",", "}")
     val codegenJson =
       s""""codegen":{"cache_entries":${GraftSession.codegenCacheBound().getOrElse(-1L)},""" +
       f""""compiles":${runCompiles.count},"compile_ms":${runCompiles.ms}%.1f,""" +
       s""""pass_compiles":${passCompiles.map(_.count).mkString("[", ",", "]")},""" +
       s""""pass_compile_ms":${passCompiles.map(c => f"${c.ms}%.1f").mkString("[", ",", "]")},""" +
       s""""query_compiles":$queryCompilesJson}"""
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"failures":${QueryFailure.jsonArray(failures.values.toSeq)},"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,$codegenJson,"queries":$qs,"sf":"$sfDir"}"""
-    // stdout goes through sbt's logger ("[info] "-prefixed), which breaks
-    // line-oriented JSON parsing downstream — also write the result to a file
-    // (override path via SPARK_GRAFT_BENCH_OUT; default = cwd/bench_out.json).
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")),
-      json + "\n")
+    val json = s"""{"metric":"total","value":$total,"unit":"sec",$scaleJson,"comparable_sec":$comparableSec,"symmetric_sec":$symmetricSec,"asymmetric_sec":$asymSec,"jobchain_floor_sec":$jobChainSec$ivfSplitJson,"noncomparable":$noncompJson,"failures":${QueryFailure.jsonArray(failures.values.toSeq)},"baseline_sec":$baselineSec,"baseline_quiet_sec":$baselineQuiet,"calib_quiet_sec":$calibQuiet,"calib_secs":$calibJson,"host_factor":$hostFactor,"host_correction_applied":$corrected,"vs_baseline":$ratio,"vs_baseline_quiet":${comparableSec / baselineQuiet},"vs_baseline_symmetric_quiet":$symRatioQuiet,$codegenJson,"queries":$qs,"sf":"$sfDir"}"""
+    // stdout goes through sbt's "[info] "-prefixed logger, which breaks
+    // line-oriented JSON parsing downstream, so the line is also a file
+    val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"))
+    Files.writeString(out, json + "\n")
+    // every record of every pass, kept out of the contract line
+    Files.writeString(out.resolveSibling("bench_records.json"),
+      s"""{"passes":[${passes.map(RunRecord.jsonArray).mkString(",")}],""" +
+      s""""retry":${RunRecord.jsonArray(retry)}}""" + "\n")
     println(json)
-    // The stream-parity queries exercise stateful streaming; its async
-    // maintenance timer otherwise fires after SparkContext teardown and
-    // dumps a "SparkEnv not active" stack trace as the process's LAST
-    // output — which is exactly the log tail a harness keeps. Stop it first.
+    // The stream-parity queries' async state-store maintenance timer would
+    // otherwise fire after SparkContext teardown and end the log with a
+    // "SparkEnv not active" stack trace. Stop it first.
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
-    // Final headline line AFTER stop, so it is the last thing printed and —
-    // unlike the full contract line above (~3 KB: 87 query timings) — short
-    // enough to survive any last-N-chars log-tail truncation intact. Same
-    // gate numbers; slowest-10 inline; full per-query map in the contract
-    // line and in bench_out.json.
+    // A short headline line after stop, last in the log, so it survives any
+    // last-N-chars log-tail truncation: the gate numbers and the slowest 10.
     val slowest = results.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","comparable_sec":$comparableSec%.3f,"baseline_sec":$baselineSec%.3f,"host_factor":$hostFactor%.4f,"vs_baseline":$ratio%.4f,"vs_baseline_quiet":${comparableSec / baselineQuiet}%.4f,"slowest10":$slowest,"queries_full":"bench_out.json","sf":"$sfDir"}""")

@@ -1,8 +1,7 @@
 package graft
 
-/** One-shot host-window probe: the SAME blended calibration job
-  * [[Bench]] brackets its timed passes with (32-partition ALU xxhash64
-  * range + full-width lineitem/events scan-and-hash), run 3× after an
+/** One-shot host-window probe: [[Bench.calibOnce]], the blended
+  * calibration job Bench brackets its timed passes with, run 3× after an
   * untimed JIT warm pass and printed as one JSON line.
   * `tools/quiet_pin_loop.py` polls this to find a genuinely quiet host
   * window before re-pinning the DuckDB comparator (BASELINE.md
@@ -15,20 +14,12 @@ object CalibProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.arm(GraftSession.builder()
-      .master("local[32]")
+      .master(s"local[${Bench.CalibPinCores}]")
       .config("spark.ui.enabled", "false")
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 2000000000L, 1L, 32)
-        .selectExpr("bit_xor(xxhash64(id))").collect()
-      Tables.lineitem(spark, sfDir).selectExpr("bit_xor(hash(*))").collect()
-      Tables.eventsRaw(spark, sfDir).selectExpr("bit_xor(hash(*))").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    once() // JIT warm, untimed
-    val xs = Seq.fill(3)(once())
+    Bench.calibOnce(spark, sfDir) // JIT warm, untimed
+    val xs = Seq.fill(3)(Bench.calibOnce(spark, sfDir))
     val json = xs.map(x => f"$x%.3f")
       .mkString("{\"metric\":\"calib\",\"calib_secs\":[", ",",
         f"],\"min\":${xs.min}%.3f}")

@@ -87,11 +87,33 @@ object CatalogCore {
   private def status(spark: SparkSession, dir: String): DataFrame =
     Lifecycle.statusFromOrders(Tables.orders(spark, dir))
 
-  /** Unique memory-sink names for stream_daily_parity (a session may run
-    * the query several times — bench passes, verify + specs).
+  /** Unique memory-sink names for the stream_*_parity rows (a session may
+    * run a row several times — bench passes, verify + specs).
     */
   private val ParityRun = new java.util.concurrent.atomic.AtomicLong(0)
   private val ObsRun = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** One stream_*_parity run: `stream` runs as a memory-sink query named
+    * `graft_<tag>_parity_<run>` with `width` state-store partitions (the
+    * stateful stream's shuffle width is fixed at query start and becomes
+    * its state-store partition count; the session's width is restored
+    * right after start), until all available input is processed. Returns
+    * `result` over the sink's rows. The sink's temp view is dropped once
+    * that DataFrame is built: the DataFrame holds the rows, and the view
+    * would keep every run's rows for the rest of the session.
+    */
+  private def parityStream(spark: SparkSession, tag: String, width: Int, mode: String,
+                           checkpoint: Long => String)(stream: => DataFrame)(
+                           result: DataFrame => DataFrame): DataFrame = {
+    val run = ParityRun.incrementAndGet()
+    val name = s"graft_${tag}_parity_$run"
+    val q = GraftSession.withConf(spark, GraftSession.ShufflePartitions, width.toString) {
+      stream.writeStream.outputMode(mode).format("memory").queryName(name)
+        .option("checkpointLocation", checkpoint(run)).start()
+    }
+    try q.processAllAvailable() finally q.stop()
+    try result(spark.table(name)) finally spark.catalog.dropTempView(name)
+  }
 
   /** One staged stream-source copy of `events` per session and version of
     * `events.parquet` (see [[GraftSession.memo]]): the operator under test
@@ -1225,22 +1247,14 @@ object CatalogCore {
         val staged = stagedEvents(spark, dir)
         val schema = StructType(Seq(StructField("ts", TimestampType),
                                     StructField("event_type", StringType)))
-        val run = ParityRun.incrementAndGet()
-        val name = s"graft_daily_parity_$run"
-        // state-store partition count is fixed at query start (see
-        // stream_retry_parity): 8 partitions for a ~30-key (day) state,
-        // session default restored immediately after start
-        val q =
-          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
-            graft.streaming.Streaming.dailyStats(spark, s"$staged/src", schema)
-              .writeStream.outputMode("complete").format("memory").queryName(name)
-              .option("checkpointLocation", s"$staged/ckpt_$run").start()
-          }
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
-          .select(to_date(col("day.start")).as("event_date"),
-                  col("n_events"), col("n_error"))
-          .transform(orderedReport(_, col("event_date")))
+        // 8 state-store partitions for a ~30-key (day) state
+        parityStream(spark, "daily", 8, "complete", run => s"$staged/ckpt_$run") {
+          graft.streaming.Streaming.dailyStats(spark, s"$staged/src", schema)
+        } {
+          _.select(to_date(col("day.start")).as("event_date"),
+                   col("n_events"), col("n_error"))
+            .transform(orderedReport(_, col("event_date")))
+        }
       },
       Some("""SELECT CAST(ts AS DATE) AS event_date,
              |       COUNT(*) AS n_events,
@@ -1265,21 +1279,14 @@ object CatalogCore {
         val schema = StructType(Seq(StructField("ts", TimestampType),
                                     StructField("event_type", StringType),
                                     StructField("user_id", LongType)))
-        val run = ParityRun.incrementAndGet()
-        val name = s"graft_dedup_parity_$run"
         val src = spark.readStream.schema(schema).parquet(s"$staged/src")
-        // 8 state-store partitions (see stream_retry_parity) — the dedup
-        // key set is small and a wider store is commit overhead
-        val q =
-          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
-            graft.streaming.Streaming
-              .dedupStream(src, Seq("user_id", "event_type"), "ts", "1 hour")
-              .select(col("user_id"), col("event_type"))
-              .writeStream.outputMode("append").format("memory").queryName(name)
-              .option("checkpointLocation", s"$staged/ckpt_dd_$run").start()
-          }
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name).orderBy(col("user_id"), col("event_type"))
+        // 8 state-store partitions: the dedup key set is small and a wider
+        // store is commit overhead
+        parityStream(spark, "dedup", 8, "append", run => s"$staged/ckpt_dd_$run") {
+          graft.streaming.Streaming
+            .dedupStream(src, Seq("user_id", "event_type"), "ts", "1 hour")
+            .select(col("user_id"), col("event_type"))
+        }(_.orderBy(col("user_id"), col("event_type")))
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
              |ORDER BY 1, 2""".stripMargin)),
@@ -1294,27 +1301,27 @@ object CatalogCore {
     ("stream_session_parity",
       (spark, dir) => {
         val staged = stagedSessionEvents(spark, dir)
-        val run = ParityRun.incrementAndGet()
-        val name = s"graft_session_parity_$run"
         val src = spark.readStream
           .schema("user_id BIGINT, ts TIMESTAMP")
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$staged/src")
-        val q =
-          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
-            graft.streaming.Streaming
-              .sessionStats(src, "user_id", "ts", "30 minutes", "1 hour")
-              .writeStream.outputMode("append").format("memory").queryName(name)
-              .option("checkpointLocation", s"$staged/ckpt_$run").start()
-          }
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
-          .filter(col("user_id") >= 0L) // the sentinel's own session is scaffolding
-          .select(col("user_id"),
-                  unix_micros(col("session_start")).as("start_us"),
-                  unix_micros(col("session_end")).as("end_us"),
-                  col("n_events"))
-          .orderBy(col("user_id"), col("start_us"))
+        // The memory sink holds its rows on the driver, and a plan over
+        // them is a LocalTableScan that ships the rows inside its tasks, one
+        // slice per core: at sf0.1 (~5 MB of session rows) the result's two
+        // stages each send 1338 KiB tasks at local[4], over Spark's 1000 KiB
+        // warning. A file sink would let executors read the rows, but it
+        // has no complete mode, so the family keeps one sink.
+        parityStream(spark, "session", 8, "append", run => s"$staged/ckpt_$run") {
+          graft.streaming.Streaming
+            .sessionStats(src, "user_id", "ts", "30 minutes", "1 hour")
+        } {
+          _.filter(col("user_id") >= 0L) // the sentinel's own session is scaffolding
+            .select(col("user_id"),
+                    unix_micros(col("session_start")).as("start_us"),
+                    unix_micros(col("session_end")).as("end_us"),
+                    col("n_events"))
+            .orderBy(col("user_id"), col("start_us"))
+        }
       },
       Some("""WITH e AS (SELECT user_id, ts, epoch_us(ts) AS ep FROM events),
              |m AS (SELECT user_id, ts, ep,
@@ -1345,30 +1352,21 @@ object CatalogCore {
         implicit val s: SparkSession = spark
         import spark.implicits._
         val src = stagedRetryAttempts(spark, dir)
-        val run = ParityRun.incrementAndGet()
-        val name = s"graft_retry_parity_$run"
-        val ckpt = scratchDir("graft_retry_ckpt_")
         val stream = spark.readStream
           .option("maxFilesPerTrigger", "1")
           .schema("id STRING, ok BOOLEAN").parquet(src)
           .as[graft.streaming.FetchAttempt]
-        // The stateful stream's shuffle-partition count is fixed at query
-        // start and becomes the state-store partition count for its whole
-        // life; at 32 partitions × 3 triggers that was 96 store commits for
-        // a small key set (measured 2.7 → 1.5 s at 8). A production deployment
-        // sizes this to keys/executor as usual; restore the session
-        // default immediately after start.
-        val q =
-          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "8") {
-            graft.streaming.Streaming.retryStateMachine(stream, maxAttempts = 3)
-              .writeStream.outputMode("append").format("memory").queryName(name)
-              .option("checkpointLocation", ckpt).start()
-          }
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
-          .select(col("id").as("replay_id"), col("attempts"),
-                  col("gaveUp").as("gave_up"))
-          .orderBy(col("replay_id"))
+        // 8 state-store partitions, not the session's width: at 32
+        // partitions × 3 triggers that was 96 store commits for a small key
+        // set (measured 2.7 → 1.5 s at 8). A production deployment sizes
+        // this to keys/executor as usual.
+        parityStream(spark, "retry", 8, "append", _ => scratchDir("graft_retry_ckpt_")) {
+          graft.streaming.Streaming.retryStateMachine(stream, maxAttempts = 3).toDF()
+        } {
+          _.select(col("id").as("replay_id"), col("attempts"),
+                   col("gaveUp").as("gave_up"))
+            .orderBy(col("replay_id"))
+        }
       },
       Some(s"""$S
               |SELECT replay_id,
@@ -1400,30 +1398,24 @@ object CatalogCore {
                                     StructField("ts", TimestampType),
                                     StructField("event_type", StringType),
                                     StructField("user_id", LongType)))
-        val run = ParityRun.incrementAndGet()
-        val name = s"graft_ctx_parity_$run"
         def src() = spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(s"$staged/src")
-        val q =
-          GraftSession.withConf(spark, GraftSession.ShufflePartitions, "4") {
-            // 4 state-store partitions, not the parity family's usual 8:
-            // the interval join keeps TWO stores per partition (one per
-            // side) across the triggers, so commit count scales with
-            // sides×triggers×parts — measured 4.38/4.41 → 4.01/3.68 s
-            // (two quiet-window runs each side); per-user state is far
-            // below any skew concern at this key cardinality
-            graft.streaming.Streaming.priorWindowPairs(
-                src().filter(col("event_type") === "error"), src(),
-                86400L, "40 days")
-              .writeStream.outputMode("append").format("memory").queryName(name)
-              .option("checkpointLocation", s"$staged/ckpt_$run").start()
-          }
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
-          .groupBy(col("user_id"))
-          .agg(countDistinct(col("err_id")).as("n_ctx_errors"),
-               count(lit(1)).as("n_pairs"))
-          .orderBy(col("user_id"))
+        // 4 state-store partitions, not the parity family's usual 8: the
+        // interval join keeps TWO stores per partition (one per side)
+        // across the triggers, so commit count scales with
+        // sides×triggers×parts — measured 4.38/4.41 → 4.01/3.68 s (two
+        // quiet-window runs each side); per-user state is far below any
+        // skew concern at this key cardinality
+        parityStream(spark, "ctx", 4, "append", run => s"$staged/ckpt_$run") {
+          graft.streaming.Streaming.priorWindowPairs(
+            src().filter(col("event_type") === "error"), src(),
+            86400L, "40 days")
+        } {
+          _.groupBy(col("user_id"))
+            .agg(countDistinct(col("err_id")).as("n_ctx_errors"),
+                 count(lit(1)).as("n_pairs"))
+            .orderBy(col("user_id"))
+        }
       },
       Some("""WITH pairs AS (
              |  SELECT e.event_id AS err_id, e.user_id

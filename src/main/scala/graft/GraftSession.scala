@@ -34,11 +34,15 @@ import org.apache.spark.sql.SparkSession
   *    the class name made the same code a different class.
   *
   * Every session path goes through [[arm]]: [[local]], Bench, Verify,
-  * JobAudit, CalibProbe, the test session and the benchmark harness, so the
-  * harness mains and a user session can never drift apart.
+  * CalibProbe, the test session and the benchmark harness, so the harness
+  * mains and a user session can never drift apart.
   *
   * It also holds all per-session engine state, in one registry: see
-  * [[memo]] and [[lastBoundTruncation]].
+  * [[memo]] and [[lastBoundTruncation]]. It is the one place the engine
+  * registers listeners: [[arm]] registers the truncation watcher, and the
+  * first [[counted]] span of a SparkContext registers its job and stage
+  * counter. A session that never runs a counted span (a library user, the
+  * benchmark harness) gets no counter.
   */
 object GraftSession {
 
@@ -186,6 +190,71 @@ object GraftSession {
   def lastBoundTruncation(spark: SparkSession): Option[String] =
     Option(stateOf(spark).truncation.get)
   def clearBoundTruncation(spark: SparkSession): Unit = stateOf(spark).truncation.set(null)
+
+  // ── job and stage counter ────────────────────────────────────────────
+  // One SparkListener per SparkContext sums what the context ran. A span
+  // runs alone (Bench, Verify and the specs run one query at a time), so
+  // the difference of two drained readings is what the span ran, jobs of
+  // its streaming queries' own threads included.
+
+  /** What a SparkContext ran: jobs started, and the stages completed with
+    * their tasks, task CPU, shuffle bytes and spill bytes (summed from
+    * each completed stage's task metrics).
+    */
+  final case class Counts(jobs: Long, stages: Long, tasks: Long, taskCpuNs: Long,
+                          shuffleReadBytes: Long, shuffleWriteBytes: Long,
+                          spillBytes: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages, tasks - o.tasks,
+      taskCpuNs - o.taskCpuNs, shuffleReadBytes - o.shuffleReadBytes,
+      shuffleWriteBytes - o.shuffleWriteBytes, spillBytes - o.spillBytes)
+  }
+
+  private final class Counter extends org.apache.spark.scheduler.SparkListener {
+    private var c = Counts(0, 0, 0, 0, 0, 0, 0) // written by the bus thread only
+    def read: Counts = synchronized(c)
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      synchronized { c = c.copy(jobs = c.jobs + 1) }
+    override def onStageCompleted(
+        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = synchronized {
+      val s = e.stageInfo
+      val m = s.taskMetrics
+      c = if (m == null) c.copy(stages = c.stages + 1, tasks = c.tasks + s.numTasks)
+          else Counts(c.jobs, c.stages + 1, c.tasks + s.numTasks,
+            c.taskCpuNs + m.executorCpuTime,
+            c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+            c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+            c.spillBytes + m.memoryBytesSpilled + m.diskBytesSpilled)
+    }
+  }
+
+  private val counters =
+    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext, Counter]()
+
+  /** `body`'s result, or what it threw, and the [[Counts]] of what `spark`'s
+    * SparkContext ran meanwhile. The listener bus is drained before and
+    * after `body`, so time `body` inside it to keep the drains out of the
+    * timing. Spans of one SparkContext must not overlap.
+    */
+  def counted[A](spark: SparkSession)(body: => A): (Either[Throwable, A], Counts) = {
+    val sc = spark.sparkContext
+    val counter = counters.get(sc) match {
+      case null =>
+        counters.keySet.removeIf(_.isStopped)
+        counters.computeIfAbsent(sc, sc => {
+          val c = new Counter
+          sc.addSparkListener(c)
+          c
+        })
+      case c => c
+    }
+    org.apache.spark.sql.graft.ListenerSync.drain(sc)
+    val before = counter.read
+    // any Throwable, as the harnesses always caught: one query's error,
+    // fatal or not, must not stop the queries after it
+    val a = try Right(body) catch { case e: Throwable => Left(e) }
+    org.apache.spark.sql.graft.ListenerSync.drain(sc)
+    (a, counter.read - before)
+  }
 
   // ── codegen cache ────────────────────────────────────────────────────
   // Spark keeps compiled classes in one LRU per JVM, sized once from

@@ -1,19 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-
-/** One catalog query that threw: its name, the exception class and message. */
-final case class QueryFailure(query: String, exception: String, message: String) {
-  def json: String =
-    Seq("query" -> query, "exception" -> exception, "message" -> message)
-      .map { case (k, v) => s"${Verify.jsonString(k)}:${Verify.jsonString(v)}" }
-      .mkString("{", ",", "}")
-}
-object QueryFailure {
-  def apply(query: String, e: Throwable): QueryFailure =
-    QueryFailure(query, e.getClass.getName, String.valueOf(e.getMessage))
-  def jsonArray(fs: Seq[QueryFailure]): String = fs.map(_.json).mkString("[", ",", "]")
-}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -26,12 +13,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    // optional comma-separated subset for local iteration (tools/selfcheck.py
-    // on one query); unset = full suite (what the driver runs)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    dump(spark, sfDir, outDir,
-      SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) })
+    dump(spark, sfDir, outDir, RunRecord.selected())
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -41,23 +23,23 @@ object Verify {
     spark.stop()
   }
 
-  /** Write each query's result to `<outDir>/<name>` as parquet. A query that
-    * throws prints a `[verify]` line on stderr and does not stop the others;
-    * when any failed, `<outDir>/failures.json` lists one [[QueryFailure]]
-    * per failed query (a green run writes no such file).
+  /** Write each query's result to `<outDir>/<name>` as parquet, and one
+    * [[RunRecord]] per query to `<outDir>/runs.json`. A query that throws
+    * prints a `[verify]` line on stderr and does not stop the others; when
+    * any failed, `<outDir>/failures.json` lists one [[QueryFailure]] per
+    * failed query (a green run writes no such file).
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
-           queries: Iterable[(String, (SparkSession, String) => DataFrame)]): Seq[QueryFailure] = {
+           queries: Iterable[(String, RunRecord.Query)]): Seq[QueryFailure] = {
     new java.io.File(outDir).mkdirs()
-    val failures = queries.toSeq.flatMap { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        None
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(QueryFailure(name, e))
-      }
+    val records = queries.toSeq.map { case (name, fn) =>
+      val r = RunRecord.run(spark, name, fn(spark, sfDir),
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      r.failure.foreach(f => System.err.println(s"[verify] $name failed: ${f.message}"))
+      r
     }
+    Files.writeString(Paths.get(s"$outDir/runs.json"), RunRecord.jsonArray(records) + "\n")
+    val failures = records.flatMap(_.failure)
     if (failures.nonEmpty)
       Files.writeString(Paths.get(s"$outDir/failures.json"),
         QueryFailure.jsonArray(failures) + "\n")

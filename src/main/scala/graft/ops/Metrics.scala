@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Observability-as-testing (SURVEY §2.4 A8 / §5): the reference accumulates
   * run-summary counters in Python dicts (skip-reason breakdowns,
@@ -31,39 +29,6 @@ object Metrics {
     "n_downloaded" -> sum(when(col("is_downloaded"), 1L).otherwise(0L)),
     "n_failed" -> sum(when(coalesce(col("download_details"), lit(""))
       .startsWith("Failed:"), 1L).otherwise(0L)))
-
-  /** One timed action: which API ran it, wall-clock, success. */
-  final case class TimedAction(action: String, durationNs: Long, succeeded: Boolean)
-
-  /** The reference's process-timing instrumentation (`timer.py:35-95`
-    * `time_process` / `@timed`) in its Spark-native form: a
-    * [[QueryExecutionListener]] fires once per completed action with the
-    * executed plan and its nanosecond duration — no wrapper code at call
-    * sites, every action of the session is covered, and failures are
-    * recorded rather than lost. Delivery rides the listener bus
-    * (asynchronous — drain with a brief poll in tests).
-    */
-  final class ProcessTimer extends QueryExecutionListener {
-    private val log = new java.util.concurrent.ConcurrentLinkedQueue[TimedAction]()
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-      log.add(TimedAction(funcName, durationNs, succeeded = true))
-    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-      log.add(TimedAction(funcName, 0L, succeeded = false))
-    def entries: Seq[TimedAction] = {
-      val it = log.iterator(); val b = Seq.newBuilder[TimedAction]
-      while (it.hasNext) b += it.next()
-      b.result()
-    }
-  }
-
-  /** Register a fresh [[ProcessTimer]] on the session; detach with
-    * `spark.listenerManager.unregister`.
-    */
-  def attachTimer(spark: SparkSession): ProcessTimer = {
-    val t = new ProcessTimer
-    spark.listenerManager.register(t)
-    t
-  }
 
   /** Generated-code compiles in this JVM so far: Janino compiles (the count
     * of `CodegenMetrics`' compilation-time histogram) and their total

@@ -110,5 +110,10 @@ class DriverTailSpec extends AnyFunSuite {
     for (token <- Seq("[(SparkSession", "[SparkSession]", "[SparkSession,"))
       assert(offenders("GraftSession.scala", token).isEmpty,
         s"a collection keyed on SparkSession ($token) belongs to GraftSession")
+    // one listener-registration site: the truncation watcher and the job
+    // counter both register in GraftSession
+    for (token <- Seq("addSparkListener", "listenerManager.register"))
+      assert(offenders("GraftSession.scala", token).isEmpty,
+        s"$token belongs to GraftSession")
   }
 }

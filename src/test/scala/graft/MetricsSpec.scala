@@ -23,21 +23,6 @@ class MetricsSpec extends AnyFunSuite {
     assert(m("n_failed") == direct.getLong(2))
   }
 
-  test("ProcessTimer records completed actions with durations (timer.py analogue)") {
-    val timer = graft.ops.Metrics.attachTimer(spark)
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      // listener delivery is asynchronous — poll briefly
-      val deadline = System.nanoTime() + 10000000000L
-      while (timer.entries.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val es = timer.entries
-      assert(es.nonEmpty, "no timed action arrived within 10 s")
-      assert(es.forall(_.succeeded))
-      assert(es.exists(e => e.action == "collect" && e.durationNs > 0),
-        s"expected a timed collect, got $es")
-    } finally spark.listenerManager.unregister(timer)
-  }
-
   test("F12 log-line timestamp parse") {
     val got = Seq("[2024-03-05T10:20:30.123456+0000] INFO done").toDF("line")
       .select(Scalars.parseLogLineTs($"line").cast("string")).head().getString(0)

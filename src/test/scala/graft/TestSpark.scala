@@ -25,22 +25,11 @@ object TestSpark {
     try body finally spark.conf.unset(graft.ops.DriverTail.MaxRowsKey)
   }
 
-  /** `body`'s result and the number of Spark jobs it started. */
+  /** `body`'s result and the number of Spark jobs it started, read from
+    * the engine's one job counter ([[GraftSession.counted]]).
+    */
   def countingJobs[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.graft.ListenerSync.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.sql.graft.ListenerSync.drain(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (a, counts) = GraftSession.counted(spark)(body)
+    (a.fold(e => throw e, identity), counts.jobs.toInt)
   }
 }

@@ -83,17 +83,21 @@ object Bench {
     calibs += calibOnce(spark, sfDir)
     def okTimes(k: String, rs: Seq[RunRecord]): Seq[Double] =
       rs.filter(r => r.query == k && r.failure.isEmpty).map(_.seconds)
-    // Selective extra pass: when a query's best and worst still disagree
-    // badly, a stall may cover all three, and one targeted retry pins it.
+    // Selective extra pass: when a query's two warm passes disagree badly,
+    // a stall may cover one of them, and one targeted retry pins it. Pass 1
+    // is left out of the judgement: it is a query's first (cold) run and
+    // is slow for that reason alone. A retried query's minimum is over the
+    // two warm passes and the retry, so every row is a minimum of 3 runs.
+    val warm = passes.drop(1).flatten
     val noisy = selected.keySet.filter { k =>
-      val ts = okTimes(k, passes.flatten)
+      val ts = okTimes(k, warm)
       ts.nonEmpty && ts.max > 1.5 * ts.min && ts.max > 1.0
     }
     val retry = if (noisy.nonEmpty) once(selected.view.filterKeys(noisy).toMap) else Nil
     val records = passes.flatten ++ retry
     val results = selected.keys.map { k =>
-      val ts = okTimes(k, passes.flatten)
-      k -> (if (ts.isEmpty) -1.0 else (ts ++ okTimes(k, retry)).min)
+      val ts = if (noisy(k)) okTimes(k, warm ++ retry) else okTimes(k, passes.flatten)
+      k -> (if (ts.isEmpty) -1.0 else ts.min)
     }.toMap
     // each query's first failure, in run order
     val failures = scala.collection.mutable.LinkedHashMap[String, QueryFailure]()

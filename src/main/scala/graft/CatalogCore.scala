@@ -758,8 +758,9 @@ object CatalogCore {
     // ── S5/S6/T4 write path, driver-hashed end to end: two successive
     //    Compaction.compact batches into a fresh date-partitioned parquet
     //    dataset (batch 2 re-delivers every third record at a higher
-    //    precedence — exercising union-with-existing, LWW dedup, and dynamic
-    //    partition overwrite), then a read-back aggregate per (format, day).
+    //    precedence — exercising the merge path: union-with-existing, LWW
+    //    dedup and the partition swap), then a read-back aggregate per
+    //    (format, day).
     //    The oracle computes the EXPECTED final state relationally from the
     //    source table — any bug in the write/merge/overwrite/read cycle
     //    (dropped partition, double row, wrong survivor) shifts the hash.

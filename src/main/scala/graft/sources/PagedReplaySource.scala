@@ -28,6 +28,13 @@ import scala.jdk.CollectionConverters._
   * Early termination (`discovery.py:108`, short page ⇒ stop) surfaces as
   * [[SupportsPushDownLimit]]: `LIMIT n` plans only ⌈n/pageSize⌉ pages.
   *
+  * The scan reports its row count (`total` after limit pushdown) and a size
+  * of rows × the schema's default row width. Without it the planner sees
+  * Spark's default 8 EiB, and every join over discovery output — including
+  * its local checkpoints, which keep the origin plan's estimate — is
+  * planned as a sort-merge join that adaptive execution turns into a
+  * broadcast only after both sides were shuffled.
+  *
   * Options: `format` (stream key), `total` (rows available), `pageSize`
   * (default 51), `endTs` (newest uploadtime, default 1704067200).
   */
@@ -88,8 +95,13 @@ class PagedReplayScanBuilder(format: String, var total: Long, pageSize: Int,
 
 class PagedReplayScan(format: String, total: Long, pageSize: Int, endTs: Long,
                       maxPagesPerTrigger: Int, baseUrl: Option[String] = None)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = PagedReplaySource.schema
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def numRows(): util.OptionalLong = util.OptionalLong.of(total)
+    override def sizeInBytes(): util.OptionalLong =
+      util.OptionalLong.of(total * PagedReplaySource.schema.defaultSize)
+  }
   override def toBatch: Batch = this
   override def description(): String =
     s"paged-replays format=$format total=$total pageSize=$pageSize"

@@ -4,6 +4,7 @@ import graft.ops.{Compaction, Lifecycle}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class CompactionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -86,18 +87,31 @@ class CompactionSpec extends AnyFunSuite {
     assert(days == 2, "day1 partition not clobbered by day2-only batch")
   }
 
+  /** Visible parquet files of a dataset: path relative to it → length. */
+  private def files(path: String): Map[String, Long] = {
+    val root = java.nio.file.Path.of(path)
+    Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".parquet") && !f.toString.contains("_graft_staging"))
+      .map(f => root.relativize(f).toString -> Files.size(f)).toMap
+  }
+
+  private def stagingEmpty(path: String): Boolean = {
+    val root = new java.io.File(Compaction.stagingRoot(path))
+    !root.exists() || root.list().isEmpty
+  }
+
   test("crash between stage and commit point: old data intact, recover " +
        "rolls back") {
     val path = tmp()
     Compaction.compact(spark, batch(Seq(("r1", "f", day1, "old"))),
       path, "replay_id", "uploadtime")
-    // stage a second batch but "die" before commitStaged — the staging dir
-    // is hidden, so readers still see exactly the old data
-    val (merged, hasExisting) = Compaction.mergedFor(spark,
-      batch(Seq(("r1", "f", day1 + 60, "new"))),
-      path, "replay_id", "uploadtime", Seq.empty)
-    assert(hasExisting)
-    Compaction.stage(spark, merged, path)
+    // stage a colliding batch and its merge, but "die" before the journal —
+    // the staging dir is hidden, so readers still see exactly the old data
+    val staged = Compaction.deduped(batch(Seq(("r1", "f", day1 + 60, "new"))),
+      "replay_id", "uploadtime")
+    val txn = Compaction.stage(spark, staged, path)
+    Compaction.mergeStaged(spark, path, txn, Seq("format_id=f/day=2024-01-01"),
+      "replay_id", "uploadtime", Seq.empty, staged.schema)
     val seen = spark.read.parquet(path).collect()
     assert(seen.length == 1 &&
       seen.head.getAs[String]("payload") == "old",
@@ -116,14 +130,16 @@ class CompactionSpec extends AnyFunSuite {
     val path = tmp()
     Compaction.compact(spark, batch(Seq(("r1", "f", day1, "old"))),
       path, "replay_id", "uploadtime")
-    val (merged, _) = Compaction.mergedFor(spark,
+    val staged = Compaction.deduped(
       batch(Seq(("r1", "f", day1 + 60, "new"), ("r2", "f", day2, "d2"))),
-      path, "replay_id", "uploadtime", Seq.empty)
-    val txn = Compaction.stage(spark, merged, path)
+      "replay_id", "uploadtime")
+    val rels = Seq(s"format_id=f/day=2024-01-01", s"format_id=f/day=2024-01-02")
+    val txn = Compaction.mergeStaged(spark, path, Compaction.stage(spark, staged, path),
+      rels, "replay_id", "uploadtime", Seq.empty, staged.schema)
     // write the journal by hand (the commit point), then "die" before any
     // swap happens — recover must finish the job from the journal alone
     val root = new java.io.File(Compaction.stagingRoot(path))
-    val rels = Seq(s"format_id=f/day=2024-01-01", s"format_id=f/day=2024-01-02")
+    assert(root.list().toSeq == Seq(txn), "the merge dropped the batch's own txn")
     Files.writeString(java.nio.file.Path.of(root.getPath, s"$txn.commit"),
       rels.mkString("", "\n", "\n"))
     val (fwd, back) = Compaction.recover(spark, path)
@@ -137,6 +153,105 @@ class CompactionSpec extends AnyFunSuite {
       "staging cleaned after roll-forward")
     // recover is idempotent on a clean dataset
     assert(Compaction.recover(spark, path) == ((0, 0)))
+  }
+
+  test("append path: a batch of new keys leaves every existing file's name and length") {
+    val path = tmp()
+    Compaction.compact(spark,
+      batch(Seq(("r1", "f", day1, "v1"), ("r2", "f", day2, "v1"), ("r3", "g", day1, "v1"))),
+      path, "replay_id", "uploadtime")
+    val before = files(path)
+    Compaction.compact(spark,
+      batch(Seq(("r4", "f", day1, "v2"), ("r5", "f", day2, "v2"), ("r6", "h", day2, "v2"))),
+      path, "replay_id", "uploadtime")
+    val after = files(path)
+    assert(before.forall { case (f, n) => after.get(f).contains(n) },
+      s"existing files changed: $before vs $after")
+    assert(after.size == before.size + 3, "one new file per touched partition")
+    assert(spark.read.parquet(path).select("replay_id").as[String].collect().sorted.toSeq ==
+      Seq("r1", "r2", "r3", "r4", "r5", "r6"))
+    assert(stagingEmpty(path))
+  }
+
+  test("a colliding batch takes the merge path and the latest row wins") {
+    val path = tmp()
+    Compaction.compact(spark,
+      batch(Seq(("r1", "f", day1, "old"), ("r2", "f", day1, "v1"), ("r3", "f", day2, "v1"))),
+      path, "replay_id", "uploadtime")
+    val before = files(path)
+    Compaction.compact(spark,
+      batch(Seq(("r1", "f", day1 + 60, "new"), ("r1", "f", day1 + 30, "mid"), ("r4", "f", day1, "v2"))),
+      path, "replay_id", "uploadtime")
+    val after = files(path)
+    val day1Files = after.keys.filter(_.contains("day=2024-01-01")).toSeq
+    assert(day1Files.size == 1 && !before.contains(day1Files.head),
+      s"the touched partition was rewritten whole: $day1Files")
+    assert(before.filter(_._1.contains("day=2024-01-02")).forall { case (f, n) =>
+      after.get(f).contains(n) }, "the untouched partition kept its file")
+    val out = spark.read.parquet(path).select("replay_id", "payload").as[(String, String)]
+      .collect().sorted.toSeq
+    assert(out == Seq(("r1", "new"), ("r2", "v1"), ("r3", "v1"), ("r4", "v2")))
+    assert(stagingEmpty(path))
+  }
+
+  test("append path: a crash before the journal rolls back") {
+    val path = tmp()
+    Compaction.compact(spark, batch(Seq(("r1", "f", day1, "v1"))),
+      path, "replay_id", "uploadtime")
+    val before = files(path)
+    Compaction.stage(spark, Compaction.deduped(batch(Seq(("r2", "f", day1, "v2"))),
+      "replay_id", "uploadtime"), path)
+    assert(files(path) == before, "staged files stay invisible")
+    assert(Compaction.recover(spark, path) == ((0, 1)))
+    assert(stagingEmpty(path) && files(path) == before)
+    assert(spark.read.parquet(path).select("replay_id").as[String].collect().toSeq == Seq("r1"))
+  }
+
+  test("append path: a hand-written file journal rolls forward through recover") {
+    val path = tmp()
+    Compaction.compact(spark, batch(Seq(("r1", "f", day1, "v1"))),
+      path, "replay_id", "uploadtime")
+    val before = files(path)
+    val txn = Compaction.stage(spark, Compaction.deduped(
+      batch(Seq(("r2", "f", day1, "v2"), ("r3", "f", day2, "v2"))), "replay_id", "uploadtime"), path)
+    val txnDir = java.nio.file.Path.of(Compaction.stagingRoot(path), txn)
+    val staged = Files.walk(txnDir).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map(f => txnDir.relativize(f).toString).toSeq
+    assert(staged.size == 2, s"one staged file per partition: $staged")
+    // the commit point, written by hand; then "die" before any rename
+    Files.writeString(java.nio.file.Path.of(Compaction.stagingRoot(path), s"$txn.commit"),
+      staged.mkString("", "\n", "\n"))
+    assert(Compaction.recover(spark, path) == ((1, 0)))
+    val after = files(path)
+    assert(before.forall { case (f, n) => after.get(f).contains(n) })
+    assert(staged.forall(after.contains), s"staged files published under their names: $after")
+    assert(spark.read.parquet(path).select("replay_id").as[String].collect().sorted.toSeq ==
+      Seq("r1", "r2", "r3"))
+    assert(stagingEmpty(path))
+    assert(Compaction.recover(spark, path) == ((0, 0)))
+  }
+
+  test("partition values Spark escapes in directory names: collisions still found") {
+    val path = tmp()
+    val fmt = "a/b=c:d e"
+    Compaction.compact(spark, batch(Seq(("r1", fmt, day1, "old"))), path, "replay_id", "uploadtime")
+    Compaction.compact(spark, batch(Seq(("r1", fmt, day1 + 60, "new"))), path, "replay_id", "uploadtime")
+    Compaction.compact(spark, batch(Seq(("r2", fmt, day1, "v1"))), path, "replay_id", "uploadtime")
+    val out = spark.read.parquet(path).select("replay_id", "format_id", "payload")
+      .as[(String, String, String)].collect().sorted.toSeq
+    assert(out == Seq(("r1", fmt, "new"), ("r2", fmt, "v1")))
+    assert(stagingEmpty(path))
+  }
+
+  test("a new-key compaction into an existing dataset runs at most 6 jobs") {
+    val path = tmp()
+    Compaction.compact(spark, batch(Seq(("r1", "f", day1, "v1"), ("r2", "f", day2, "v1"))),
+      path, "replay_id", "uploadtime")
+    val incoming = batch(Seq(("r3", "f", day1, "v2"), ("r4", "f", day2, "v2")))
+    val (_, jobs) = TestSpark.countingJobs(
+      Compaction.compact(spark, incoming, path, "replay_id", "uploadtime"))
+    assert(jobs <= 6, s"$jobs jobs")
+    assert(spark.read.parquet(path).count() == 4)
   }
 
   test("compact is idempotent on re-delivery (T4)") {

@@ -33,6 +33,34 @@ class PagedReplaySourceSpec extends AnyFunSuite {
     assert(plan.contains("total=10"), s"limit did not reach the source:\n$plan")
   }
 
+  private def scanRows(df: org.apache.spark.sql.DataFrame): Seq[Option[BigInt]] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.stats.rowCount
+    }
+
+  test("the scan reports its row count, plain and under a pushed LIMIT") {
+    val plain = source(500)
+    assert(plain.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(500)))
+    assert(scanRows(plain) == Seq(Some(BigInt(500))))
+    assert(plain.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(500L * sources.PagedReplaySource.schema.defaultSize))
+    val limited = source(100000).limit(10)
+    assert(limited.queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(10)))
+    assert(scanRows(limited) == Seq(Some(BigInt(10))), "the pushed total is the scan's count")
+  }
+
+  test("a local-checkpointed discovery frame joined to a small one plans a broadcast") {
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    // both sides' only size estimate is the paged source's: checkpoints
+    // keep their origin plan's statistics
+    val disc = source(500).localCheckpoint()
+    val small = source(20).select($"replay_id", lit(1).as("seen")).localCheckpoint()
+    val plan = disc.join(small, "replay_id").queryExecution.sparkPlan
+    assert(plan.collect { case j: BroadcastHashJoinExec => j }.size == 1, plan.toString)
+    assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty, plan.toString)
+  }
+
   test("streaming face: throttled micro-batches drain the stream (T1/T3/T6)") {
     val q = spark.readStream.format("paged-replays")
       .option("format", "gen9ou").option("total", "300")

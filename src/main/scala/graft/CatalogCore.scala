@@ -402,7 +402,7 @@ object CatalogCore {
     // ── W1 latest-row-per-key (db.py:133-154).
     ("latest_event_per_user",
       (spark, dir) =>
-        Windows.latestPerKey(
+        Lifecycle.dedupKeepFirst(
             Tables.spread(Tables.events(spark, dir), col("user_id")),
             Seq("user_id"), Seq(col("ts").desc, col("event_id").desc))
           .select(col("user_id"), col("event_id"), col("event_type"),

@@ -62,37 +62,29 @@ object Compaction {
               tiebreak: Seq[org.apache.spark.sql.Column] = Seq.empty): Unit = {
     val batch = deduped(incoming, key, precedenceCol, tiebreak)
     val fs = fsOf(spark, path)
-    // Only "dataset does not exist yet" is a first write — checked on the
-    // path, not by a read, which would log a FileNotFoundException trace
-    // from Spark's sink-metadata probe.
-    if (!fs.exists(new HPath(path)))
-      // first write: no old data to protect — stream straight in
-      batch.write.mode("overwrite")
-        .partitionBy("format_id", "day").parquet(path)
+    // Atomic commit (the reference gets whole-file atomicity for free from
+    // SQLite / whole-day JSON rewrites — compaction.py:214-225,
+    // db.py:229-236; dynamic partition overwrite does NOT: a crash
+    // mid-overwrite tears the partition). Staging also removes the
+    // read-overwrite hazard outright — every read is of `path` or a staged
+    // txn, every write goes to `_graft_staging`. A first batch is no
+    // exception: with no existing partition it appends with no check job.
+    val txn = stage(spark, batch, path)
+    val txnDir = new HPath(stagingRoot(path), txn)
+    val files = stagedFiles(fs, txnDir)
+    val parts = files.map(partitionOf).distinct
+    if (files.isEmpty)
+      // an empty batch stages no partitions (just a _SUCCESS marker): the
+      // commit is a no-op — leave data untouched
+      fs.delete(txnDir, true)
+    else if (files.size == parts.size && // one file per partition: all or none
+             appendable(spark, path, txn, parts, key, batch.schema))
+      commitStaged(spark, path, txn, files)
     else {
-      // Atomic commit (the reference gets whole-file atomicity for free
-      // from SQLite / whole-day JSON rewrites — compaction.py:214-225,
-      // db.py:229-236; dynamic partition overwrite does NOT: a crash
-      // mid-overwrite tears the partition). Staging also removes the
-      // read-overwrite hazard outright — every read is of `path` or a
-      // staged txn, every write goes to `_graft_staging`.
-      val txn = stage(spark, batch, path)
-      val txnDir = new HPath(stagingRoot(path), txn)
-      val files = stagedFiles(fs, txnDir)
-      val parts = files.map(partitionOf).distinct
-      if (files.isEmpty)
-        // an empty batch stages no partitions (just a _SUCCESS marker):
-        // the commit is a no-op — leave data untouched
-        fs.delete(txnDir, true)
-      else if (files.size == parts.size && // one file per partition: all or none
-               appendable(spark, path, txn, parts, key, batch.schema))
-        commitStaged(spark, path, txn, files)
-      else {
-        // the merged txn holds exactly the touched partitions
-        val merged = mergeStaged(spark, path, txn, parts, key, precedenceCol, tiebreak,
-                                 batch.schema)
-        commitStaged(spark, path, merged, parts)
-      }
+      // the merged txn holds exactly the touched partitions
+      val merged = mergeStaged(spark, path, txn, parts, key, precedenceCol, tiebreak,
+                               batch.schema)
+      commitStaged(spark, path, merged, parts)
     }
   }
 

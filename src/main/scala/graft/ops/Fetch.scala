@@ -48,8 +48,8 @@ object HttpTransport {
     (id, _) => get(urlFor(id), readTimeoutMs)
 
   /** One classified GET — the shared primitive behind [[forUrl]] and the
-    * live discovery stream's page walk
-    * ([[graft.sources.LivePagedMicroBatchStream]]).
+    * discovery page walk's network page function
+    * ([[graft.sources.PagedReplaySource.httpPage]]).
     */
   def get(url: String, readTimeoutMs: Long = 20000L)
       : Either[(String, Boolean), String] =

@@ -133,13 +133,8 @@ object Lifecycle {
     * the remaining sort columns so the survivor is total-order deterministic.
     */
   def upsert(existing: DataFrame, incoming: DataFrame, key: Seq[String],
-             precedence: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(precedence: _*)
-    existing.unionByName(incoming)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+             precedence: Seq[Column]): DataFrame =
+    dedupKeepFirst(existing.unionByName(incoming), key, precedence)
 
   /** M1/M2 — batch conditional status update (mark_replay_downloaded,
     * db.py:325-350): join the status table with a results relation and flip

@@ -4,18 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Window-function surface (SURVEY.md §2.5/§2.6): latest-row-per-key, top-k,
-  * rolling frames, pagination cursors. The reference runs these as per-key
+/** Window-function surface (SURVEY.md §2.5/§2.6): top-k, rolling frames,
+  * pagination cursors, funnels and paths (latest-row-per-key is
+  * [[Lifecycle.dedupKeepFirst]]). The reference runs these as per-key
   * loops + `ORDER BY … LIMIT 1` (db.py:133-154) — here they are ranking
   * windows, one shuffle on the partition key.
   */
 object Windows {
-
-  /** W1 — latest row per key (db.py:133-154). `precedence` must be a total
-    * order (include a unique tie-breaker) for deterministic output.
-    */
-  def latestPerKey(df: DataFrame, keys: Seq[String], precedence: Seq[Column]): DataFrame =
-    Lifecycle.dedupKeepFirst(df, keys, precedence)
 
   /** O1 — global top-k under a total order. Spark plans this as
     * TakeOrderedAndProject: per-partition heaps + a k-row driver merge, no
@@ -79,14 +74,7 @@ object Windows {
   def funnelStages(events: DataFrame, key: String, tsCol: String,
                    typeCol: String, stages: Seq[String]): DataFrame = {
     require(stages.nonEmpty, "funnel needs at least one stage")
-    // The labels are interpolated into a SQL array literal below; Spark
-    // string literals treat backslash as an escape, so a label containing
-    // one would shift array elements and silently mis-align stages — reject
-    // both metacharacters outright (round-14 ADVICE hardening).
-    require(stages.forall(s => !s.contains("'") && !s.contains("\\")),
-      s"stage labels must not contain quotes or backslashes, got $stages")
-    val dt = events.schema(tsCol).dataType.sql
-    val stageArrSql = stages.map(s => s"'$s'").mkString("array(", ", ", ")")
+    val dt = events.schema(tsCol).dataType
     val grouped = events
       .filter(col(typeCol).isin(stages.distinct: _*))
       .groupBy(col(key))
@@ -95,17 +83,19 @@ object Windows {
           struct(col(tsCol).as("ts"), col(typeCol).as("ty"))))).as("__evs"),
         max(when(col(typeCol) === stages.head, lit(1)).otherwise(lit(0)))
           .as("__has1"))
-    val fold =
-      s"""aggregate(__evs, array_repeat(CAST(NULL AS $dt), ${stages.size}),
-         |  (st, e) -> transform(st, (t, i) ->
-         |    CASE WHEN t IS NOT NULL THEN t
-         |         WHEN e.ty = element_at($stageArrSql, i + 1)
-         |              AND (i = 0 OR (st[i - 1] IS NOT NULL
-         |                             AND e.ts > st[i - 1]))
-         |         THEN e.ts ELSE t END))""".stripMargin
+    val labels = array(stages.map(lit): _*)
+    val fold = aggregate(col("__evs"), array_repeat(lit(null).cast(dt), stages.size),
+      (st, e) => transform(st, (t, i) => {
+        val prev = st.getItem(i - 1)
+        when(t.isNotNull, t)
+          .when(e.getField("ty") === element_at(labels, i + 1) &&
+                  (i === 0 || (prev.isNotNull && e.getField("ts") > prev)),
+                e.getField("ts"))
+          .otherwise(t)
+      }))
     grouped
       .filter(col("__has1") === 1)
-      .withColumn("__st", expr(fold))
+      .withColumn("__st", fold)
       .select(col(key) +:
         stages.indices.map(i => col("__st")(i).as(s"t${i + 1}")): _*)
   }

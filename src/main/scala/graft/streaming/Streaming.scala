@@ -151,16 +151,17 @@ object Streaming {
           // instead of appending duplicates — idempotent like the merge.
           failed.drop("batch_id").write.mode("overwrite")
             .parquet(s"$deadLetterPath/batch_id=$batchId")
-          // Only "state table does not exist yet" maps to None; any other
-          // read failure must fail the batch — treating a transient error as
-          // empty state would overwrite the table with this batch alone.
+          // Only "state path does not exist yet" maps to None, checked on
+          // the path. An existing path must read: taking one emptied by a
+          // crashed overwrite (or any read failure) as empty state would
+          // overwrite the table with this batch alone.
+          val state = new org.apache.hadoop.fs.Path(statePath)
           val existing =
-            try Some(spark.read.parquet(statePath))
-            catch {
-              case e: AnalysisException
-                if e.getMessage.contains("PATH_NOT_FOUND") ||
-                   e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => None
-            }
+            if (!state.getFileSystem(spark.sessionState.newHadoopConf()).exists(state)) None
+            else Some(try spark.read.parquet(statePath) catch {
+              case e: AnalysisException => throw new IllegalStateException(
+                s"state table $statePath exists but holds no readable data", e)
+            })
           val merged = existing match {
             case Some(ex) =>
               Lifecycle.upsert(ex, ok, key,

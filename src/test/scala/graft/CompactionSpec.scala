@@ -173,6 +173,40 @@ class CompactionSpec extends AnyFunSuite {
     assert(stagingEmpty(path))
   }
 
+  test("first batch: a crash after staging leaves no visible row, recover rolls back") {
+    val path = tmp() + "/fresh"
+    val staged = Compaction.deduped(
+      batch(Seq(("r1", "f", day1, "v1"), ("r2", "f", day2, "v1"))), "replay_id", "uploadtime")
+    Compaction.stage(spark, staged, path)
+    assert(files(path).isEmpty, "staged files stay invisible")
+    assert(spark.read.schema(staged.schema).parquet(path).count() == 0)
+    assert(Compaction.recover(spark, path) == ((0, 1)))
+    assert(stagingEmpty(path) && files(path).isEmpty)
+    // the first batch itself commits through the staging root, which the
+    // commit leaves empty
+    Compaction.compact(spark, batch(Seq(("r1", "f", day1, "v1"))),
+      path, "replay_id", "uploadtime")
+    assert(new java.io.File(Compaction.stagingRoot(path)).isDirectory && stagingEmpty(path))
+    assert(spark.read.parquet(path).select("replay_id").as[String].collect().toSeq == Seq("r1"))
+  }
+
+  test("first batch: a journaled batch rolls forward through recover") {
+    val path = tmp() + "/fresh"
+    val txn = Compaction.stage(spark, Compaction.deduped(
+      batch(Seq(("r1", "f", day1, "v1"), ("r2", "f", day2, "v1"))), "replay_id", "uploadtime"),
+      path)
+    val txnDir = java.nio.file.Path.of(Compaction.stagingRoot(path), txn)
+    val staged = Files.walk(txnDir).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).map(f => txnDir.relativize(f).toString).toSeq
+    Files.writeString(java.nio.file.Path.of(Compaction.stagingRoot(path), s"$txn.commit"),
+      staged.mkString("", "\n", "\n"))
+    assert(Compaction.recover(spark, path) == ((1, 0)))
+    assert(files(path).keySet == staged.toSet, "the staged files are the visible layout")
+    assert(spark.read.parquet(path).select("replay_id").as[String].collect().sorted.toSeq ==
+      Seq("r1", "r2"))
+    assert(stagingEmpty(path))
+  }
+
   test("append path: new-key batches never leave a partition above MaxAppendFiles files") {
     val path = tmp()
     val n = Compaction.MaxAppendFiles + 1

@@ -115,5 +115,15 @@ class DriverTailSpec extends AnyFunSuite {
     for (token <- Seq("addSparkListener", "listenerManager.register"))
       assert(offenders("GraftSession.scala", token).isEmpty,
         s"$token belongs to GraftSession")
+    // one discovery walk: one micro-batch stream and one offset class, and
+    // no control flow decided by an exception's message text
+    def declaring(parent: String): Seq[String] = sources.flatMap { case (_, text) =>
+      s"""class\\s+(\\w+)[^{]*?\\b(?:extends|with)\\s+$parent\\b""".r
+        .findAllMatchIn(text).map(_.group(1))
+    }
+    assert(declaring("MicroBatchStream").size == 1, declaring("MicroBatchStream"))
+    assert(declaring("Offset").size == 1, declaring("Offset"))
+    assert(sources.collect { case (p, t) if t.contains("getMessage.contains") => p }.isEmpty,
+      "match on exception types or check state, not on getMessage text")
   }
 }

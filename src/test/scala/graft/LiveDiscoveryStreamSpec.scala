@@ -1,7 +1,10 @@
 package graft
 
+import graft.sources.PagedReplaySource
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.DataStreamReader
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The live-network streaming discovery source over a REAL socket: an
@@ -16,19 +19,16 @@ class LiveDiscoveryStreamSpec extends AnyFunSuite {
   private val pageSize = 51
   private val nRows = 130 // pages: 51 + 51 + 28(short) → 3 real triggers
 
-  /** Synthetic corpus in descending uploadtime (strictly, gappy). */
-  private def allRows: Seq[(String, Long)] =
-    (0 until nRows).map { i =>
-      val ts = 1704067200L - i * 37L
-      (s"gen9ou-$ts", ts)
-    }
+  /** The synthetic API's corpus, in descending uploadtime (strictly, gappy). */
+  private def corpus: Seq[PagedReplaySource.ReplayRow] =
+    (0 until nRows).map(i => PagedReplaySource.row("gen9ou", 1704067200L, i))
+  private def allRows: Seq[(String, Long)] = corpus.map(r => (r.id, r.uploadtime))
 
   private def pageJson(before: Option[Long]): String = {
-    val page = allRows
-      .filter { case (_, ts) => before.forall(ts < _) }
-      .take(pageSize)
-    page.map { case (id, ts) =>
-      s"""{"id":"$id","format":"gen9ou","uploadtime":$ts,"players":"pa vs pb"}"""
+    val page = corpus.filter(r => before.forall(r.uploadtime < _)).take(pageSize)
+    page.map { r =>
+      s"""{"id":"${r.id}","format":"${r.format}","uploadtime":${r.uploadtime},""" +
+        s""""players":"${r.players}"}"""
     }.mkString("[", ",", "]")
   }
 
@@ -91,6 +91,33 @@ class LiveDiscoveryStreamSpec extends AnyFunSuite {
       assert(hits.get() >= 3 && hits.get() <= 4,
         s"one classified GET per page (+ at most one probe), got ${hits.get()}")
     } finally server.stop(0)
+  }
+
+  test("one walk over both page functions: the synthetic API and the live " +
+       "server give the same micro-batches and rows") {
+    def batches(reader: DataStreamReader): Seq[(Long, Seq[String])] = {
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[String])]()
+      val q = reader.option("format", "gen9ou")
+        .option("pageSize", pageSize.toString).option("maxPagesPerTrigger", "1")
+        .load()
+        .writeStream
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          buf.add(id -> b.collect().map((r: Row) => r.mkString("|")).sorted.toSeq); ()
+        }
+        .option("checkpointLocation", tmp("walk-ckpt"))
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      buf.asScala.toSeq.sortBy(_._1)
+    }
+    val synthetic = batches(spark.readStream.format("paged-replays")
+      .option("total", nRows.toString))
+    assert(synthetic.map(_._2.size) == Seq(51, 51, 28), "one page per trigger, last short")
+    val server = startServer(new AtomicInteger(0))
+    val live =
+      try batches(spark.readStream.format("paged-replays")
+        .option("baseUrl", s"http://127.0.0.1:${server.getAddress.getPort}/search.json"))
+      finally server.stop(0)
+    assert(live == synthetic)
   }
 
   test("live discovery: transient 5xx is retried with backoff; a restarted " +

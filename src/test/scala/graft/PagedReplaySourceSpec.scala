@@ -97,6 +97,52 @@ class PagedReplaySourceSpec extends AnyFunSuite {
     assert(rows.select("replay_id").distinct().count() == 300)
   }
 
+  test("a synthetic stream stopped mid-walk and restarted re-delivers nothing") {
+    val ckpt = java.nio.file.Files.createTempDirectory("paged-ckpt2").toString
+    val out = java.nio.file.Files.createTempDirectory("paged-out2").toString
+    def start() = spark.readStream.format("paged-replays")
+      .option("format", "gen9ou").option("total", "300")
+      .option("pageSize", "51").option("maxPagesPerTrigger", "1")
+      .load()
+      .writeStream.outputMode("append").format("parquet")
+      .option("checkpointLocation", ckpt).option("path", out)
+      .start()
+    val q1 = start()
+    val run1 =
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        while (q1.recentProgress.count(_.numInputRows > 0) < 2 &&
+               System.currentTimeMillis() < deadline)
+          Thread.sleep(10)
+        q1.stop()
+        q1.recentProgress.map(_.numInputRows).sum
+      } finally q1.stop()
+    assert(run1 >= 102)
+    val q2 = start()
+    val run2 = try { q2.processAllAvailable(); q2.recentProgress.map(_.numInputRows).sum }
+               finally q2.stop()
+    assert(run1 + run2 == 300, s"run 1 served $run1 rows, run 2 $run2")
+    val rows = spark.read.parquet(out)
+    assert(rows.count() == 300 && rows.select("replay_id").distinct().count() == 300)
+  }
+
+  test("offsets round-trip with their cursor; a page past 0 without one is refused") {
+    import graft.sources.{PagedMicroBatchStream, PagedReplaySource, PageOffset}
+    val stream = new PagedMicroBatchStream(
+      PagedReplaySource.syntheticPage("gen9ou", 300, 51, 1704067200L), 51, 2)
+    for (o <- Seq(PageOffset(0, None), PageOffset(2, Some(1704063463L))))
+      assert(stream.deserializeOffset(o.json()) == o)
+    // a page-only offset would resume from the newest row and re-deliver
+    intercept[IllegalArgumentException](stream.deserializeOffset("""{"page":3}"""))
+  }
+
+  test("a batch read with baseUrl fails and names the option") {
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("paged-replays").option("baseUrl", "http://127.0.0.1:9/search.json")
+        .load().count())
+    assert(e.getMessage.contains("baseUrl"), e.getMessage)
+  }
+
   test("discovery flow: anti-join new pages against the status table (J2)") {
     val incoming = source(300).select("replay_id", "format_id", "uploadtime")
     val known = incoming.limit(120).select("replay_id")

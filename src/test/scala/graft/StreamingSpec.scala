@@ -103,7 +103,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch merge: idempotent state + dead-letter split (T4/T5)") {
-    val src = tmp("stream-src2"); val state = tmp("stream-state")
+    // the state path does not exist before the first micro-batch
+    val src = tmp("stream-src2"); val state = tmp("stream-state") + "/state"
     val dead = tmp("stream-dead"); val ckpt = tmp("stream-ckpt")
 
     rows(Seq(("k1", "2024-01-01 01:00:00", "click", false),
@@ -128,6 +129,28 @@ class StreamingSpec extends AnyFunSuite {
       assert(st.filter($"id" === "k1").select("event_type").as[String].head() == "purchase",
         "later micro-batch wins for the same key")
     } finally q.stop()
+  }
+
+  test("foreachBatch merge: a state dir with no readable data fails the query, " +
+       "and the dir stays as it was") {
+    val src = tmp("stream-src3"); val dead = tmp("stream-dead3"); val ckpt = tmp("stream-ckpt3")
+    // what a crashed in-place overwrite leaves: the directory, no data
+    val state = tmp("stream-state3")
+    Files.writeString(java.nio.file.Path.of(state, "_SUCCESS"), "")
+    def listing() = Files.list(java.nio.file.Path.of(state)).toArray.map(_.toString).toSet
+    val before = listing()
+    rows(Seq(("k1", "2024-01-01 01:00:00", "click", false)))
+      .write.mode("append").parquet(src)
+    val q = Streaming.runToStateTable(spark, spark.readStream.schema(schema).parquet(src),
+      state, dead, Seq("id"), ckpt)
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(_.contains(state)), s"the failure names the path: $messages")
+    } finally q.stop()
+    assert(listing() == before, "the batch did not overwrite the state dir")
   }
 
   test("priorWindowPairs: cross-batch interval matches equal the batch range join") {

@@ -152,6 +152,35 @@ class WindowsSpec extends AnyFunSuite {
       "same-instant stage must be rejected by the strict order")
   }
 
+  test("funnelStages: labels with quotes and backslashes stay aligned with their stages") {
+    // a SQL string literal would escape or end at these characters and
+    // shift the stage array; the labels must match the events verbatim
+    val stages = Seq("it's", "a\\b", "\\'", "c")
+    val ev = Seq(
+      (1L, 10L, stages(0), ts("2024-01-01 10:00:00")),
+      (2L, 10L, stages(1), ts("2024-01-01 11:00:00")),
+      (3L, 10L, stages(2), ts("2024-01-01 12:00:00")),
+      (4L, 10L, stages(3), ts("2024-01-01 13:00:00")),
+      // user 20: stage 3 before stage 2 → only stage 2 reached
+      (5L, 20L, stages(0), ts("2024-01-01 10:00:00")),
+      (6L, 20L, stages(2), ts("2024-01-01 10:30:00")),
+      (7L, 20L, stages(1), ts("2024-01-01 11:00:00")),
+      // lookalike labels the literal would have produced do not count
+      (8L, 30L, "its", ts("2024-01-01 10:00:00")),
+      (9L, 40L, stages(0), ts("2024-01-01 10:00:00")),
+      (10L, 40L, "ab", ts("2024-01-01 11:00:00")))
+      .toDF("event_id", "user_id", "event_type", "ts")
+    val out = Windows.funnelStages(ev, "user_id", "ts", "event_type", stages)
+      .collect()
+      .map(r => r.getLong(0) -> (1 to 4).map(i => Option(r.getTimestamp(i))))
+      .toMap
+    assert(out.keySet == Set(10L, 20L, 40L))
+    assert(out(10L) == Seq("10", "11", "12", "13").map(h => Some(ts(s"2024-01-01 $h:00:00"))))
+    assert(out(20L) == Seq(Some(ts("2024-01-01 10:00:00")), Some(ts("2024-01-01 11:00:00")),
+                           None, None))
+    assert(out(40L) == Seq(Some(ts("2024-01-01 10:00:00")), None, None, None))
+  }
+
   test("statusHistory: runs compress, intervals chain, ties break on event_id") {
     val ev = Seq(
       (1L, 7L, "a", ts("2024-01-01 10:00:00")),

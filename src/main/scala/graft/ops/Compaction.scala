@@ -16,25 +16,21 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * compacted id rewrites the partitions it touches, each as
   * `existing ∪ incoming` deduped by id.
   *
-  * Commit protocol: stage → journal → publish. The deduped batch is written
-  * to a hidden `_graft_staging/<txn>` dir, one file per `(format_id, day)`
-  * partition. The touched partitions are the staged partition directories;
-  * a check reads only the key column of the existing ones.
+  * Each batch is one [[Commit]] with root `<path>/_graft_staging`: the
+  * deduped batch is staged in the txn as one file per `(format_id, day)`
+  * partition, and the staged partition dirs are the touched set, whose
+  * existing files a check reads by key column only.
   *  - Append path (no staged key exists yet, one staged file per
-  *    partition): the journal lists the staged *files*, and each is
-  *    published by one atomic file rename into its visible partition
-  *    (file names are unique per write job). Existing files stay as they
-  *    are. A reader of one partition sees the batch's one file for it, or
-  *    not — all of the batch's rows there or none.
+  *    partition): the journal lists the staged *files*, each published by
+  *    one rename into its partition; existing files stay as they are, and
+  *    a reader of a partition sees all of the batch's rows there or none.
   *  - Merge path (a staged key exists, a partition staged more than one
   *    file, or a touched partition already holds [[Compaction.MaxAppendFiles]]
-  *    files): the touched partitions and the staged batch are merged into a
-  *    second txn, the first is dropped, and the journal lists partition
-  *    *directories*, each swapped by atomic directory renames — a reader
-  *    sees the whole old directory or the whole new one.
-  * The `<txn>.commit` journal (atomic rename) marks the commit point in
-  * both: a killed job can never tear a partition — pre-journal leftovers
-  * roll BACK, post-journal ones roll FORWARD, both via [[Compaction.recover]].
+  *    files): the touched partitions and the staged batch are merged into
+  *    the same staged partition dirs, the batch's own files are deleted,
+  *    and the journal lists partition *dirs*, each swapped whole.
+  * A killed job never tears a partition; the next batch, or
+  * [[Compaction.recover]], finishes or drops its leftovers.
   */
 object Compaction {
 
@@ -61,30 +57,19 @@ object Compaction {
               key: String, precedenceCol: String,
               tiebreak: Seq[org.apache.spark.sql.Column] = Seq.empty): Unit = {
     val batch = deduped(incoming, key, precedenceCol, tiebreak)
-    val fs = fsOf(spark, path)
-    // Atomic commit (the reference gets whole-file atomicity for free from
-    // SQLite / whole-day JSON rewrites — compaction.py:214-225,
-    // db.py:229-236; dynamic partition overwrite does NOT: a crash
-    // mid-overwrite tears the partition). Staging also removes the
-    // read-overwrite hazard outright — every read is of `path` or a staged
-    // txn, every write goes to `_graft_staging`. A first batch is no
-    // exception: with no existing partition it appends with no check job.
-    val txn = stage(spark, batch, path)
-    val txnDir = new HPath(stagingRoot(path), txn)
-    val files = stagedFiles(fs, txnDir)
-    val parts = files.map(partitionOf).distinct
-    if (files.isEmpty)
-      // an empty batch stages no partitions (just a _SUCCESS marker): the
-      // commit is a no-op — leave data untouched
-      fs.delete(txnDir, true)
-    else if (files.size == parts.size && // one file per partition: all or none
-             appendable(spark, path, txn, parts, key, batch.schema))
-      commitStaged(spark, path, txn, files)
-    else {
-      // the merged txn holds exactly the touched partitions
-      val merged = mergeStaged(spark, path, txn, parts, key, precedenceCol, tiebreak,
-                               batch.schema)
-      commitStaged(spark, path, merged, parts)
+    // The commit recovers the root first, or a journal that a crash left
+    // would roll forward later, over this batch.
+    Commit(spark, stagingRoot(path), path) { dir =>
+      write(batch, dir)
+      val files = stagedFiles(Commit.fsOf(spark, path), new HPath(dir))
+      val parts = files.map(partitionOf).distinct
+      if (files.size == parts.size && // one file per partition: all or none
+          appendable(spark, path, dir, parts, key, batch.schema)) files
+      else {
+        mergeStaged(spark, path, new HPath(dir).getName, parts, key, precedenceCol, tiebreak,
+                    batch.schema)
+        parts
+      }
     }
   }
 
@@ -124,7 +109,7 @@ object Compaction {
     */
   private def existingPartitions(spark: SparkSession, path: String,
       parts: Seq[String], schema: StructType): Option[DataFrame] = {
-    val fs = fsOf(spark, path)
+    val fs = Commit.fsOf(spark, path)
     val dirs = parts.map(rel => s"$path/$rel").filter(d => fs.exists(new HPath(d)))
     if (dirs.isEmpty) None
     else Some(spark.read.schema(schema).option("basePath", path).parquet(dirs: _*))
@@ -147,14 +132,13 @@ object Compaction {
     * an empty answer never scans partition by partition as `limit(1)`
     * does.
     */
-  private def appendable(spark: SparkSession, path: String, txn: String,
+  private def appendable(spark: SparkSession, path: String, txnDir: String,
                          parts: Seq[String], key: String, schema: StructType): Boolean = {
     val keySchema = StructType(Seq(schema(key), schema("format_id"), schema("day")))
     existingPartitions(spark, path, parts, keySchema).forall { old =>
       val filesPerPartition = old.inputFiles.groupBy(partitionOf).values.map(_.length)
       filesPerPartition.forall(_ < MaxAppendFiles) && {
-        val staged = spark.read.schema(keySchema)
-          .parquet(s"${stagingRoot(path)}/$txn").select(key)
+        val staged = spark.read.schema(keySchema).parquet(txnDir).select(key)
         !old.select(key).join(staged, Seq(key), "left_semi")
           .mapPartitions(rows => Iterator.single(rows.hasNext))(Encoders.scalaBoolean)
           .collect().contains(true)
@@ -164,71 +148,38 @@ object Compaction {
 
   /** The merge path's second stage: the touched existing partitions `parts`
     * ∪ the staged batch, deduped by key and laid out by partition, written
-    * to a new txn; the batch's txn is then dropped. Returns the new txn.
-    * Package-visible for the crash-injection spec.
+    * into the batch's txn, whose batch files are then deleted. Returns
+    * `txn`. Package-visible for the crash-injection spec.
     */
   private[graft] def mergeStaged(spark: SparkSession, path: String, txn: String,
       parts: Seq[String], key: String, precedenceCol: String,
       tiebreak: Seq[org.apache.spark.sql.Column], schema: StructType): String = {
-    val txnDir = s"${stagingRoot(path)}/$txn"
-    val staged = spark.read.schema(schema).parquet(txnDir)
+    val fs = Commit.fsOf(spark, path)
+    val txnDir = new HPath(stagingRoot(path), txn)
+    val batchFiles = stagedFiles(fs, txnDir)
+    // the read lists the batch's files now, before the merged ones land
+    val staged = spark.read.schema(schema).parquet(txnDir.toString)
     val all = existingPartitions(spark, path, parts, schema)
       .fold(staged)(_.unionByName(staged))
-    val merged = stage(spark, latest(all, key, precedenceCol, tiebreak), path)
-    fsOf(spark, path).delete(new HPath(txnDir), true)
-    merged
-  }
-
-  /** Staging root under the dataset path. The leading underscore keeps it
-    * invisible to Spark's file index (hidden-path convention), so readers
-    * of `path` never see in-flight data.
-    */
-  private[graft] def stagingRoot(path: String) = s"$path/_graft_staging"
-
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new HPath(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Phase 1 of the atomic commit: write a batch (or the merge path's
-    * merged partitions) to `_graft_staging/<txn>/format_id=…/day=…`.
-    * Nothing under the visible layout is touched; a crash here leaves an
-    * orphan staging dir that [[recover]] rolls back (deletes) — old data
-    * intact. Package-visible so the crash-injection spec can stop right
-    * here.
-    */
-  private[graft] def stage(spark: SparkSession, df: DataFrame,
-                           path: String): String = {
-    val txn = java.util.UUID.randomUUID.toString
-    df.write.mode("overwrite")
-      .partitionBy("format_id", "day")
-      .parquet(s"${stagingRoot(path)}/$txn")
+    write(latest(all, key, precedenceCol, tiebreak), txnDir.toString)
+    batchFiles.foreach(f => fs.delete(new HPath(txnDir, f), false))
     txn
   }
 
-  /** Phase 2: journal + publish. The journal (`<txn>.commit`, created by
-    * atomic rename of a `.tmp`) is the commit point — it lists every
-    * staged file (append path) or partition dir (merge path) relative to
-    * the txn. Before it exists, [[recover]] rolls the txn BACK; after, it
-    * rolls FORWARD. Each entry is then published by renames, all
-    * single-metadata-op atomic on HDFS/POSIX: a file moves into its
-    * partition; a partition dir swaps (visible dir → `<txn>.old/…`
-    * backup, staged dir → visible). (Object stores without atomic rename —
-    * S3 — need a manifest committer or a table format like Delta/Iceberg
-    * in front; this commit targets rename-atomic filesystems, same
-    * contract as Spark's own v1 committer.) Cleanup (journal, backups,
-    * empty staging) runs last and is idempotent.
+  private[graft] def stagingRoot(path: String) = s"$path/${Commit.Staging}"
+
+  /** Stage `df` under `dir` as `format_id=…/day=…` partitions. */
+  private def write(df: DataFrame, dir: String): Unit =
+    df.write.mode("append").partitionBy("format_id", "day").parquet(dir)
+
+  /** Stage a batch as `_graft_staging/<txn>/format_id=…/day=…` with no
+    * journal, as a crash before the commit point leaves it; [[recover]]
+    * rolls it back. Package-visible for the crash-injection spec.
     */
-  private def commitStaged(spark: SparkSession, path: String,
-                           txn: String, rels: Seq[String]): Unit = {
-    val fs = fsOf(spark, path)
-    val root = new HPath(stagingRoot(path))
-    val journal = new HPath(root, s"$txn.commit")
-    val tmp = new HPath(root, s"$txn.commit.tmp")
-    val out = fs.create(tmp, true)
-    out.write(rels.mkString("", "\n", "\n").getBytes("UTF-8"))
-    out.close()
-    if (!fs.rename(tmp, journal))
-      throw new java.io.IOException(s"cannot publish commit journal $journal")
-    swapAndClean(fs, path, txn, rels)
+  private[graft] def stage(spark: SparkSession, df: DataFrame, path: String): String = {
+    val txn = java.util.UUID.randomUUID.toString
+    write(df, s"${stagingRoot(path)}/$txn")
+    txn
   }
 
   /** Staged data files as `format_id=…/day=…/<file>` paths relative to the
@@ -244,82 +195,11 @@ object Compaction {
     } yield s"${f.getPath.getName}/${d.getPath.getName}/${file.getPath.getName}"
   }
 
-  /** The directory of a file path: for a staged file, its
-    * `format_id=…/day=…` partition.
-    */
+  /** A staged file's `format_id=…/day=…` partition dir. */
   private def partitionOf(file: String): String =
     file.substring(0, file.lastIndexOf('/'))
 
-  /** Roll the journaled publish forward, then clean up. Idempotent: every
-    * case distinguishes "not started / mid-swap / done" from the staged,
-    * visible and backup paths' existence, so re-running after any crash
-    * converges. A staged file's visible name never exists before its
-    * rename (file names are unique per write job), so a file needs no
-    * backup; a partition dir is backed up first.
-    */
-  private def swapAndClean(fs: FileSystem, path: String, txn: String,
-                           rels: Seq[String]): Unit = {
-    val root = new HPath(stagingRoot(path))
-    val oldRoot = new HPath(root, s"$txn.old")
-    rels.foreach { rel =>
-      val staged = new HPath(root, s"$txn/$rel")
-      val dest = new HPath(s"$path/$rel")
-      val backup = new HPath(oldRoot, rel)
-      if (fs.exists(staged)) {
-        if (fs.exists(dest)) {
-          fs.mkdirs(backup.getParent)
-          if (!fs.rename(dest, backup))
-            throw new java.io.IOException(s"cannot back up $dest")
-        }
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(staged, dest))
-          throw new java.io.IOException(s"cannot publish $dest")
-      } // staged absent → this rel already swapped by a previous attempt
-    }
-    fs.delete(new HPath(root, s"$txn.commit"), false)
-    fs.delete(oldRoot, true)
-    fs.delete(new HPath(root, txn), true)
-  }
-
-  /** Crash recovery for interrupted [[compact]] runs — run once before
-    * compacting into a dataset that may hold a dead job's leftovers (the
-    * reference's SQLite does this implicitly via its WAL). For each
-    * transaction under `_graft_staging`: a journal means the commit point
-    * was passed → roll FORWARD (finish the renames — the staged files or
-    * dirs still hold the data); no journal means the crash was pre-commit
-    * → roll BACK (delete the staging leftovers; the visible layout was
-    * never touched).
-    * Returns (rolledForward, rolledBack) txn counts.
-    */
-  def recover(spark: SparkSession, path: String): (Int, Int) = {
-    val fs = fsOf(spark, path)
-    val root = new HPath(stagingRoot(path))
-    if (!fs.exists(root)) return (0, 0)
-    val entries = fs.listStatus(root).toIndexedSeq
-    val journals = entries.filter(_.getPath.getName.endsWith(".commit"))
-    var fwd = 0
-    journals.foreach { j =>
-      val txn = j.getPath.getName.stripSuffix(".commit")
-      val rels = {
-        val in = fs.open(j.getPath)
-        val s = scala.io.Source.fromInputStream(in, "UTF-8")
-        try s.getLines().filter(_.nonEmpty).toList finally { s.close(); in.close() }
-      }
-      swapAndClean(fs, path, txn, rels)
-      fwd += 1
-    }
-    var back = 0
-    fs.listStatus(root).toIndexedSeq.foreach { e =>
-      val n = e.getPath.getName
-      if (e.isDirectory && !n.endsWith(".old")) {
-        // a txn dir with no journal: pre-commit crash → roll back
-        if (!fs.exists(new HPath(root, s"$n.commit"))) {
-          fs.delete(e.getPath, true); back += 1
-        }
-      } else if (n.endsWith(".commit.tmp")) {
-        fs.delete(e.getPath, false) // journal never published → pre-commit
-      }
-    }
-    (fwd, back)
-  }
+  /** [[Commit.recover]] for the dataset at `path`. */
+  def recover(spark: SparkSession, path: String): (Int, Int) =
+    Commit.recover(spark, stagingRoot(path), path)
 }

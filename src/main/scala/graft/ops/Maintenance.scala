@@ -1,7 +1,7 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** M3 ops surface — the reference's state-maintenance scripts re-expressed
@@ -11,21 +11,19 @@ import org.apache.spark.sql.functions._
   *    the legacy `{format}_state.json` of `state.py:31-36`);
   *  - timestamped backup before any repair (`reset_format_state.py:57-61`);
   *  - VACUUM/repair as copy-compact-swap (`reset_format_state.py:63-137`:
-  *    copy live rows to a fresh store, optimize, atomically replace);
+  *    copy live rows to a fresh store, optimize, atomically replace), with
+  *    every replace a [[Commit]];
   *  - integrity audit (duplicate keys / null ids — the `cleanup` script's
   *    pre-repair report).
   *
   * All file manipulation goes through the Hadoop FileSystem API resolved
   * from the path, so the same code runs on local disk, HDFS, or an object
-  * store. The rewrite itself is a distributed scan→write (never a
+  * store (atomically only where rename is; see [[Commit]]). The rewrite itself is a distributed scan→write (never a
   * driver-side row loop — the reference pages rows 1000 at a time through
   * the driver; here compaction is one Spark job of any size). Timestamps
   * are injected, never wall-clock, so every operation is reproducible.
   */
 object Maintenance {
-
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Canonical reset per-format discovery state (reference
     * `reset_format_state.py:34-41`): the next run refetches from the start.
@@ -39,11 +37,8 @@ object Maintenance {
   def resetFormatState(spark: SparkSession, dir: String, formatId: String,
                        dryRun: Boolean = false): String = {
     val content = defaultFormatState(formatId)
-    if (!dryRun) {
-      val p = new Path(dir, s"${formatId}_state.json")
-      val out = fs(spark, dir).create(p, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
+    if (!dryRun) Commit.writeAtomically(Commit.fsOf(spark, dir),
+      new Path(dir, s"${formatId}_state.json"), content.getBytes("UTF-8"))
     content
   }
 
@@ -53,7 +48,7 @@ object Maintenance {
     */
   def readFormatState(spark: SparkSession, dir: String, formatId: String): DataFrame = {
     val p = new Path(dir, s"${formatId}_state.json")
-    if (!fs(spark, dir).exists(p)) {
+    if (!Commit.fsOf(spark, dir).exists(p)) {
       import spark.implicits._
       return Seq((formatId, 0L, Option.empty[Long], Option.empty[String]))
         .toDF("format_id", "last_seen_ts", "oldest_ts", "last_processed_id")
@@ -88,45 +83,47 @@ object Maintenance {
     def jStr(i: Int): String = if (row.isNullAt(i)) "null" else "\"" + row.getString(i) + "\""
     val content =
       s"""{"format_id":"$fmt","last_seen_ts":${jLong(1)},"oldest_ts":${jLong(2)},"last_processed_id":${jStr(3)}}"""
-    val out = fs(spark, dir).create(new Path(dir, s"${fmt}_state.json"), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+    Commit.writeAtomically(Commit.fsOf(spark, dir), new Path(dir, s"${fmt}_state.json"),
+      content.getBytes("UTF-8"))
   }
 
   /** Timestamped backup of a state directory (`<dir>.backup_<stamp>`),
-    * taken before any destructive maintenance. Returns the backup path.
+    * taken before any destructive maintenance and published by one
+    * [[Commit]], so a half-finished copy is never listed. Returns its path.
     */
-  def backup(spark: SparkSession, stateDir: String, stamp: String): String = {
-    val f = fs(spark, stateDir)
-    val src = new Path(stateDir)
-    val dst = new Path(s"$stateDir.backup_$stamp")
-    require(f.exists(src), s"state dir not found: $stateDir")
-    require(!f.exists(dst), s"backup already exists: $dst")
-    FileUtil.copy(f, src, f, dst, false, spark.sparkContext.hadoopConfiguration)
-    dst.toString
-  }
+  def backup(spark: SparkSession, stateDir: String, stamp: String): String =
+    withBackup(spark, stateDir, stamp)(_ => Seq.empty)
 
   /** VACUUM/repair: back up, rewrite the live rows compacted into
-    * `targetFiles` parquet files, then swap the rewritten store into place
-    * (write to `<dir>.new`, retire the old dir, rename). Row content is
-    * preserved exactly; dead space / tiny-file sprawl is dropped — the
-    * parquet analogue of the reference's copy-to-new-db + VACUUM + rename.
+    * `targetFiles` parquet files, and publish the backup and the rewritten
+    * store by one [[Commit]] — the parquet analogue of the reference's
+    * copy-to-new-db + VACUUM + rename. Row content is preserved exactly.
     * Returns the backup path.
     */
   def vacuum(spark: SparkSession, stateDir: String, stamp: String,
-             targetFiles: Int = 1): String = {
-    val backupPath = backup(spark, stateDir, stamp)
-    val f = fs(spark, stateDir)
-    val tmp = new Path(s"$stateDir.new")
-    if (f.exists(tmp)) f.delete(tmp, true)
-    spark.read.parquet(stateDir)
-      .coalesce(math.max(1, targetFiles))
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val old = new Path(s"$stateDir.old_$stamp")
-    val live = new Path(stateDir)
-    require(f.rename(live, old), s"could not retire $live")
-    require(f.rename(tmp, live), s"could not promote $tmp")
-    f.delete(old, true)
-    backupPath
+             targetFiles: Int = 1): String =
+    withBackup(spark, stateDir, stamp) { txn =>
+      val name = new Path(stateDir).getName
+      spark.read.parquet(stateDir).coalesce(math.max(1, targetFiles))
+        .write.parquet(s"$txn/$name")
+      Seq(name)
+    }
+
+  /** One commit beside `stateDir`: a copy staged as its `.backup_<stamp>`
+    * sibling, plus the rels `more` stages. Returns the backup path.
+    */
+  private def withBackup(spark: SparkSession, stateDir: String, stamp: String)(
+      more: String => Seq[String]): String = {
+    val f = Commit.fsOf(spark, stateDir)
+    val src = new Path(stateDir)
+    val dst = new Path(s"$stateDir.backup_$stamp")
+    Commit.beside(spark, stateDir) { txn => // checked after the commit's recover
+      require(f.exists(src), s"state dir not found: $stateDir")
+      require(!f.exists(dst), s"backup already exists: $dst")
+      FileUtil.copy(f, src, f, new Path(txn, dst.getName), false, f.getConf)
+      dst.getName +: more(txn)
+    }
+    dst.toString
   }
 
   /** Enumerate a state dir's backups (`<dir>.backup_<stamp>` siblings),
@@ -135,7 +132,7 @@ object Maintenance {
     * lexicographic order IS chronological order.
     */
   def listBackups(spark: SparkSession, stateDir: String): Seq[String] = {
-    val f = fs(spark, stateDir)
+    val f = Commit.fsOf(spark, stateDir)
     val live = new Path(stateDir)
     val parent = live.getParent
     if (parent == null || !f.exists(parent)) return Seq.empty
@@ -156,7 +153,7 @@ object Maintenance {
     require(keep >= 0, s"keep must be >= 0, got $keep")
     val doomed = listBackups(spark, stateDir).drop(keep).reverse
     if (!dryRun) {
-      val f = fs(spark, stateDir)
+      val f = Commit.fsOf(spark, stateDir)
       doomed.foreach(p => f.delete(new Path(p), true))
     }
     doomed

@@ -708,14 +708,21 @@ object Similarity {
     val cents = trainQuantizers(corpus, None, iters, dim,
                                 nCentroids = Some(nCentroids)).centroids
     import spark.implicits._
-    cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
-      .toDF("cluster_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((nCentroids, iters, dim,
-         ivfIndexFingerprint(nCentroids, iters, dim, cents)))
-      .toDF("n_centroids", "iters", "dim", "fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    saveIndex(spark, path, "centroids",
+      cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }.toDF("cluster_id", "centroid"),
+      Seq((nCentroids, iters, dim, ivfIndexFingerprint(nCentroids, iters, dim, cents)))
+        .toDF("n_centroids", "iters", "dim", "fingerprint"))
   }
+
+  /** Publish an index's payload dir and `meta` by one [[Commit]]: a
+    * re-save replaces the old index only once the new one is whole. */
+  private def saveIndex(spark: SparkSession, path: String, payloadRel: String,
+                        payload: DataFrame, meta: DataFrame): Unit =
+    Commit(spark, s"$path/${Commit.Staging}", path) { txn =>
+      payload.coalesce(1).write.parquet(s"$txn/$payloadRel")
+      meta.coalesce(1).write.parquet(s"$txn/meta")
+      Seq(payloadRel, "meta")
+    }
 
   /** Load IVF centroids persisted by [[saveIvfIndex]], validating the
     * requested config against the stored one and the centroid bits
@@ -773,12 +780,9 @@ object Similarity {
                    corpus: DataFrame): Unit = {
     val ladder = sq8Ladder(corpus)
     import spark.implicits._
-    ladder.zipWithIndex.map { case ((mn, mx), d) => (d, mn, mx) }.toSeq
-      .toDF("d", "mn", "mx")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/ladder")
-    Seq((ladder.length, sq8IndexFingerprint(ladder)))
-      .toDF("dim", "fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    saveIndex(spark, path, "ladder",
+      ladder.zipWithIndex.map { case ((mn, mx), d) => (d, mn, mx) }.toSeq.toDF("d", "mn", "mx"),
+      Seq((ladder.length, sq8IndexFingerprint(ladder))).toDF("dim", "fingerprint"))
   }
 
   /** Load an SQ8 ladder persisted by [[saveSq8Index]] (fingerprint-
@@ -815,14 +819,12 @@ object Similarity {
                   dim: Int = 64): Unit = {
     val books = pqCodebooks(corpus, m, codesPerBook, iters, dim)
     import spark.implicits._
-    books.zipWithIndex.flatMap { case (book, s) =>
-      book.map { case (code, v) => (s, code, v.toSeq) } }.toSeq
-      .toDF("subspace", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/books")
-    Seq((m, codesPerBook, iters, dim,
-         pqIndexFingerprint(m, codesPerBook, iters, dim, books)))
-      .toDF("m", "codes_per_book", "iters", "dim", "fingerprint")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    saveIndex(spark, path, "books",
+      books.zipWithIndex.flatMap { case (book, s) =>
+        book.map { case (code, v) => (s, code, v.toSeq) } }.toSeq
+        .toDF("subspace", "code", "centroid"),
+      Seq((m, codesPerBook, iters, dim, pqIndexFingerprint(m, codesPerBook, iters, dim, books)))
+        .toDF("m", "codes_per_book", "iters", "dim", "fingerprint"))
   }
 
   /** Load PQ codebooks persisted by [[savePqIndex]] (config- and

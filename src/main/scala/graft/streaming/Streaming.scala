@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.ops.Lifecycle
+import graft.ops.{Commit, Lifecycle}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -129,6 +130,9 @@ object Streaming {
     * dead-letter stream (`isFailure`) into a side directory for the retry
     * pass. Micro-batch id is recorded so replays are observable.
     *
+    * Every write is a [[Commit]]: a crash leaves the old state or the new
+    * one, and the next micro-batch finishes a swap it left journaled.
+    *
     * `tiebreak` must totally order rows that share a key *within* one
     * micro-batch (e.g. event time desc + a unique id) — batch id alone is
     * constant there, and an arbitrary survivor would make replays
@@ -146,34 +150,29 @@ object Streaming {
         try {
           val (ok, failed) = (stamped.filter(!col("is_failure")),
                               stamped.filter(col("is_failure")))
-          // Dead letters land in a per-batch partition written with
-          // overwrite: a replayed micro-batch rewrites the same partition
+          // Dead letters land in a per-batch partition that replaces any
+          // earlier one: a replayed micro-batch rewrites the same partition
           // instead of appending duplicates — idempotent like the merge.
-          failed.drop("batch_id").write.mode("overwrite")
-            .parquet(s"$deadLetterPath/batch_id=$batchId")
-          // Only "state path does not exist yet" maps to None, checked on
-          // the path. An existing path must read: taking one emptied by a
-          // crashed overwrite (or any read failure) as empty state would
-          // overwrite the table with this batch alone.
-          val state = new org.apache.hadoop.fs.Path(statePath)
-          val existing =
-            if (!state.getFileSystem(spark.sessionState.newHadoopConf()).exists(state)) None
-            else Some(try spark.read.parquet(statePath) catch {
-              case e: AnalysisException => throw new IllegalStateException(
-                s"state table $statePath exists but holds no readable data", e)
-            })
-          val merged = existing match {
-            case Some(ex) =>
-              Lifecycle.upsert(ex, ok, key,
-                Seq(col("batch_id").desc) ++ tiebreak ++ key.map(col(_).asc))
-            case None => ok
+          val deadRel = s"batch_id=$batchId"
+          Commit(spark, s"$deadLetterPath/${Commit.Staging}", deadLetterPath) { txn =>
+            failed.drop("batch_id").write.parquet(s"$txn/$deadRel")
+            Seq(deadRel)
           }
-          // Materialize before overwriting the path we just read (plan-safe;
-          // a production deployment stages to a temp prefix + atomic swap).
-          val rows = merged.cache()
-          rows.count()
-          rows.write.mode("overwrite").parquet(statePath)
-          rows.unpersist()
+          // The commit first recovers the state's root, so the read below
+          // sees a swap that a crash left journaled. Only a state path that
+          // does not exist yet is empty state: taking an existing one with
+          // no data as empty would replace the table with this batch alone.
+          val name = new Path(statePath).getName
+          Commit.beside(spark, statePath) { txn =>
+            val state =
+              if (!Commit.fsOf(spark, statePath).exists(new Path(statePath))) ok
+              else Lifecycle.upsert(try spark.read.parquet(statePath) catch {
+                case e: AnalysisException => throw new IllegalStateException(
+                  s"state table $statePath exists but holds no readable data", e)
+              }, ok, key, Seq(col("batch_id").desc) ++ tiebreak ++ key.map(col(_).asc))
+            state.write.parquet(s"$txn/$name")
+            Seq(name)
+          }
         } finally stamped.unpersist()
         ()
       }

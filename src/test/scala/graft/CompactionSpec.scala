@@ -207,6 +207,25 @@ class CompactionSpec extends AnyFunSuite {
     assert(stagingEmpty(path))
   }
 
+  test("a journal left by a crash is finished before the next batch, never after it") {
+    val path = tmp()
+    Compaction.compact(spark, batch(Seq(("r1", "f", day1, "old"))), path, "replay_id", "uploadtime")
+    // a merge of "mid" journaled, then "die" before any swap
+    val staged = Compaction.deduped(batch(Seq(("r1", "f", day1 + 60, "mid"))),
+      "replay_id", "uploadtime")
+    val rels = Seq("format_id=f/day=2024-01-01")
+    val txn = Compaction.mergeStaged(spark, path, Compaction.stage(spark, staged, path),
+      rels, "replay_id", "uploadtime", Seq.empty, staged.schema)
+    Files.writeString(java.nio.file.Path.of(Compaction.stagingRoot(path), s"$txn.commit"),
+      rels.mkString("", "\n", "\n"))
+    Compaction.compact(spark, batch(Seq(("r1", "f", day1 + 120, "new"))),
+      path, "replay_id", "uploadtime")
+    assert(stagingEmpty(path))
+    assert(Compaction.recover(spark, path) == ((0, 0)))
+    assert(spark.read.parquet(path).select("payload").as[String].collect().toSeq == Seq("new"),
+      "the later batch wins over the crashed one")
+  }
+
   test("append path: new-key batches never leave a partition above MaxAppendFiles files") {
     val path = tmp()
     val n = Compaction.MaxAppendFiles + 1

@@ -125,5 +125,13 @@ class DriverTailSpec extends AnyFunSuite {
     assert(declaring("Offset").size == 1, declaring("Offset"))
     assert(sources.collect { case (p, t) if t.contains("getMessage.contains") => p }.isEmpty,
       "match on exception types or check state, not on getMessage text")
+    // one commit for every durable replace: only Commit renames, and only
+    // Commit creates a file over an existing one
+    assert(sources.exists(_._1.endsWith("graft/ops/Commit.scala")))
+    assert(offenders("Commit.scala", ".rename(").isEmpty, "renames belong to Commit")
+    val overwriteCreate = """\.create\(.*,\s*true\)""".r
+    assert(sources.collect { case (p, t) if !p.endsWith("graft/ops/Commit.scala") &&
+                             overwriteCreate.findFirstIn(t).nonEmpty => p }.isEmpty,
+      "an overwriting FileSystem.create belongs to Commit.writeAtomically")
   }
 }

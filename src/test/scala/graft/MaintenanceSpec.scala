@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Maintenance
+import graft.ops.{Commit, Maintenance}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -96,6 +96,102 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(spark.read.parquet(bk).count() == 3, "backup must hold the pre-vacuum rows")
   }
 
+  /** Where backups and vacuums of `dir` stage. */
+  private def stagingBeside(dir: String) = java.nio.file.Path.of(Commit.besideRoot(dir))
+
+  private def recover(dir: String) =
+    Commit.recover(spark, Commit.besideRoot(dir), new java.io.File(dir).getParent)
+
+  private def sorted(dir: String) =
+    spark.read.parquet(dir).orderBy("replay_id").collect().toSeq
+
+  private def siblings(dir: String): Set[String] =
+    new java.io.File(dir).getParentFile.list().toSet
+
+  test("vacuum: a crash after retiring the live dir is restored by recover") {
+    val dir = tmpDir("graft_vac_crash") + "/state"
+    sampleState.repartition(3).write.parquet(dir)
+    val before = sorted(dir)
+    // what vacuum stages and journals: the backup copy and the compacted
+    // store; then "die" after moving the live dir to the txn's backup
+    val root = stagingBeside(dir)
+    spark.read.parquet(dir).write.parquet(root.resolve("t1/state.backup_20240801_000002").toString)
+    spark.read.parquet(dir).coalesce(1).write.parquet(root.resolve("t1/state").toString)
+    Files.writeString(root.resolve("t1.commit"), "state.backup_20240801_000002\nstate\n")
+    Files.createDirectories(root.resolve("t1.old"))
+    Files.move(java.nio.file.Path.of(dir), root.resolve("t1.old/state"))
+    assert(!new java.io.File(dir).exists())
+    assert(recover(dir) == ((1, 0)))
+    assert(sorted(dir) == before, "the compacted store is live")
+    assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    assert(Maintenance.listBackups(spark, dir).map(_.takeRight(15)) == Seq("20240801_000002"))
+    assert(Files.list(root).count() == 0, "staging cleaned")
+    assert(recover(dir) == ((0, 0)))
+  }
+
+  test("vacuum: a rewrite that fails leaves the live dir, no backup and no " +
+       ".new or .old_* sibling") {
+    val dir = tmpDir("graft_vac_fail") + "/state"
+    // two files that disagree on a column's type: the scan of the rewrite
+    // fails on whichever file the inferred schema did not come from
+    Seq(("r-1", "gen9ou", true)).toDF("replay_id", "format_id", "is_downloaded")
+      .write.parquet(dir)
+    Seq(("r-2", "gen9ou", "yes")).toDF("replay_id", "format_id", "is_downloaded")
+      .write.mode("append").parquet(dir)
+    val files = new java.io.File(dir).list().toSet
+    intercept[Exception](Maintenance.vacuum(spark, dir, "20240801_000003"))
+    assert(new java.io.File(dir).list().toSet == files, "the live dir is untouched")
+    assert(siblings(dir) == Set("state", "_graft_staging"), siblings(dir))
+    assert(Maintenance.listBackups(spark, dir).isEmpty, "no backup of a failed vacuum")
+    assert(Files.list(stagingBeside(dir)).count() == 0, "the failed txn is deleted")
+    assert(recover(dir) == ((0, 0)))
+    // a vacuum that succeeds leaves the live dir and its backup
+    val ok = tmpDir("graft_vac_ok") + "/state"
+    sampleState.repartition(3).write.parquet(ok)
+    Maintenance.vacuum(spark, ok, "20240801_000004")
+    assert(siblings(ok) == Set("state", "state.backup_20240801_000004", "_graft_staging"),
+      siblings(ok))
+  }
+
+  test("backup: a copy that fails halfway is never listed, and keep-N keeps the " +
+       "good backup") {
+    val dir = tmpDir("graft_bk_partial") + "/state"
+    sampleState.repartition(3).write.parquet(dir)
+    Maintenance.backup(spark, dir, "20240801_000000")
+    // flip one byte of a data file: its checksum no longer matches, so the
+    // next copy fails when it reaches that file
+    val part = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(part.toPath)
+    bytes(bytes.length / 2) = (bytes(bytes.length / 2) ^ 0xff).toByte
+    Files.write(part.toPath, bytes)
+    intercept[java.io.IOException](Maintenance.backup(spark, dir, "20240802_000000"))
+    assert(Maintenance.listBackups(spark, dir).map(_.takeRight(15)) == Seq("20240801_000000"))
+    assert(Maintenance.pruneBackups(spark, dir, keep = 1).isEmpty)
+    assert(spark.read.parquet(Maintenance.listBackups(spark, dir).head).count() == 3)
+    assert(Files.list(stagingBeside(dir)).count() == 0, "the partial copy is deleted")
+  }
+
+  test("state files save over an existing one where rename refuses an existing target") {
+    val local = tmpDir("graft_refusing")
+    val dir = s"refusing://$local"
+    val keys = Seq("fs.refusing.impl", "fs.AbstractFileSystem.refusing.impl")
+    keys.zip(Seq(classOf[RefusingRenameFs], classOf[RefusingRenameAfs]))
+      .foreach { case (k, c) => spark.conf.set(k, c.getName) }
+    try {
+      val refused = RefusingRenameFs.refused.get
+      Maintenance.resetFormatState(spark, dir, "gen9ou")
+      val status = Seq(("r-b", "gen9ou", 200L)).toDF("replay_id", "format_id", "uploadtime")
+      Maintenance.saveFormatState(spark, dir, Maintenance.formatStateFromStatus(status, "gen9ou"))
+      assert(RefusingRenameFs.refused.get > refused, "the plain rename was refused")
+      val file = java.nio.file.Path.of(local, "gen9ou_state.json")
+      assert(Files.readString(file) == """{"format_id":"gen9ou","last_seen_ts":200,""" +
+        """"oldest_ts":200,"last_processed_id":"r-b"}""")
+      Maintenance.resetFormatState(spark, dir, "gen9ou")
+      assert(Files.readString(file) == Maintenance.defaultFormatState("gen9ou"))
+      assert(new java.io.File(local).list().toSeq == Seq("gen9ou_state.json"), "no .tmp left")
+    } finally keys.foreach(spark.conf.unset)
+  }
+
   test("integrityReport counts duplicates and null keys") {
     val dirty = sampleState
       .unionByName(Seq(("r-1", "gen9ou", true)).toDF("replay_id", "format_id", "is_downloaded"))
@@ -109,3 +205,22 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_rows_in_dup_keys") == 2)
   }
 }
+
+/** A local filesystem under the `refusing:` scheme whose rename, like
+  * HDFS's and S3A's, refuses an existing target.
+  */
+class RefusingRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refusing:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (exists(dst)) { RefusingRenameFs.refused.incrementAndGet(); false }
+    else super.rename(src, dst)
+}
+
+object RefusingRenameFs {
+  val refused = new java.util.concurrent.atomic.AtomicInteger
+}
+
+/** [[RefusingRenameFs]] as `FileContext` sees it. */
+class RefusingRenameAfs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(
+      uri, new RefusingRenameFs, conf, "refusing", false)

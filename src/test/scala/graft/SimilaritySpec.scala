@@ -623,6 +623,26 @@ class SimilaritySpec extends AnyFunSuite {
     assert(e9.getMessage.contains("m=0"), e9.getMessage)
   }
 
+  test("index lifecycle: a crashed re-save leaves the old index loadable") {
+    val corpus = emb.filter(col("vec_id") >= 8)
+    val path = java.nio.file.Files.createTempDirectory("graft_idx_crash_").toString + "/ivf"
+    Similarity.saveIvfIndex(spark, path, corpus, 16, 1)
+    val old = Similarity.loadIvfIndex(spark, path, 16, 1)
+    // a re-save that staged its centroids and died before its meta and
+    // before the journal: nothing under the index's own dirs changed
+    val staged = java.nio.file.Path.of(path, "_graft_staging", "t1", "centroids")
+    spark.read.parquet(s"$path/centroids").limit(3).write.parquet(staged.toString)
+    def same(a: Array[(Long, Array[Float])], b: Array[(Long, Array[Float])]) =
+      a.map { case (c, v) => (c, v.toSeq) }.toSeq == b.map { case (c, v) => (c, v.toSeq) }.toSeq
+    assert(same(Similarity.loadIvfIndex(spark, path, 16, 1), old))
+    // the next save drops the leftover and replaces both dirs at once
+    Similarity.saveIvfIndex(spark, path, corpus, 8, 1)
+    assert(Similarity.loadIvfIndex(spark, path, 8, 1).length == 8)
+    val e = intercept[IllegalArgumentException](Similarity.loadIvfIndex(spark, path, 16, 1))
+    assert(e.getMessage.contains("trained with"), e.getMessage)
+    assert(new java.io.File(s"$path/_graft_staging").list().isEmpty, "staging cleaned")
+  }
+
   test("ivfAssignWithIndex: assign-only over a loaded index equals the " +
        "full-rebuild assignment; dim mismatch is loud") {
     import spark.implicits._

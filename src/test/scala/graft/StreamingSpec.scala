@@ -153,6 +153,59 @@ class StreamingSpec extends AnyFunSuite {
     assert(listing() == before, "the batch did not overwrite the state dir")
   }
 
+  /** Where a whole-dir replace of `dir` stages. */
+  private def stagingBeside(dir: String) = java.nio.file.Path.of(graft.ops.Commit.besideRoot(dir))
+
+  /** Runs one micro-batch of k1 into a fresh state table, lets `crash`
+    * leave what a crashed replace of the state leaves, then runs one more
+    * micro-batch of k3. Returns the state's ids and whether the staging
+    * root was left clean.
+    */
+  private def afterCrashedReplace(name: String)(crash: String => Unit): (Set[String], Boolean) = {
+    val src = tmp(s"$name-src"); val state = tmp(s"$name-state") + "/state"
+    val dead = tmp(s"$name-dead"); val ckpt = tmp(s"$name-ckpt")
+    rows(Seq(("k1", "2024-01-01 01:00:00", "click", false))).write.mode("append").parquet(src)
+    val q = Streaming.runToStateTable(spark, spark.readStream.schema(schema).parquet(src),
+      state, dead, Seq("id"), ckpt, tiebreak = Seq(col("ts").desc))
+    try {
+      q.processAllAvailable()
+      crash(state)
+      rows(Seq(("k3", "2024-01-01 03:00:00", "click", false))).write.mode("append").parquet(src)
+      q.processAllAvailable()
+    } finally q.stop()
+    val root = stagingBeside(state)
+    (spark.read.parquet(state).select("id").as[String].collect().toSet,
+     !Files.exists(root) || Files.list(root).count() == 0)
+  }
+
+  private def stateRows(state: String, ids: String*) =
+    spark.read.parquet(state).unionByName(
+      rows(ids.map(id => (id, "2024-01-01 02:00:00", "click", false))).withColumn("batch_id", lit(0L)))
+
+  test("foreachBatch merge: a state replace journaled mid-swap rolls forward " +
+       "at the next micro-batch") {
+    val (ids, clean) = afterCrashedReplace("stream-fwd") { state =>
+      // a batch merged k2 into the state, staged it and wrote the journal,
+      // moved the visible dir to the txn's backup, and died before renaming
+      // the staged dir into place
+      val root = stagingBeside(state)
+      stateRows(state, "k2").write.parquet(root.resolve("t1/state").toString)
+      Files.writeString(root.resolve("t1.commit"), "state\n")
+      Files.createDirectories(root.resolve("t1.old"))
+      Files.move(java.nio.file.Path.of(state), root.resolve("t1.old/state"))
+    }
+    assert(ids == Set("k1", "k2", "k3"), "the journaled state plus the new batch")
+    assert(clean, "staging left clean")
+  }
+
+  test("foreachBatch merge: a staged state replace with no journal rolls back") {
+    val (ids, clean) = afterCrashedReplace("stream-back") { state =>
+      stateRows(state, "k2").write.parquet(stagingBeside(state).resolve("t1/state").toString)
+    }
+    assert(ids == Set("k1", "k3"), "the state as it was plus the new batch")
+    assert(clean, "staging left clean")
+  }
+
   test("priorWindowPairs: cross-batch interval matches equal the batch range join") {
     import graft.ops.AsOf
     val src = tmp("stream-ctx-src"); val ckpt = tmp("stream-ctx-ckpt")
